@@ -93,8 +93,8 @@ def run(ctx) -> dict:
         layer["plans.render_s"] = time.perf_counter() - t0
     expected = expected_counts(buckets)
 
-    # One untimed pass, collected, warms the plan's code up and is the
-    # correctness check: every window's count must match the plan.
+    # The correctness check, untimed: one pass, collected; every window's
+    # count must match the plan.
     attempted, failed = 1, 0
     try:
         got = pipeline(spark, plan).select(
@@ -124,15 +124,15 @@ def run(ctx) -> dict:
             failed += 1
             return None
 
+    timed_pass("full")  # warm-up: the first noop write compiles its code
     spark.sparkContext.setJobGroup("perfbench-ingest", "ingest")
     walls: list[float] = []
     start = time.perf_counter()
-    while len(walls) < MIN_PASSES or time.perf_counter() - start < ctx.seconds:
+    while time.perf_counter() - start < ctx.seconds or (
+            len(walls) < MIN_PASSES and not failed):
         wall = timed_pass("full")
         if wall is not None:
             walls.append(wall)
-        elif attempted > 2 * MIN_PASSES and not walls:
-            break
 
     if tracer.enabled and walls:
         layer.update(scheduler.as_layer_metrics(
@@ -141,7 +141,8 @@ def run(ctx) -> dict:
         med = {}
         for stage in ("gen", "kernel"):
             med[stage] = statistics.median(
-                w for w in (timed_pass(stage) for _ in range(2)) if w is not None)
+                [w for w in (timed_pass(stage) for _ in range(2)) if w is not None]
+                or [0.0])
         layer["sources.generate_s"] = med["gen"]
         layer["functions.kernel_s"] = med["kernel"] - med["gen"]
         layer["functions.stats_s"] = statistics.median(walls) - med["kernel"]

@@ -4,7 +4,7 @@ A separate generator process (``generator.py``) paces a fixed-rate,
 value-7 plan over one TCP connection on its own wall-clock schedule,
 whether or not the engine keeps up. The engine reads it with
 ``socket_stream``, runs ``hanoi_burn_us`` and keeps 5 s windowed
-``stats_aggs`` over the kernel column, in update mode on a 1 s
+``stats_aggs`` over the kernel column, in update mode on a 2 s
 processing-time trigger. This is the only workload where trigger
 overhead, the state store and the source's read lag sit on the path to
 every result.
@@ -38,9 +38,9 @@ import numpy as np
 
 from metrics import percentile
 
-#: offered rate, rows/s: about half of the highest rate this query held
-#: without a growing backlog on a 4-CPU host (see README.md)
-RATE = {"full": 8_000, "small": 1_000}
+#: offered rate, rows/s: about half of the sustainable rate measured on a
+#: 4-CPU host (see README.md)
+RATE = {"full": 6_000, "small": 1_000}
 WARM_S = {"full": 6, "small": 2}
 TRIGGER = "2 seconds"
 TRIGGER_S = 2.0
@@ -83,7 +83,7 @@ def triggers(progress: list[dict]) -> list[dict]:
 def window_totals_ok(rows, sent: int) -> bool:
     """Final per-window counts (the last update of each window) must sum
     to the rows the generator sent."""
-    return sum(c for c in rows) == sent
+    return sum(rows) == sent
 
 
 class _Generator:
@@ -189,9 +189,9 @@ def run(ctx) -> dict:
     late = done["late_ms"]
 
     problems = []
-    if sum(t["hi"] - t["lo"] for t in trig) != sent or not window_totals_ok(finals, sent):
-        problems.append(f"rows lost: sent {sent}, read "
-                        f"{sum(t['hi'] - t['lo'] for t in trig)}, counted {sum(finals)}")
+    read = sum(t["hi"] - t["lo"] for t in trig)
+    if read != sent or not window_totals_ok(finals, sent):
+        problems.append(f"rows lost: sent {sent}, read {read}, counted {sum(finals)}")
     if percentile(late, 99) > MAX_LATE_P99_MS or max(late) > MAX_LATE_MS:
         problems.append(f"generator fell behind: late p99 {percentile(late, 99):.1f} ms, "
                         f"max {max(late):.1f} ms")
@@ -204,8 +204,8 @@ def run(ctx) -> dict:
     if busy_s and processed / busy_s < rate:
         problems.append(f"engine slower than the offered rate: {processed / busy_s:.0f} "
                         f"rows/s of trigger time against {rate} rows/s offered")
-    if len(lat_ms) == 0:
-        problems.append("no measured rows were emitted")
+    if len(measured) < 2:
+        problems.append(f"{len(measured)} measured triggers; at least 2 are needed")
     for p in problems:
         print(f"perfbench live: {p}", flush=True)
 
@@ -218,7 +218,7 @@ def run(ctx) -> dict:
                     "triggers": len(measured)},
         "layer": {},
     }
-    if tracer.enabled:
+    if tracer.enabled and measured:
         out["layer"] = _layer_metrics(spark, tracer, measured, lag, late, render_s,
                                       listener, run_id)
     return out

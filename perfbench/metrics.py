@@ -79,7 +79,6 @@ ALIASES: dict[str, dict[str, str]] = {
     "live": {"latency_p50_ms": "live_latency_p50_ms",
              "latency_p99_ms": "live_latency_p99_ms"},
     "ingest": {"throughput_per_s": "ingest_rows_per_s"},
-    "batch": {},
 }
 
 

@@ -5,10 +5,12 @@ Usage, from the root of the repository::
     python3 perfbench/run.py --workload live|ingest|batch --seed N \\
         --seconds S --trace 0|1 [--size full|small]
 
-Set-up starts a warmed local session (``session.get_session`` with at
-most four worker threads, the engine shipped to the Python workers and
-one pandas-UDF job run), then stops and restarts it twice on the same
-JVM; ``setup_s`` is the median of the three set-ups. The workload then runs (see ``live.py``,
+Set-up starts a local session (``session.get_session`` with at most four
+worker threads, ``ensure_session_confs`` shipping the engine, one job
+run), then stops and restarts it four times on the same JVM; ``setup_s``
+is the median of the five set-ups. A pandas-UDF job then starts the Python
+workers, which import the engine; ``session.cold_setup_s`` is process
+start to that point, less the restarts. The workload then runs (see ``live.py``,
 ``ingest.py``, ``batch.py`` and README.md), checks its outputs and
 reports. With ``--trace 0`` the last stdout line carries the end-to-end
 metrics; with ``--trace 1`` it carries the per-layer metrics of a
@@ -34,13 +36,11 @@ import shutil  # noqa: E402
 import statistics  # noqa: E402
 import sys  # noqa: E402
 
-import pandas as pd  # noqa: E402  (the warm-up UDF's type hints name it)
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 #: set-ups per run: the cold one plus restarts on the same JVM
-SETUP_REPEATS = 3
+SETUP_REPEATS = 5
 MAX_CPUS = 4
 
 
@@ -78,37 +78,35 @@ def _environment(tmp_dir: str) -> None:
         "SPARK_LOCAL_DIRS": tmp_dir,
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_DRIVER_MEMORY": "2g",
+        # no JVM, the launcher included, writes its perf data to /tmp
+        "SPARK_LAUNCHER_OPTS": "-XX:-UsePerfData",
         "PYSPARK_SUBMIT_ARGS":
-            f"--driver-java-options -Djava.io.tmpdir={tmp_dir} pyspark-shell",
+            f"--driver-java-options '-Djava.io.tmpdir={tmp_dir} -XX:-UsePerfData' pyspark-shell",
     })
     sys.path[:0] = [ROOT, HERE]
 
 
 def _open_session():
-    from pyspark.sql import functions as F
-
-    from spark_streaming_testbed_spark.session import (
-        default_parallelism,
-        ensure_session_confs,
-        get_session,
-    )
+    from spark_streaming_testbed_spark.session import ensure_session_confs, get_session
 
     spark = get_session("perfbench")
     spark.sparkContext.setLogLevel("ERROR")
     ensure_session_confs(spark)
+    spark.range(1).count()
+    return spark
 
-    # One pandas-UDF job, so Python workers start and import the shipped
-    # engine. The UDF is created per session: a UDF object caches its JVM
-    # twin, which must not outlive the context it was made in.
-    @F.pandas_udf("long")
-    def warm(ids: pd.Series) -> pd.Series:
-        from spark_streaming_testbed_spark.functions.hanoi import hanoi_moves
 
-        return ids.map(lambda i: hanoi_moves(int(i) % 4 + 1))
+def _warm_workers(spark) -> None:
+    """One pandas-UDF job on every worker thread: the Python workers start,
+    load Arrow and import the engine that ``ensure_session_confs`` shipped."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_testbed_spark.functions.hanoi import hanoi_burn_us
+    from spark_streaming_testbed_spark.session import default_parallelism
 
     n = default_parallelism()
-    spark.range(0, 16 * n, 1, n).select(F.sum(warm("id"))).collect()
-    return spark
+    spark.range(0, 16 * n, 1, n).select(
+        F.sum(hanoi_burn_us((F.col("id") % 4 + 1).cast("int")))).collect()
 
 
 def _shutdown(spark) -> None:
@@ -132,7 +130,6 @@ def main(argv=None) -> int:
     if args.seconds < 1:
         raise SystemExit("--seconds must be at least 1")
     tmp_dir = os.path.join(WORK, f"tmp-{os.getpid()}")
-    os.makedirs(tmp_dir, exist_ok=True)
     _environment(tmp_dir)
     try:
         import spark_streaming_testbed_spark  # noqa: F401
@@ -140,6 +137,7 @@ def main(argv=None) -> int:
         print(f"perfbench: the engine is not importable from {ROOT}: {exc}",
               file=sys.stderr)
         return 2
+    os.makedirs(tmp_dir, exist_ok=True)
 
     import batch
     import host
@@ -167,6 +165,10 @@ def main(argv=None) -> int:
                 with tracer.span("session.setup"):
                     spark = _open_session()
                 setups.append(time.perf_counter() - t0)
+            t0 = time.perf_counter()
+            with tracer.span("session.warm_workers"):
+                _warm_workers(spark)
+            cold_setup_s += time.perf_counter() - t0
             ctx = Context(args, spark, tracer, rss, tmp_dir)
             res = workload.run(ctx)
             peak_rss_mb = max(rss.peak_bytes, rss.sample()) / 2**20
@@ -204,8 +206,8 @@ def main(argv=None) -> int:
     print(json.dumps({"host": context}))
     print(metrics.summary_line(
         args.workload, values, names, attempted, failed,
-        {**res["summary"], "setup_s_runs": len(setups), "cold_setup_s": cold_setup_s,
-         "latency_samples": len(lat), "peak_rss_mb": peak_rss_mb}))
+        {**res["summary"], "latency_samples": len(lat), "cold_setup_s": cold_setup_s,
+         "peak_rss_mb": peak_rss_mb}))
     print(metrics.result_line(failed == 0, attempted, failed, values, names),
           flush=True)
     return 0

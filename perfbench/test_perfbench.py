@@ -109,7 +109,7 @@ def test_batch_digest_ignores_row_order_but_not_a_dropped_row():
 def test_small_run_emits_every_metric(workload, trace):
     proc = subprocess.run(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-         "--seed", "5", "--seconds", "2", "--trace", str(trace), "--size", "small"],
+         "--seed", "5", "--seconds", "5", "--trace", str(trace), "--size", "small"],
         cwd=ROOT, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     result = json.loads(proc.stdout.strip().splitlines()[-1])
