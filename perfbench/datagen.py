@@ -4,8 +4,8 @@ The registry queries read ten parquet tables (``session.TABLES``): a
 TPC-H-like star schema, an ``events`` stream table, ``documents`` text and
 ``embeddings`` vectors. The benchmark cannot rely on any data outside its
 checkout, so it renders the same schemas here from a fixed seed: the
-column names, types and value domains follow the tables the driver
-contract is checked against, and every file is one row group, as there.
+column names, types and value domains follow the repository's test
+tables (TESTDATA.md), and every file is one row group, as there.
 
 Row counts scale with ``sf`` (sf 0.1: 600 k lineitem rows, 5 k documents).
 """

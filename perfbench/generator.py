@@ -1,7 +1,7 @@
 """Open-loop load generator for the ``live`` workload.
 
 Runs as its own process so that its pacing never shares an interpreter
-with the engine's driver. It renders a rate plan into 10 ms buckets with
+with the engine's Spark session. It renders a rate plan into 10 ms buckets with
 ``TestPlan.values_for`` (the reference testbed's bucket arithmetic) and
 writes each bucket's values as ``"v\\n"`` lines to the one TCP client at
 the bucket's wall-clock due time, however far behind the reader is.

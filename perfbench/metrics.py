@@ -73,7 +73,7 @@ PER_LAYER: dict[str, tuple[str, str]] = {
     "trace.latency_samples": ("count", HIGHER),
 }
 
-#: the issue-level name each workload's end-to-end numbers go by in the
+#: the longer name each workload's end-to-end numbers go by in the
 #: human-readable summary line
 ALIASES: dict[str, dict[str, str]] = {
     "live": {"latency_p50_ms": "live_latency_p50_ms",

@@ -7,8 +7,8 @@ Usage, from the root of the repository::
 
 Set-up starts a local session (``session.get_session`` with at most four
 worker threads, ``ensure_session_confs`` shipping the engine, one job
-run), then stops and restarts it four times on the same JVM; ``setup_s``
-is the median of the five set-ups. A pandas-UDF job then starts the Python
+run), then stops and restarts it twice on the same JVM; ``setup_s`` is
+the median of the three set-ups. A pandas-UDF job then starts the Python
 workers, which import the engine; ``session.cold_setup_s`` is process
 start to that point, less the restarts. The workload then runs (see ``live.py``,
 ``ingest.py``, ``batch.py`` and README.md), checks its outputs and
@@ -40,7 +40,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 #: set-ups per run: the cold one plus restarts on the same JVM
-SETUP_REPEATS = 5
+SETUP_REPEATS = 3
 MAX_CPUS = 4
 
 

@@ -1,4 +1,4 @@
-"""Spark scheduler totals, read from the driver's status store.
+"""Spark scheduler totals, read from the Spark status store.
 
 Jobs are attributed by job group: the benchmark sets one group per batch
 query and per ingest phase, and a streaming query's micro-batch thread
@@ -9,8 +9,10 @@ group's jobs. ``task_jvm_cpu_s`` counts JVM executor CPU only, so
 
 from __future__ import annotations
 
-FIELDS = ("jobs", "stages", "tasks", "task_run_s", "task_jvm_cpu_s", "gc_s",
-          "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
+COUNTS = ("jobs", "stages", "tasks")
+TOTALS = ("task_run_s", "task_jvm_cpu_s", "gc_s", "shuffle_read_bytes",
+          "shuffle_write_bytes", "spill_bytes")
+FIELDS = COUNTS + TOTALS
 
 
 def _seq(scala_seq) -> list:
@@ -43,4 +45,4 @@ def group_totals(spark, group: str) -> dict[str, float]:
 
 
 def as_layer_metrics(totals: dict[str, float]) -> dict[str, float]:
-    return {f"spark.{k}": totals[k] for k in FIELDS[3:]}
+    return {f"spark.{k}": totals[k] for k in TOTALS}

@@ -94,6 +94,7 @@ def test_live_triggers_map_socket_offsets_to_rows():
     trig = live.triggers(progress)
     assert [(t["lo"], t["hi"]) for t in trig] == [(0, 10), (10, 15)]
     assert trig[1]["end"] - trig[1]["start"] == pytest.approx(0.25)
+    assert live.processing_rate(trig) == pytest.approx((10 / 0.5 + 5 / 0.25) / 2)
 
 
 def test_batch_digest_ignores_row_order_but_not_a_dropped_row():
