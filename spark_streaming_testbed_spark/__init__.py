@@ -23,3 +23,37 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+
+def _trim_zip_subimporters() -> None:
+    """Drop the per-package ``zipimporter`` entries from
+    ``sys.path_importer_cache``, once per Python process.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``pyspark/worker_util.py``, ``setup_spark_files``).
+    Under CPython 3.11 that makes every cached ``zipimporter`` re-read
+    its archive's central directory, and importing a package from a zip
+    caches one importer per package directory (``prefix`` set), on top
+    of the one for the archive root. A worker that imports pyspark from
+    ``$SPARK_HOME/python/lib/pyspark.zip`` (1,328 entries) holds 16-20
+    of them by the time a pandas UDF runs. Each re-read of pyspark.zip
+    costs about 8 ms on one idle core (4-CPU x86-64 container), so a
+    task paid 100-150 ms before any user code, whatever its input size.
+    CPython 3.13 made the invalidation lazy.
+
+    Dropping a sub-importer is safe: modules it loaded keep it as their
+    ``__loader__``, and a later import under that package builds a new
+    one from the archive directory already parsed into
+    ``zipimport._zip_directory_cache``. The archive-root importers stay,
+    so every ``sys.path`` entry still resolves as before. In the driver
+    (pyspark from site-packages) there is nothing to drop.
+    """
+    import sys
+    import zipimport
+
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+            sys.path_importer_cache.pop(path, None)
+
+
+_trim_zip_subimporters()

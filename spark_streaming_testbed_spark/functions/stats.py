@@ -36,14 +36,3 @@ def stats_aggs(value_col: str, round_to: int | None = ORACLE_ROUND) -> list[Colu
         mean_c.alias("mean_v"),
         F.coalesce(std_c, F.lit(0.0)).alias("stddev_v"),
     ]
-
-
-def stats_oracle_exprs(value_col: str, round_to: int = ORACLE_ROUND) -> str:
-    """The matching DuckDB SELECT-list fragment for :func:`stats_aggs`."""
-    v = value_col
-    return (
-        f"count(*) AS cnt, "
-        f"round(sum({v}), {round_to}) AS sum_v, "
-        f"round(avg({v}), {round_to}) AS mean_v, "
-        f"coalesce(round(stddev_pop({v}), {round_to}), 0.0) AS stddev_v"
-    )

@@ -169,10 +169,6 @@ def _auto_ivf_config(n_vecs: int) -> tuple[int, int, int]:
     return n_lists, nprobe, min(n_vecs, 32 * n_lists)
 
 
-def _as_double(col: str) -> F.Column:
-    return F.expr(f"transform({col}, x -> cast(x as double))")
-
-
 def _cosine(a: str, b: str) -> F.Column:
     """Sequential-fold cosine in double — bit-matched by the DuckDB twin.
 
@@ -244,15 +240,6 @@ UNIT_SQL = (
     "list_transform({col}::DOUBLE[], x -> x / "
     "sqrt(list_dot_product({col}::DOUBLE[], {col}::DOUBLE[])))"
 )
-
-
-def _dot(a: str, b: str) -> F.Column:
-    """Sequential-fold dot product (pairs of pre-normalized vectors need
-    only this — norms are computed once per vector, not once per pair)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "cast(0 as double), (acc, v) -> acc + v)"
-    )
 
 
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -91,6 +91,32 @@ def get_session(app_name: str = "spark_streaming_testbed_spark") -> SparkSession
 _NANO_TS_COLS = {"events": ("ts",)}
 
 
+def _engine_zip_path(pkg_dir: str) -> tuple[str, list[str]]:
+    """Path of the zip that ships ``pkg_dir``, and the sources it holds.
+
+    The name is keyed on every source's (relative path, size,
+    ``mtime_ns``), so an edit within the same second, or a deleted or
+    renamed module, gets a new zip instead of a stale one (a stale zip
+    breaks worker unpickling or runs old code)."""
+    import hashlib
+    import tempfile
+
+    parent = os.path.dirname(pkg_dir)
+    sources = sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+    key = hashlib.sha1()
+    for full in sources:
+        st = os.stat(full)
+        rel = os.path.relpath(full, parent)
+        key.update(f"{rel}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    name = f"sst_engine_{key.hexdigest()[:16]}.zip"
+    return os.path.join(tempfile.gettempdir(), name), sources
+
+
 def _ship_engine_to_workers(spark: SparkSession) -> None:
     """Make this package importable in Python workers regardless of the
     driver process's cwd/PYTHONPATH (pandas-UDF closures pickle module
@@ -98,24 +124,18 @@ def _ship_engine_to_workers(spark: SparkSession) -> None:
     Ships a zip of the package via ``addPyFile`` once per session."""
     if getattr(spark, "_sst_engine_shipped", False):
         return
-    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for f in files:
-            if f.endswith(".py"):
-                sources.append(os.path.join(root, f))
-    # cache key = newest source mtime, so edits anywhere in the package
-    # invalidate the shipped zip (a stale zip breaks worker unpickling)
-    stamp = max(int(os.path.getmtime(p)) for p in sources)
-    zpath = os.path.join(tempfile.gettempdir(), f"sst_engine_{stamp}.zip")
+    zpath, sources = _engine_zip_path(pkg_dir)
     if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
+        # write aside and rename, so a crashed or concurrent writer
+        # never leaves a partial zip under the final name
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
             for full in sources:
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                z.write(full, rel)
+                z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
     spark._sst_engine_shipped = True
 
@@ -219,13 +239,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dt == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (mirrors the DuckDB oracle)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

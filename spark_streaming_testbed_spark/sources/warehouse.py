@@ -268,10 +268,6 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _load_events_sql() -> str:
-    return "SELECT event_id, user_id, value FROM events"
-
-
 ZORDER_LAYOUT_ORACLE = f"""
 WITH ranked AS (
   SELECT event_id, user_id, value,
