@@ -36,17 +36,22 @@ def _trim_zip_subimporters() -> None:
     caches one importer per package directory (``prefix`` set), on top
     of the one for the archive root. A worker that imports pyspark from
     ``$SPARK_HOME/python/lib/pyspark.zip`` (1,328 entries) holds 16-20
-    of them by the time a pandas UDF runs. Each re-read of pyspark.zip
-    costs about 8 ms on one idle core (4-CPU x86-64 container), so a
-    task paid 100-150 ms before any user code, whatever its input size.
-    CPython 3.13 made the invalidation lazy.
+    of them once a pandas UDF has run; measured inside a worker on a
+    4-CPU x86-64 container, the 17 importers of a kernel task took
+    225-230 ms per task, whatever its input size. After the trim 4 are
+    left (the archive roots) and the call takes 35-45 ms, most of it the
+    spark-core jar PySpark also puts on the worker path. CPython 3.13
+    made the invalidation lazy.
 
     Dropping a sub-importer is safe: modules it loaded keep it as their
-    ``__loader__``, and a later import under that package builds a new
-    one from the archive directory already parsed into
+    ``__loader__``, with the directory it read, which stays valid while
+    the archive is unchanged; a later import under that package builds
+    a new one from the directory already parsed into
     ``zipimport._zip_directory_cache``. The archive-root importers stay,
     so every ``sys.path`` entry still resolves as before. In the driver
-    (pyspark from site-packages) there is nothing to drop.
+    (pyspark from site-packages) there is nothing to drop. Packages a
+    worker first imports after this point get sub-importers again, so a
+    long-lived worker that runs many kinds of task holds a few more.
     """
     import sys
     import zipimport

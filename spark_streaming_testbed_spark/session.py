@@ -134,7 +134,8 @@ def _ship_engine_to_workers(spark: SparkSession) -> None:
         tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
             for full in sources:
-                z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                z.write(full, rel)
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
     spark._sst_engine_shipped = True

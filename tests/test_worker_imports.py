@@ -25,11 +25,12 @@ from spark_streaming_testbed_spark.session import _engine_zip_path, ensure_sessi
 REPO_ROOT = os.path.dirname(os.path.dirname(spark_streaming_testbed_spark.__file__))
 
 #: zip importers a worker task may hold once the engine is imported.
-#: Measured 4 when the worker's cwd holds the engine package (the archive
-#: roots of pyspark.zip, py4j, spark-core's jar and the shipped engine
-#: zip) and 6 when the engine comes from the shipped zip (plus the two
-#: engine sub-packages imported after the trim); 17 without the trim.
-MAX_WORKER_ZIP_IMPORTERS = 8
+#: Measured 4 with this file run alone (the archive roots of pyspark.zip,
+#: py4j, spark-core's jar and the shipped engine zip; 6 when the engine
+#: is imported from that zip rather than the worker's cwd) and 9 after
+#: the whole suite ran in the same workers, which imported more pyspark
+#: packages after the trim. Without the trim: 17 alone, 20 after the suite.
+MAX_WORKER_ZIP_IMPORTERS = 12
 
 
 def test_trim_keeps_zip_imports_working(tmp_path):
