@@ -1400,7 +1400,7 @@ def ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic and would have to be mirrored chunk-for-chunk in the
     oracle to stay deterministic; at a true 100 TB hot key that is the
     documented upgrade path. Allowlisted in the skew tier with this
-    rationale (tools/degenerate_sweep.py SKEW_ALLOWLIST).
+    rationale (tools/sweep.py SKEW_ALLOWLIST).
     """
     ev = load_table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(

@@ -1,4 +1,4 @@
-"""Degenerate-input contracts (round-9 sweep, tools/degenerate_sweep.py).
+"""Degenerate-input contracts (round-9 sweep, tools/sweep.py).
 
 At warehouse scale every query eventually runs over an empty landing
 zone or a single-row partition. The r9 sweep found 26 queries that
@@ -228,7 +228,7 @@ def nulls_dir(tmp_path_factory):
     import sys
 
     sys.path.insert(0, "/root/repo/tools")
-    from degenerate_sweep import build_null_tier
+    from sweep import build_null_tier
 
     d = tmp_path_factory.mktemp("degen_nulls") / "tier"
     d.mkdir()

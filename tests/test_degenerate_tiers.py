@@ -26,7 +26,7 @@ pytestmark = pytest.mark.degenerate
 
 
 def _sweep():
-    import degenerate_sweep as ds
+    import sweep as ds
 
     return ds
 

@@ -6,20 +6,16 @@ driver runs the same comparison at sf0.01).
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from spark_streaming_testbed_spark.session import TABLES
 from tests.conftest import SF_SMOKE
-from tools.check_oracle import normalize
+from tools.sweep import canonical, compare, oracle_connection, run_oracle, run_query
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    con = oracle_connection(SF_SMOKE)
     yield con
     con.close()
 
@@ -30,20 +26,15 @@ ORACLES = entrymod.oracle_sql()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_SMOKE)
-    srows = [tuple(r) for r in sdf.collect()]
+    got = run_query(spark, QUERIES[name], SF_SMOKE)
+    assert got.error is None, got.error
     if name not in ORACLES:
-        # rows-only contract: must run and be deterministic in count
-        assert len(srows) >= 0
+        # rows-only contract: must run
         return
-    res = duck.execute(ORACLES[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    s_cols, s_norm = normalize(srows, sdf.columns)
-    o_cols, o_norm = normalize(orows, ocols)
-    assert s_cols == o_cols
-    assert len(s_norm) == len(o_norm)
-    assert s_norm == o_norm
+    ref = run_oracle(duck, ORACLES[name])
+    assert ref.error is None, ref.error
+    # the gate's own compare: dtypes, row count, columns, values
+    assert compare(canonical(got), ref) == []
 
 
 def test_entry_smoke(spark):

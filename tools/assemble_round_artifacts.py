@@ -1,14 +1,13 @@
-"""Assemble the per-round gate artifacts from a marathon's logs.
+"""Assemble the per-round gate artifacts from a marathon's outputs.
 
-Companion to ``tools/run_round_gates.sh``: parses the summary lines of
-the oracle / determinism / order-invariance logs, merges the three
-degenerate-sweep invocation dumps, and extracts the sf1 smoke JSON —
-writing ORACLE_TRIPLE_SF_rN.json, DETERMINISM_rN.json,
-ORDER_INVARIANCE_rN.json, DEGENERATE_SWEEP_rN.json and
-SCALE_SMOKE_rN.json stamped with the current HEAD. Refuses to record a
-non-green summary over an existing artifact (same rationale as
-tools/_guards: a broken run must not destroy a good record — pass
---force to record a genuine regression).
+Companion to ``tools/run_round_gates.sh``: reads the JSON results that
+``tools/sweep.py --out`` wrote for the oracle / determinism / order /
+degenerate modes and the sf1 smoke log, and writes
+ORACLE_TRIPLE_SF_rN.json, DETERMINISM_rN.json, ORDER_INVARIANCE_rN.json,
+DEGENERATE_SWEEP_rN.json and SCALE_SMOKE_rN.json stamped with the
+current HEAD. Refuses to record a non-green summary over an existing
+artifact (same rationale as tools/_guards: a broken run must not
+destroy a good record — pass --force to record a genuine regression).
 
 Usage: python tools/assemble_round_artifacts.py <round> [gates_dir]
        [--force]
@@ -17,32 +16,106 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: sweep --out name (in the gates dir) per scale factor
+SF_TAGS = {"sf0.001": "sf0001", "sf0.01": "sf001", "sf0.1": "sf01"}
+#: degenerate-sweep modes merged into DEGENERATE_SWEEP_rN.json
+DEGEN_MODES = ("empty", "one_row", "nulls", "skew", "skew90")
 
 
 def _head() -> str:
     return subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+        ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip()
 
 
-def tail_counts(path: str) -> dict:
-    m = re.findall(r"(\d+) pass, (\d+) fail, (\d+) rows-only",
-                   open(path).read())
-    assert m, f"no summary in {path}"
-    p, f, r = map(int, m[-1])
-    return {"pass": p, "fail": f, "rows_only": r}
+def _load(g: str, tag: str) -> dict:
+    with open(os.path.join(g, f"{tag}.json")) as f:
+        return json.load(f)
 
 
-def det_counts(path: str) -> dict:
-    m = re.findall(r"(\d+) stable, (\d+) partition-dependent",
-                   open(path).read())
-    assert m, f"no summary in {path}"
-    s, d = map(int, m[-1])
-    return {"stable": s, "partition_dependent": d}
+def oracle_artifact(n: int, g: str, head: str) -> dict:
+    out: dict = {
+        "note": (
+            f"Round-{n} full-registry oracle parity at THREE scale "
+            "factors (tools/sweep.py oracle: Spark vs DuckDB, sorted "
+            "columns, order-insensitive value hashes) — the standing "
+            "per-round gate."
+        ),
+        "head_commit": head,
+    }
+    for sf, tag in SF_TAGS.items():
+        doc = _load(g, f"oracle_{tag}")
+        out[sf] = {"pass": doc["pass"], "fail": doc["fail"],
+                   "rows_only": doc["rows_only"]}
+    return out
+
+
+def determinism_artifact(n: int, g: str, head: str) -> dict:
+    per_sf = {}
+    for sf, tag in SF_TAGS.items():
+        (v,) = _load(g, f"det_{tag}")["variants"].values()
+        per_sf[sf] = {"stable": v["match"],
+                      "partition_dependent": v["mismatch"]}
+    return {
+        "note": (
+            f"Round-{n} partition-stability: every registry query re-run "
+            "with coprime shuffle-partition counts (32 vs 17) at three "
+            "SFs, normalized results compared exactly."
+        ),
+        "head_commit": head,
+        "stable_per_sf": per_sf,
+        "stable": sum(v["stable"] for v in per_sf.values()),
+        "partition_dependent": sum(
+            v["partition_dependent"] for v in per_sf.values()
+        ),
+    }
+
+
+def order_artifact(n: int, g: str, head: str) -> dict:
+    doc = _load(g, "order")
+    (v,) = doc["variants"].values()
+    return {
+        "note": (
+            f"Round-{n} row-order invariance: every table row-permuted "
+            "with a fixed seed, full registry re-run and compared."
+        ),
+        "head_commit": head,
+        "sf_dir": doc["sf_dir"],
+        "seed": doc["seed"],
+        "order_invariant": v["match"],
+        "order_dependent": v["mismatch"],
+    }
+
+
+def degenerate_artifact(n: int, g: str, head: str) -> dict:
+    out: dict = {
+        "note": (
+            f"Round-{n} degenerate-input sweep: empty / one-row / "
+            "20%-NULL tiers at sf0.001, the 50% hot-key tier at sf0.01, "
+            "and the 90% hot-key tier at sf0.1 — full Spark-vs-DuckDB "
+            "contract on every tier plus wall ratios and the day-keyed "
+            "variant-pair measurements on the skew tiers."
+        ),
+        "head_commit": head,
+    }
+    for mode in DEGEN_MODES:
+        out[mode] = _load(g, f"degen_{mode}")
+    return out
+
+
+def _degen_green(doc: dict) -> bool:
+    return all(
+        not doc[m].get("flagged")
+        and all(t.get("fail", 0) == 0
+                for t in (doc[m], doc[m].get("pristine", {}),
+                          doc[m].get("skewed", {})))
+        for m in DEGEN_MODES
+    )
 
 
 def _write(path: str, obj: dict, green: bool, force: bool) -> None:
@@ -63,86 +136,22 @@ def main() -> int:
     g = args[1] if len(args) > 1 else f"/tmp/gates_r{n}"
     head = _head()
 
-    oracle = {
-        "note": (
-            f"Round-{n} full-registry oracle parity at THREE scale "
-            "factors (tools/check_oracle.py: Spark vs DuckDB, sorted "
-            "columns, order-insensitive value hashes) — the standing "
-            "per-round gate."
-        ),
-        "head_commit": head,
-        "sf0.001": tail_counts(f"{g}/oracle_sf0001.log"),
-        "sf0.01": tail_counts(f"{g}/oracle_sf001.log"),
-        "sf0.1": tail_counts(f"{g}/oracle_sf01.log"),
-    }
-    green = all(
-        oracle[k]["fail"] == 0 for k in ("sf0.001", "sf0.01", "sf0.1")
-    )
-    _write(f"/root/repo/ORACLE_TRIPLE_SF_r{n}.json", oracle, green, force)
+    def write(name: str, obj: dict, green: bool) -> None:
+        _write(os.path.join(REPO, f"{name}_r{n}.json"), obj, green, force)
 
-    per_sf = {
-        "sf0.001": det_counts(f"{g}/det_sf0001.log"),
-        "sf0.01": det_counts(f"{g}/det_sf001.log"),
-        "sf0.1": det_counts(f"{g}/det_sf01.log"),
-    }
-    det = {
-        "note": (
-            f"Round-{n} partition-stability: every registry query re-run "
-            "with coprime shuffle-partition counts (32 vs 17) at three "
-            "SFs, normalized results compared exactly."
-        ),
-        "head_commit": head,
-        "stable_per_sf": per_sf,
-        "stable": sum(v["stable"] for v in per_sf.values()),
-        "partition_dependent": sum(
-            v["partition_dependent"] for v in per_sf.values()
-        ),
-    }
-    _write(f"/root/repo/DETERMINISM_r{n}.json", det,
-           det["partition_dependent"] == 0, force)
-
-    m = re.findall(r"(\d+) order-invariant, (\d+) order-dependent",
-                   open(f"{g}/order.log").read())
-    inv, dep = map(int, m[-1])
-    order = {
-        "note": (
-            f"Round-{n} row-order invariance: every table row-permuted "
-            "with a fixed seed, full registry re-run and compared."
-        ),
-        "head_commit": head,
-        "sf": "0.01",
-        "seed": 11,
-        "order_invariant": inv,
-        "order_dependent": dep,
-    }
-    _write(f"/root/repo/ORDER_INVARIANCE_r{n}.json", order, dep == 0, force)
-
-    merged: dict = {
-        "note": (
-            f"Round-{n} degenerate-input sweep: empty / one-row / "
-            "20%-NULL tiers at sf0.001, the 50% hot-key tier at sf0.01, "
-            "and the 90% hot-key tier at sf0.1 — full Spark-vs-DuckDB "
-            "contract on every tier plus wall ratios and the day-keyed "
-            "variant-pair measurements on the skew tiers."
-        ),
-        "head_commit": head,
-    }
-    for f in ("degen_all.json", "degen_skew.json", "degen_skew90.json"):
-        merged.update(json.load(open(f"{g}/{f}")))
-    degen_green = all(
-        not isinstance(v, dict) or not v.get("flagged")
-        and all(
-            t.get("fail", 0) == 0 for t in v.values() if isinstance(t, dict)
-        )
-        for k, v in merged.items() if k not in ("note", "head_commit")
-    )
-    _write(f"/root/repo/DEGENERATE_SWEEP_r{n}.json", merged, degen_green,
-           force)
+    oracle = oracle_artifact(n, g, head)
+    write("ORACLE_TRIPLE_SF", oracle,
+          all(oracle[sf]["fail"] == 0 for sf in SF_TAGS))
+    det = determinism_artifact(n, g, head)
+    write("DETERMINISM", det, det["partition_dependent"] == 0)
+    order = order_artifact(n, g, head)
+    write("ORDER_INVARIANCE", order, order["order_dependent"] == 0)
+    degen = degenerate_artifact(n, g, head)
+    write("DEGENERATE_SWEEP", degen, _degen_green(degen))
 
     txt = open(f"{g}/sf1.log").read()
     blob = txt[txt.index("{\n"):txt.rindex("}") + 1]
-    _write(f"/root/repo/SCALE_SMOKE_r{n}.json", json.loads(blob), True,
-           force)
+    write("SCALE_SMOKE", json.loads(blob), True)
     return 0
 
 

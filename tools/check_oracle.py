@@ -1,185 +1,8 @@
-"""Local replica of the driver's correctness gate.
-
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at the given sf dir, then compares row count, column names/order
-(sorted), and values (order-insensitive, exact after the queries' own
-rounding). Usage:
-
-    python tools/check_oracle.py [sf_dir] [query ...]
-"""
-
-from __future__ import annotations
-
-import math
+"""Alias of ``python tools/sweep.py oracle SF_DIR [QUERY ...]``: the
+local replica of the driver's DuckDB correctness gate."""
 import sys
-import time
 
-import duckdb
-
-sys.path.insert(0, "/root/repo")
-
-from spark_streaming_testbed_spark.session import TABLES, get_session  # noqa: E402
-
-import __spark_entry__ as entrymod  # noqa: E402
-
-
-def _canon_spark_type(dt: str) -> str:
-    """Canonicalize a Spark simpleString dtype for cross-engine comparison."""
-    dt = dt.lower()
-    # Int widths collapse to one class: the driver's hash passed queries
-    # with i32-vs-i64 skew in round 1 (tpch_q7/q8/q9, topk_per_group), so
-    # only representation-changing skews (HUGEINT->Decimal, float-vs-int)
-    # should fail the local gate.
-    m = {
-        "tinyint": "int", "smallint": "int", "int": "int", "integer": "int",
-        "bigint": "int", "long": "int", "float": "f32", "double": "f64",
-        "string": "str", "boolean": "bool", "date": "date", "binary": "bin",
-    }
-    if dt in m:
-        return m[dt]
-    if dt.startswith("decimal"):
-        return dt.replace(" ", "")
-    if dt.startswith("timestamp"):
-        return "ts"
-    if dt.startswith("array<"):
-        return "array<" + _canon_spark_type(dt[6:-1]) + ">"
-    return dt
-
-
-def _canon_arrow_type(t) -> str:
-    """Canonicalize a pyarrow DataType (DuckDB result) the same way."""
-    import pyarrow as pa
-
-    if pa.types.is_integer(t):
-        return "int"
-    if pa.types.is_float32(t):
-        return "f32"
-    if pa.types.is_float64(t):
-        return "f64"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "str"
-    if pa.types.is_boolean(t):
-        return "bool"
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        return "ts"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "bin"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return "array<" + _canon_arrow_type(t.value_type) + ">"
-    return str(t)
-
-
-def type_mismatches(sdf, arrow_table):
-    """Compare Spark schema vs DuckDB arrow schema by column name.
-
-    The driver's value hash is type-sensitive (DuckDB HUGEINT vs Spark
-    BIGINT hash differently even when values are equal), so the local gate
-    must compare declared types, not Python reprs.
-    """
-    stypes = {f.name: _canon_spark_type(f.dataType.simpleString()) for f in sdf.schema.fields}
-    mism = []
-    for field in arrow_table.schema:
-        oc = _canon_arrow_type(field.type)
-        sc = stypes.get(field.name)
-        if sc is not None and sc != oc:
-            mism.append(f"{field.name}: spark={sc} oracle={oc}")
-    return mism
-
-
-def normalize(rows, cols):
-    """Sort columns by name, then rows; normalize floats/None.
-
-    List cells canonicalize to tuples so array-valued columns sort and
-    hash (the driver's pandas canonicalizer dies on them — registry
-    convention is to emit comma-joined strings instead — but the local
-    gate should report a value diff, not crash, if one slips in)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def canon(v):
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else round(v, 9)
-        if isinstance(v, (list, tuple)):
-            return tuple(canon(x) for x in v)
-        return v
-
-    out = []
-    for r in rows:
-        out.append(tuple(repr(canon(r[i])) for i in order))
-    out.sort()
-    return [cols[i] for i in order], out
-
-
-def main() -> int:
-    from _guards import validate_sf_dir
-    sf_dir = validate_sf_dir(sys.argv[1] if len(sys.argv) > 1
-                             else "/root/testdata/sf0.01")
-    only = set(sys.argv[2:])
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
-    spark = get_session("oracle-check")
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-
-    n_pass = n_fail = n_rows_only = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows-only {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-            n_rows_only += 1
-            continue
-        try:
-            res = con.execute(oracles[name])
-            otable = res.arrow()
-            ocols = otable.schema.names
-            orows = [
-                tuple(row[c] for c in ocols)
-                for row in otable.to_pylist()
-            ]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
-        s_cols, s_norm = normalize(srows, scols)
-        o_cols, o_norm = normalize(orows, ocols)
-        status = type_mismatches(sdf, otable)
-        if len(srows) != len(orows):
-            status.append(f"rowcount {len(srows)} != {len(orows)}")
-        if s_cols != o_cols:
-            status.append(f"cols {s_cols} != {o_cols}")
-        if not status and s_norm != o_norm:
-            diffs = [
-                (a, b) for a, b in zip(s_norm, o_norm) if a != b
-            ][:3]
-            status.append(f"values differ, first diffs: {diffs}")
-        if status:
-            print(f"FAIL {name}: {'; '.join(status)}")
-            n_fail += 1
-        else:
-            print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-            n_pass += 1
-
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
-    return 1 if n_fail else 0
-
+from sweep import main
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(["oracle", *sys.argv[1:]]))

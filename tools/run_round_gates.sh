@@ -1,10 +1,10 @@
 #!/bin/bash
 # Standing per-round gate marathon — sequential, ONE Spark job at a time
 # (concurrent local Spark sessions flake with "Python worker failed to
-# connect back"). Logs land in $GATES_DIR; progress in
+# connect back"). Logs and sweep JSON land in $GATES_DIR; progress in
 # $GATES_DIR/progress.txt; afterwards run
 #   python tools/assemble_round_artifacts.py <round> [gates_dir]
-# to build the per-round JSON artifacts from the logs, then run bench.py
+# to build the per-round JSON artifacts from them, then run bench.py
 # separately on a quiesced host (>= 5 min idle after this finishes).
 #
 # Usage: bash tools/run_round_gates.sh <round-number> [gates_dir]
@@ -15,37 +15,37 @@ mkdir -p "$G"
 cd /root/repo
 step() { echo "[$(date +%H:%M:%S)] START $1" >> "$G/progress.txt"; }
 fin() { echo "[$(date +%H:%M:%S)] DONE  $1 (rc=$2)" >> "$G/progress.txt"; }
+# the testdata dir sits next to the repo
+TD="$(dirname "$PWD")/testdata"
+# sweep TAG MODE SF: one tools/sweep.py mode, its JSON in $G/TAG.json
+sweep() {
+  step "$1"
+  python tools/sweep.py "$2" "$TD/$3" --out "$G/$1.json" > "$G/$1.log" 2>&1
+  fin "$1" $?
+}
 
-step oracle_sf0001
-python tools/check_oracle.py /root/testdata/sf0.001 > "$G/oracle_sf0001.log" 2>&1; fin oracle_sf0001 $?
-step oracle_sf001
-python tools/check_oracle.py /root/testdata/sf0.01 > "$G/oracle_sf001.log" 2>&1; fin oracle_sf001 $?
-step oracle_sf01
-python tools/check_oracle.py /root/testdata/sf0.1 > "$G/oracle_sf01.log" 2>&1; fin oracle_sf01 $?
+sweep oracle_sf0001 oracle sf0.001
+sweep oracle_sf001 oracle sf0.01
+sweep oracle_sf01 oracle sf0.1
 step plan_sf001
-python tools/plan_sweep.py /root/testdata/sf0.01 PLAN_SWEEP_r$N.json \
+python tools/plan_sweep.py "$TD/sf0.01" PLAN_SWEEP_r$N.json \
   PLAN_SWEEP_r$((N-1)).json > "$G/plan_sf001.log" 2>&1; fin plan_sf001 $?
 step plan_sf01
-python tools/plan_sweep.py /root/testdata/sf0.1 PLAN_SWEEP_r${N}_sf01.json \
+python tools/plan_sweep.py "$TD/sf0.1" PLAN_SWEEP_r${N}_sf01.json \
   PLAN_SWEEP_r$((N-1))_sf01.json > "$G/plan_sf01.log" 2>&1; fin plan_sf01 $?
-step det_sf0001
-python tools/determinism_check.py /root/testdata/sf0.001 > "$G/det_sf0001.log" 2>&1; fin det_sf0001 $?
-step det_sf001
-python tools/determinism_check.py /root/testdata/sf0.01 > "$G/det_sf001.log" 2>&1; fin det_sf001 $?
-step det_sf01
-python tools/determinism_check.py /root/testdata/sf0.1 > "$G/det_sf01.log" 2>&1; fin det_sf01 $?
-step order_invariance
-python tools/order_invariance_check.py /root/testdata/sf0.01 > "$G/order.log" 2>&1; fin order_invariance $?
+sweep det_sf0001 determinism sf0.001
+sweep det_sf001 determinism sf0.01
+sweep det_sf01 determinism sf0.1
+sweep order order sf0.01
 step config_parity
-python tools/config_parity_sweep.py /root/testdata/sf0.01 CONFIG_PARITY_r$N.json > "$G/config.log" 2>&1; fin config_parity $?
+python tools/sweep.py config "$TD/sf0.01" --out CONFIG_PARITY_r$N.json > "$G/config.log" 2>&1; fin config_parity $?
 step checkpoint_sweep
-python tools/checkpoint_sweep.py /root/testdata/sf0.001 CHECKPOINT_SWEEP_r$N.json > "$G/checkpoint.log" 2>&1; fin checkpoint_sweep $?
-step degen_all
-DEGEN_SWEEP_OUT="$G/degen_all.json" python tools/degenerate_sweep.py /root/testdata/sf0.001 all > "$G/degen_all.log" 2>&1; fin degen_all $?
-step degen_skew
-DEGEN_SWEEP_OUT="$G/degen_skew.json" python tools/degenerate_sweep.py /root/testdata/sf0.01 skew > "$G/degen_skew.log" 2>&1; fin degen_skew $?
-step degen_skew90
-DEGEN_SWEEP_OUT="$G/degen_skew90.json" python tools/degenerate_sweep.py /root/testdata/sf0.1 skew90 > "$G/degen_skew90.log" 2>&1; fin degen_skew90 $?
+python tools/checkpoint_sweep.py "$TD/sf0.001" CHECKPOINT_SWEEP_r$N.json > "$G/checkpoint.log" 2>&1; fin checkpoint_sweep $?
+sweep degen_empty empty sf0.001
+sweep degen_one_row one_row sf0.001
+sweep degen_nulls nulls sf0.001
+sweep degen_skew skew sf0.01
+sweep degen_skew90 skew90 sf0.1
 step sf1_smoke
 python tools/sf1_smoke.py > "$G/sf1.log" 2>&1; fin sf1_smoke $?
 step pytest
