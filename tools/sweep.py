@@ -38,8 +38,7 @@ import time
 import duckdb
 import pyarrow.parquet as pq
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
