@@ -1,5 +1,5 @@
 """Alias of ``python tools/sweep.py oracle SF_DIR [QUERY ...]``: the
-local replica of the driver's DuckDB correctness gate."""
+local DuckDB correctness gate."""
 import sys
 
 from sweep import main

@@ -4,7 +4,7 @@ A sweep runs every ``queries()`` entry (or the named subset) once per
 pass and checks each result against a reference:
 
 - the DuckDB oracle: ``oracle_sql()`` over the same input dir, compared
-  with the driver gate's rules (sorted columns, order-insensitive rows,
+  with the gate's rules (sorted columns, order-insensitive rows,
   9 dp float fold, canonical dtypes). Modes ``oracle`` (the input as
   is) and the input-dir tiers ``empty``, ``one_row``, ``nulls``,
   ``skew`` and ``skew90``. Queries without an oracle run rows-only
@@ -263,7 +263,7 @@ def sweep_registry(spark, passes, only: set[str], noop: bool = False):
 
 
 def run_tier(spark, label: str, tier_dir: str, only: set[str]) -> dict:
-    """The driver's correctness gate over one input dir: every query on
+    """The correctness gate over one input dir: every query on
     Spark against its ``oracle_sql()`` twin on DuckDB."""
     oracles = entrymod.oracle_sql()
     con = oracle_connection(tier_dir)
@@ -689,10 +689,11 @@ def run_skew(spark, src: str, only: set[str], hot: str = "50") -> dict:
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 #: ``determinism`` runs every query under both counts: coprime, so
 #: reducer assignment and therefore arrival order is thoroughly
-#: perturbed. The driver runs ``queries()`` under ITS session config, so
-#: a result that depends on partition count or order (collect_list
-#: without array_sort, first/any_value ties, unstable row_number ties,
-#: min_by on duplicate keys) can be green locally and red at the driver.
+#: perturbed. An external harness runs ``queries()`` under ITS session
+#: config, so a result that depends on partition count or order
+#: (collect_list without array_sort, first/any_value ties, unstable
+#: row_number ties, min_by on duplicate keys) can be green locally and
+#: red there.
 DETERMINISM_PARTITIONS = ("32", "17")
 
 #: config-parity variants: each changes only the physical strategy or
