@@ -6,7 +6,15 @@ through the per-record CPU kernel and the flagship windowed aggregation
 (BASELINE.md: 50,000 items/s sustained, 250,000 items per 5 s batch).
 
 Also times each headline query end-to-end (plan + execute + materialize
-via the noop sink) at $SPARK_GRAFT_SF_DIR (default sf0.1).
+via the noop sink) at $SPARK_GRAFT_SF_DIR (default sf0.1), and reads the
+executor CPU of its jobs from Spark's status store
+(``perfbench/scheduler.group_totals``).
+
+The sampling protocol is fixed: scenario 1 is the median of 3 runs,
+every scenario-2 arm runs ARM_RUNS samples, each headline query is the
+best of 2. The bench reports what it measured in this run and nothing
+else; comparing runs is left to interleaved A/B runs (``perfbench/``).
+Every value in the line's ``queries`` map is wall seconds.
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+from perfbench.scheduler import group_totals
 from spark_streaming_testbed_spark.plans import parse_plan
 from spark_streaming_testbed_spark.session import get_session
 from spark_streaming_testbed_spark.sources.profile_source import profile_dataframe
@@ -55,105 +64,15 @@ SCENARIO1_RATE = 50_000
 SCENARIO1_SECONDS = 60
 SCENARIO1_HEIGHT = 7
 
-
-# Volatile-arm adjudication (VERDICT r8 item 3): the scenario-2 arms
-# share a JVM with 20+ warm plans, so a GC/compile stall inside one
-# ~15-20 s window can read 2-3x high; r8's bench needed an out-of-band
-# perf_watch artifact to clear a contended run. Each arm now starts at
-# the usual median-of-3 and AUTO-EXTENDS (up to 6 runs) while any of
-# its stats' run spread (max/min) exceeds SPREAD_CAP, and the final
-# per-arm spread is published on the main JSON line — the bench
-# adjudicates its own contention instead of deferring to perf_watch.
-SPREAD_CAP = 2.0
-ARM_RUNS_BASE = 3
-ARM_RUNS_MAX = 6
-
-#: batch-query regression-confirm threshold: a headline query whose
-#: best-of-2 reads >= this ratio of its previous round's value gets two
-#: extra samples after a JVM quiesce (see the confirm pass in main) —
-#: correlated machine-state noise is out-voted, real regressions survive
-RECONFIRM_RATIO = 1.5
-#: arms whose previous median was under FAST_ARM_SECONDS sit at the
-#: host's absolute noise floor — a 1.38x reading there is either noise
-#: or a real regression the 1.5x trigger never adjudicates (VERDICT r9
-#: item 2: loglake_execution_roundtrip read 1.854 s vs 1.345 s and the
-#: confirm pass stayed silent). Sub-2s arms fire at 1.25x instead.
-RECONFIRM_RATIO_FAST = 1.25
-FAST_ARM_SECONDS = 2.0
-#: ceiling on the kernel-ratio trigger scaling: past 2x the host is so
-#: contended the whole reading is untrustworthy and the confirm pass
-#: should fire broadly rather than be normalized into silence
-HOST_FACTOR_CAP = 2.0
-#: confirm pass takes this many post-quiesce samples and publishes
-#: their median ALONE — the pre-quiesce pair that raised suspicion is
-#: kept in the details file but excluded from the published value
-#: (ADVICE r10 bench.py:564: a median over all 4 with a correlated
-#: slow original pair lands between one slow and one fast sample,
-#: publishing a phantom ~1.2x regression even when the quiesced
-#: re-runs prove the arm healthy; a real regression still survives
-#: because all 3 post-quiesce samples stay slow)
-CONFIRM_SAMPLES = 3
-
-
-def _clamped_host_factor(kernel_ratio_vs_prev: float | None) -> float:
-    """The trigger-scaling factor derived from the kernel calibration
-    ratio: clamped to [1.0, HOST_FACTOR_CAP]. Below 1.0 a fast host
-    makes real regressions MORE visible, so no relaxation; above the
-    cap the host is so contended the whole reading is untrustworthy
-    and the confirm pass must keep firing (a 2.5x-contended run must
-    NOT have its suspects normalized into silence by an unbounded
-    factor — the cap is the tested contract, see
-    test_bench_adjudication.py)."""
-    if not kernel_ratio_vs_prev:
-        return 1.0
-    return min(max(kernel_ratio_vs_prev, 1.0), HOST_FACTOR_CAP)
+#: every scenario-2 arm runs exactly this many samples and publishes
+#: their median (recovery_sec: their min); all raw samples go to
+#: BENCH_DETAILS and each arm's max/min spread to the main line
+ARM_RUNS = 3
 
 
 def _spread(vals: list[float]) -> float:
     """max/min run ratio — 1.0 means perfectly repeatable."""
     return round(max(vals) / max(min(vals), 1e-9), 2)
-
-
-def _arm_settled(runs_lists: list[list[float]]) -> bool:
-    """True once every stat of the arm has >= ARM_RUNS_BASE samples
-    with run spread within SPREAD_CAP."""
-    return all(
-        len(v) >= ARM_RUNS_BASE and _spread(v) <= SPREAD_CAP
-        for v in runs_lists
-    )
-
-
-def _reconfirm_suspects(
-    prev_ratios: dict[str, float],
-    prev_values: dict[str, float] | None = None,
-    host_factor: float = 1.0,
-) -> list[str]:
-    """Headline queries whose best-of-2 reads >= RECONFIRM_RATIO of the
-    previous round's value — candidates for the post-quiesce confirm
-    pass (correlated slow pairs that spread checks cannot see). Arms
-    whose previous value was under FAST_ARM_SECONDS use the tighter
-    RECONFIRM_RATIO_FAST trigger (noise-floor arms get adjudicated
-    in-band instead of sailing under 1.5x unexamined).
-
-    host_factor is the kernel-calibration ratio vs the previous round
-    (VERDICT r10 item 1): a host whose calibrated CPU kernel reads 1.2x
-    the previous round's burn is uniformly ~1.2x slow, so every query
-    wall is expected ~1.2x high — the triggers scale by that factor so
-    a contended driver run self-adjudicates instead of flagging 20
-    phantom regressions. Clamped upstream to [1.0, HOST_FACTOR_CAP];
-    never below 1.0 (a fast host makes real regressions MORE visible
-    at the standard trigger, not less)."""
-    prev_values = prev_values or {}
-    picked = []
-    for n in HEADLINE:
-        trigger = (
-            RECONFIRM_RATIO_FAST
-            if prev_values.get(n, float("inf")) < FAST_ARM_SECONDS
-            else RECONFIRM_RATIO
-        )
-        if prev_ratios.get(n, 0) >= trigger * host_factor:
-            picked.append(n)
-    return picked
 
 
 def materialize(df) -> None:
@@ -205,10 +124,7 @@ def scenario2_trigger_latency(spark) -> tuple[dict[str, float], dict]:
     inside the ~20 s window can double a single run's p50 (observed
     2.5 s vs a clean n=4 median of 0.97 s), and with best-of-2 one
     clean run hides a bimodal distribution; the median of three is
-    robust to one stall while still reporting a typical run. When the
-    three runs spread wider than SPREAD_CAP, the arm auto-extends to
-    up to ARM_RUNS_MAX runs (VERDICT r8 item 3) so a contended window
-    is out-voted in-band instead of adjudicated by perf_watch."""
+    robust to one stall while still reporting a typical run."""
     import statistics
     import tempfile
 
@@ -252,14 +168,12 @@ def scenario2_trigger_latency(spark) -> tuple[dict[str, float], dict]:
         "scenario2_trigger_p50_runs": [],
         "scenario2_trigger_max_runs": [],
     }
-    for _ in range(ARM_RUNS_MAX):
+    for _ in range(ARM_RUNS):
         durs = run_once()
         if durs:
             detail["scenario2_trigger_p50_runs"].append(
                 round(statistics.median(durs), 3))
             detail["scenario2_trigger_max_runs"].append(round(max(durs), 3))
-        if _arm_settled(list(detail.values())):
-            break
     out: dict[str, float] = {}
     if detail["scenario2_trigger_p50_runs"]:
         out["scenario2_trigger_p50"] = round(
@@ -376,18 +290,16 @@ def scenario2_pid_recovery(spark) -> tuple[dict[str, float], dict]:
         "scenario2_pid_on_max_trigger_runs": [],
         "scenario2_pid_recovery_sec_runs": [],
     }
-    for _ in range(ARM_RUNS_MAX):
+    for _ in range(ARM_RUNS):
         durs_off, _ = run(controlled=False)
         if durs_off:
             detail["scenario2_pid_off_max_trigger_runs"].append(
                 round(max(durs_off), 3))
-        if _arm_settled([detail["scenario2_pid_off_max_trigger_runs"]]):
-            break
     if detail["scenario2_pid_off_max_trigger_runs"]:
         out["scenario2_pid_off_max_trigger"] = round(
             statistics.median(detail["scenario2_pid_off_max_trigger_runs"]),
             3)
-    for _ in range(ARM_RUNS_MAX):
+    for _ in range(ARM_RUNS):
         durs_on, recs_on = run(controlled=True)
         if durs_on:
             backlog = sum(
@@ -397,12 +309,6 @@ def scenario2_pid_recovery(spark) -> tuple[dict[str, float], dict]:
                 round(max(durs_on), 3))
             detail["scenario2_pid_recovery_sec_runs"].append(
                 round(backlog, 3))
-        # settle on the trigger stat only: recovery_sec is a backlog
-        # INTEGRAL whose run-to-run variance is physical (how much of
-        # the spike lands before the controller clamps), not contention
-        # — gating on it would max out the arm every round
-        if _arm_settled([detail["scenario2_pid_on_max_trigger_runs"]]):
-            break
     if detail["scenario2_pid_on_max_trigger_runs"]:
         out["scenario2_pid_on_max_trigger"] = round(
             statistics.median(detail["scenario2_pid_on_max_trigger_runs"]),
@@ -429,13 +335,13 @@ def scenario2_pid_recovery(spark) -> tuple[dict[str, float], dict]:
     return out, detail
 
 
-def scenario3_reactive_rows_per_sec(spark) -> float:
+def scenario3_reactive(spark) -> tuple[float, int]:
     """Scenario-3 (BASELINE.md): the reactive, demand-driven receiver —
     the ``rate_profile`` Python DataSource admits one trigger quantum per
     micro-batch (demand slicing), the Structured-Streaming analog of the
     reference's reactive-streams receiver (25k items/s, +25% over its
     TCP receiver). Kernel + windowed stats over live micro-batches;
-    returns sustained rows/s."""
+    returns (wall seconds, rows)."""
     import uuid
 
     from spark_streaming_testbed_spark.functions.hanoi import hanoi_burn_us
@@ -479,14 +385,13 @@ def scenario3_reactive_rows_per_sec(spark) -> float:
     )
     q.processAllAvailable()
     q.stop()
-    wall = time.perf_counter() - t0
-    return rate * seconds / wall
+    return time.perf_counter() - t0, rate * seconds
 
 
-def scenario4_ramp_rows_per_sec(spark) -> float:
+def scenario4_ramp(spark) -> tuple[float, int]:
     """Scenario-4 shape (BASELINE.md): slow ramp 1k→50k items/s, time-
     compressed 10× (60 s instead of 600 s). Same kernel + windowed-stats
-    pipeline as scenario 1; returns sustained rows/s."""
+    pipeline as scenario 1; returns (wall seconds, rows)."""
     from spark_streaming_testbed_spark.functions.hanoi import hanoi_burn_us
 
     plan = parse_plan(json.dumps({
@@ -511,8 +416,17 @@ def scenario4_ramp_rows_per_sec(spark) -> float:
         )
     )
     materialize(stats)
-    wall = time.perf_counter() - t0
-    return n_rows / wall
+    return time.perf_counter() - t0, n_rows
+
+
+
+
+def task_cpu_s(spark, group: str) -> float:
+    """Executor CPU seconds of every job in job group ``group``. The
+    status store is fed by an asynchronous listener, so the bus is
+    drained first; otherwise the last stage of a job can be missing."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return round(group_totals(spark, group)["task_jvm_cpu_s"], 3)
 
 
 def main() -> None:
@@ -539,96 +453,65 @@ def main() -> None:
     timings.update(lat_out)
     pid_out, pid_runs = scenario2_pid_recovery(spark)
     timings.update(pid_out)
-    # per-arm [spread, n_runs] on the MAIN line (VERDICT r8 item 3):
-    # a published median is only trustworthy alongside its run spread,
-    # and the auto-extension above makes n visible when it kicked in
+    # per-arm [spread, n_runs] on the MAIN line (VERDICT r8 item 3): a
+    # published median is only trustworthy alongside its run spread, and
+    # n shows when a run produced no triggers
     s2_spread = {
         k.replace("scenario2_", "").replace("_runs", ""):
             [_spread(v), len(v)]
         for k, v in {**lat_runs, **pid_runs}.items()
         if v
     }
-    timings["scenario3_reactive_rows_per_sec"] = round(
-        scenario3_reactive_rows_per_sec(spark), 1)
-    timings["scenario4_ramp_rows_per_sec"] = round(
-        scenario4_ramp_rows_per_sec(spark), 1)
+    # every `queries` value is seconds, so a slower run always reads as
+    # a larger number; the rows/s forms live in BENCH_DETAILS only
+    rates: dict[str, float] = {}
+    for key, scenario in (("scenario3_reactive", scenario3_reactive),
+                          ("scenario4_ramp", scenario4_ramp)):
+        wall, rows = scenario(spark)
+        timings[key] = round(wall, 3)
+        rates[f"{key}_rows_per_sec"] = round(rows / wall, 1)
 
     # quiesce the JVM between the scenario suite and the batch block:
-    # the streaming scenarios (now up to 6 PID runs each under the
-    # auto-extension) leave cached blocks, listener state, and garbage
-    # that can degrade the late batch queries — one observed run read
-    # dedup_clusters 2.2x high on BOTH best-of-2 samples while a fresh
-    # session measured it at the r8 level.
+    # the streaming scenarios leave cached blocks, listener state, and
+    # garbage that can degrade the late batch queries — one observed run
+    # read dedup_clusters 2.2x high on BOTH best-of-2 samples while a
+    # fresh session measured it at the r8 level.
     spark.catalog.clearCache()
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:  # noqa: BLE001  (py4j hiccup: quiesce is advisory)
         pass
 
-    # kernel calibration BEFORE the batch block (VERDICT r10 item 1):
-    # the same pinned-constant CPU burn every round, so its ratio vs
-    # the previous round's reading measures HOST STATE, not code. It
-    # feeds two places: the host-factor trigger scaling below, and the
-    # main JSON line (judges adjudicate a contended driver run from
-    # this one file instead of cross-reading a side artifact).
+    # kernel calibration BEFORE the batch block (VERDICT r10 item 1): the
+    # same pinned-constant single-thread CPU burn every run, so it reads
+    # host state, not code
     from spark_streaming_testbed_spark.functions.hanoi import (
         burn_us_per_record,
     )
 
     burn_n7 = round(min(burn_us_per_record(7) for _ in range(7)), 2)
-    _, prev_vals, prev_kernel = _prev_bench_queries()
-    kernel_ratio_vs_prev = (
-        round(burn_n7 / prev_kernel, 3) if prev_kernel else None)
-    host_factor = _clamped_host_factor(kernel_ratio_vs_prev)
 
     # best-of-2 like the trigger/PID stats: one GC stall or cold page
     # cache doubles a single sub-second sample; both runs are published
-    # in the details side file so the noise stays visible.
+    # in the details side file so the noise stays visible. Each sample
+    # runs under its own job group, and the query's published executor
+    # CPU is that of the sample whose wall is published: CPU time leaves
+    # out the time a task waits for a core, so a contended host moves it
+    # far less than it moves wall time.
     headline_runs: dict[str, list[float]] = {}
+    headline_cpu: dict[str, float] = {}
     for name in HEADLINE:
         fn = queries[name]
         samples = []
-        for _ in range(2):
+        for i in range(2):
+            group = f"bench-{name}-{i}"
+            spark.sparkContext.setJobGroup(group, name)
             t0 = time.perf_counter()
             materialize(fn(spark, SF_DIR))
-            samples.append(round(time.perf_counter() - t0, 3))
-        headline_runs[name] = samples
-        timings[name] = min(samples)
-
-    # regression-confirm pass: best-of-2 cannot out-vote a CORRELATED
-    # slow pair (a degraded JVM/page cache slows both samples — the
-    # same failure the scenario arms' spread check catches, but here
-    # the two samples AGREE so spread looks fine). The bench already
-    # knows last round's medians; any query reading >= RECONFIRM_RATIO
-    # of its previous value gets up to 2 extra samples after a fresh
-    # quiesce, and keeps the overall min. A real regression survives
-    # (the re-runs confirm it); machine-state noise is out-voted
-    # in-band instead of by an out-of-band perf_watch run.
-    prev = round_over_round_deltas(timings).get("ratio_vs_prev", {})
-    suspects = _reconfirm_suspects(prev, prev_vals, host_factor)
-    if suspects:
-        import statistics
-
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-        for name in suspects:
-            fn = queries[name]
-            confirm = []
-            for _ in range(CONFIRM_SAMPLES):
-                t0 = time.perf_counter()
-                materialize(fn(spark, SF_DIR))
-                confirm.append(round(time.perf_counter() - t0, 3))
-            headline_runs[name].extend(confirm)
-            # median of the POST-QUIESCE samples only (ADVICE r10): the
-            # pre-quiesce pair is the evidence of suspicion, not of the
-            # arm's health — mixing it in publishes a phantom ~1.2x
-            # when the pair was correlated machine noise. Median (not
-            # min) over 3 clean samples still requires the majority to
-            # be fast, so an intermittent real regression survives.
-            timings[name] = round(statistics.median(confirm), 3)
+            wall = round(time.perf_counter() - t0, 3)
+            samples.append((wall, task_cpu_s(spark, group)))
+        headline_runs[name] = [wall for wall, _ in samples]
+        timings[name], headline_cpu[name] = min(samples)
 
     # burn_n7 (measured before the batch block) is the per-record burn
     # cost, comparable to the reference's 0.031 ms at n=7
@@ -645,34 +528,26 @@ def main() -> None:
         "value": round(rows_per_sec, 1),
         "unit": "rows/s",
         "kernel_us_per_record_n7": burn_n7,
-        # host-state adjudication IN-BAND (VERDICT r10 item 1): loadavg
-        # at start/end plus the kernel ratio vs the previous round's
-        # bench; a contended host reads ratio > 1 here and the confirm
-        # triggers above were scaled by min(ratio, 2.0), so a uniformly
-        # slow run explains itself in this one file.
         "host": {
             "load_start": load_start,
             "load_end": [round(v, 2) for v in os.getloadavg()],
-            "kernel_ratio_vs_prev": kernel_ratio_vs_prev,
-            "trigger_host_factor": round(host_factor, 3),
+            "headline_task_cpu_s": round(sum(headline_cpu.values()), 3),
         },
         "scenario2_spread": s2_spread,
         "queries": timings,
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
     }
-    # Everything beyond the driver contract (spread, burn calibration,
-    # round-over-round ratios, prose notes) goes to a side file: the
-    # driver records only the last ~2000 chars of stdout, and round 3's
-    # long notes pushed the JSON line past that, so BENCH_r03.json
-    # recorded parsed=null. The printed line must stay small.
+    # Everything beyond the driver contract (raw samples, burn
+    # calibration, per-query CPU) goes to a side file: the driver
+    # records only the last ~2000 chars of stdout, and round 3's long
+    # notes pushed the JSON line past that, so BENCH_r03.json recorded
+    # parsed=null. The printed line must stay small.
     details = dict(out)
     details.update(lat_runs)
     details.update(pid_runs)
+    details.update(rates)
     details["headline_runs"] = headline_runs
-    # queries that tripped the regression-confirm pass (their
-    # headline_runs carry 5 samples: 2 original + 3 post-quiesce; the
-    # published value is the median of the post-quiesce trio)
-    details["reconfirmed_queries"] = suspects
+    details["task_cpu_s"] = headline_cpu
     details["value_spread"] = {
         "min": round(runs[0], 1),
         "median": round(runs[1], 1),
@@ -688,7 +563,6 @@ def main() -> None:
     details["kernel_cost_ratio"] = round(burn_n7 / 31.0, 3)
     details["kernel_adjusted_rows_per_sec_DERIVED"] = round(
         rows_per_sec * burn_n7 / 31.0, 1)
-    details.update(round_over_round_deltas(timings))
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_DETAILS.json"), "w") as fh:
         json.dump(details, fh, indent=1)
@@ -697,68 +571,6 @@ def main() -> None:
         f"bench line {len(line)} chars would overflow the driver's "
         "2000-char stdout tail; trim HEADLINE or key names")
     print(line)
-
-
-def _prev_bench_queries() -> tuple[str | None, dict[str, float], float]:
-    """(filename, per-query seconds, kernel µs/record) from the newest
-    parseable BENCH_r{N}.json — shared by the delta report and the
-    regression-confirm trigger (the fast-arm threshold needs the
-    previous ABSOLUTE value, not just the ratio; the host-factor
-    normalization needs the previous round's kernel calibration)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    benches = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
-    )
-    # walk newest-first: a round whose line the driver failed to parse
-    # (e.g. BENCH_r03 parsed=null) is skipped, not a dead end
-    prev_file, prev, prev_kernel = None, {}, 0.0
-    for cand in reversed(benches):
-        try:
-            doc = json.load(open(cand))
-        except (OSError, ValueError):
-            continue
-        # the driver wraps the bench line under "parsed"
-        parsed = doc.get("parsed") or (doc if "queries" in doc else None)
-        if parsed:
-            prev = parsed.get("queries", {})
-            prev_kernel = float(
-                parsed.get("kernel_us_per_record_n7") or 0.0)
-        else:
-            # parsed=null (line overflowed the stdout tail): the tail
-            # usually still ends with the queries dict — recover it
-            m = re.search(r'"queries": (\{[^{}]*\})', doc.get("tail", ""))
-            try:
-                prev = json.loads(m.group(1)) if m else {}
-            except ValueError:
-                prev = {}
-            mk = re.search(
-                r'"kernel_us_per_record_n7": ([0-9.]+)', doc.get("tail", ""))
-            prev_kernel = float(mk.group(1)) if mk else 0.0
-        if prev:
-            prev_file = cand
-            break
-    if not prev_file:
-        return None, {}, 0.0
-    return os.path.basename(prev_file), prev, prev_kernel
-
-
-def round_over_round_deltas(timings: dict[str, float]) -> dict:
-    """Per-query delta vs the newest recorded BENCH_r{N}.json so a round-
-    over-round regression is visible in the bench line itself."""
-    prev_file, prev, _ = _prev_bench_queries()
-    if not prev_file:
-        return {}
-    deltas = {
-        name: round(timings[name] / prev[name], 2)
-        for name in timings
-        if name in prev and prev[name]
-    }
-    return {"prev_bench": prev_file,
-            "ratio_vs_prev": deltas}
 
 
 if __name__ == "__main__":

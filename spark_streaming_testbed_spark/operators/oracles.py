@@ -192,17 +192,28 @@ ORDER BY c_mktsegment
 """
 
 RELATIONAL_ORACLES["tpch_q1"] = """
+WITH l AS (
+  SELECT l_returnflag, l_linestatus, l_quantity, l_extendedprice, l_discount,
+         CAST(l_quantity AS DECIMAL(12,2)) AS qty,
+         CAST(l_extendedprice AS DECIMAL(12,2)) AS price,
+         CAST(l_extendedprice AS DECIMAL(12,2))
+           * (1 - CAST(l_discount AS DECIMAL(3,2))) AS disc_price,
+         CAST(l_extendedprice AS DECIMAL(12,2))
+           * (1 - CAST(l_discount AS DECIMAL(3,2)))
+           * (1 + CAST(l_tax AS DECIMAL(3,2))) AS charge
+  FROM lineitem
+  WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+)
 SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+       CAST(round(sum(qty), 2) AS DOUBLE) AS sum_qty,
+       CAST(round(sum(price), 2) AS DOUBLE) AS sum_base_price,
+       CAST(round(sum(disc_price), 2) AS DOUBLE) AS sum_disc_price,
+       CAST(round(sum(charge), 2) AS DOUBLE) AS sum_charge,
        round(avg(l_quantity), 6) AS avg_qty,
        round(avg(l_extendedprice), 6) AS avg_price,
        round(avg(l_discount), 6) AS avg_disc,
        count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+FROM l
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """

@@ -440,18 +440,29 @@ def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 pricing summary (adapted to the testdata lineitem schema)."""
+    """TPC-H Q1 pricing summary (adapted to the testdata lineitem schema).
+
+    The four sums run in DECIMAL (the inputs carry 2 dp), so they are
+    exact and do not depend on the order rows are summed in; a double
+    sum can move a 2-dp rounding edge when the input is permuted. The
+    oracle computes them the same way."""
     lineitem = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    qty = F.col("l_quantity").cast("decimal(12,2)")
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc_price = price * (1 - F.col("l_discount").cast("decimal(3,2)"))
+    charge = disc_price * (1 + F.col("l_tax").cast("decimal(3,2)"))
+
+    def money_sum(col):
+        return F.round(F.sum(col), 2).cast("double")
+
     return (
         lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).alias("sum_charge"),
+            money_sum(qty).alias("sum_qty"),
+            money_sum(price).alias("sum_base_price"),
+            money_sum(disc_price).alias("sum_disc_price"),
+            money_sum(charge).alias("sum_charge"),
             F.round(F.avg("l_quantity"), ROUND).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), ROUND).alias("avg_price"),
             F.round(F.avg("l_discount"), ROUND).alias("avg_disc"),

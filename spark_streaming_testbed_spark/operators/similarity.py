@@ -790,9 +790,9 @@ def ann_ivf_topk(
     deployment materializes ``ivf_assign``'s output once (partitioned
     by ``list_id``, so probes prune partitions) and pays only the
     probe cost per query batch; the scale-tier walls in
-    SCALE_SMOKE_r09's `ivf_calibration_scaling` include the rebuild,
-    while its nprobe/probed-fraction columns isolate the recurring
-    query-side cost that stays ~1 % of lists on clustered corpora. Oracle-checked: the DuckDB
+    SCALE_SMOKE_r12's `ivf_clustered` include the rebuild, while its
+    nprobe/probed-fraction fields isolate the recurring query-side
+    cost, ~1 % of lists on a clustered corpus. Oracle-checked: the DuckDB
     twin re-derives the identical centroids with unrolled Lloyd CTEs,
     so the approximate candidate set is deterministic; the exact twin
     ``cosine_topk`` provides the recall ground truth."""

@@ -1,12 +1,14 @@
-"""Unit pins for bench.py's volatile-arm self-adjudication
-(VERDICT r8 item 3): the scenario-2 arms publish their run spread and
-auto-extend past median-of-3 while any stat's max/min exceeds
-SPREAD_CAP. These helpers are pure functions, so their contract gets a
-Spark-free guard — the bench itself only exercises them under live
-streaming load where the branch taken depends on the host.
+"""Spark-free pins for bench.py's output contract: one JSON line on
+stdout, every ``queries`` value in seconds, details in a side file next
+to the script, and nothing read from earlier rounds' BENCH_r*.json.
 """
 
 from __future__ import annotations
+
+import builtins
+import json
+import os
+from unittest import mock
 
 import bench
 
@@ -19,126 +21,61 @@ def test_spread_is_max_over_min():
     assert bench._spread([3.2]) == 1.0
 
 
-def test_arm_settles_only_with_enough_tight_runs():
-    cap = bench.SPREAD_CAP
-    base = bench.ARM_RUNS_BASE
-    assert base == 3 and cap == 2.0  # the published protocol
-    # too few runs: never settled, even if identical
-    assert not bench._arm_settled([[1.0, 1.0]])
-    # enough runs, tight spread: settled
-    assert bench._arm_settled([[1.0, 1.2, 1.4]])
-    # one stat wide: the whole arm keeps running
-    assert not bench._arm_settled([[1.0, 1.1, 1.05], [1.0, 2.5, 1.2]])
-    # boundary: spread exactly at the cap still settles (<=)
-    assert bench._arm_settled([[1.0, 2.0, 1.5]])
-    # an empty stat list (no successful runs yet) is not settled
-    assert not bench._arm_settled([[]])
+def test_main_prints_one_seconds_line(monkeypatch, tmp_path, capsys):
+    """main() with the session, scenarios, registry and kernel probe
+    replaced by instant fakes. The fake session is a MagicMock, so the
+    real ``group_totals`` runs against an empty status store."""
+    repo_details = os.path.join(
+        os.path.dirname(os.path.abspath(bench.__file__)), "BENCH_DETAILS.json")
+    before = open(repo_details, "rb").read() if os.path.exists(repo_details) else None
+    # a recorded round beside the script: the bench must not read it
+    (tmp_path / "BENCH_r99.json").write_text('{"parsed": {"queries": {}}}')
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
 
+    monkeypatch.setattr(bench, "get_session", lambda name: mock.MagicMock())
+    monkeypatch.setattr(bench.entry, "entry", lambda spark: mock.MagicMock())
+    monkeypatch.setattr(bench.entry, "queries", lambda: {
+        name: lambda spark, sf: mock.MagicMock() for name in bench.HEADLINE})
+    monkeypatch.setattr(
+        bench, "scenario1_rows_per_sec", lambda spark: (50_000.0, 3_000_000))
+    monkeypatch.setattr(bench, "scenario2_trigger_latency", lambda spark: (
+        {"scenario2_trigger_p50": 1.0, "scenario2_trigger_max": 2.0},
+        {"scenario2_trigger_p50_runs": [1.0, 1.1, 0.9],
+         "scenario2_trigger_max_runs": [2.0, 2.2, 1.8]}))
+    monkeypatch.setattr(bench, "scenario2_pid_recovery", lambda spark: (
+        {"scenario2_pid_recovery_sec": 3.0},
+        {"scenario2_pid_recovery_sec_runs": [3.0, 4.0, 5.0]}))
+    monkeypatch.setattr(bench, "scenario3_reactive", lambda spark: (20.0, 500_000))
+    monkeypatch.setattr(bench, "scenario4_ramp", lambda spark: (10.0, 1_530_000))
+    monkeypatch.setattr(
+        "spark_streaming_testbed_spark.functions.hanoi.burn_us_per_record",
+        lambda height: 31.0)
 
-def test_extension_outvotes_a_single_stall():
-    """The design point: a 3x cold-start outlier must not survive as
-    the published median once the arm extends — median over >=5 runs
-    with one stall lands on a clean-run value."""
-    import statistics
+    opened: list[str] = []
+    real_open = builtins.open
 
-    runs = [3.49, 1.12, 1.04, 1.19, 1.70, 1.44]  # observed r9 shape
-    assert bench._spread(runs) > bench.SPREAD_CAP  # would have extended
-    assert statistics.median(runs) < 1.6  # the stall is out-voted
+    def recording_open(file, *args, **kwargs):
+        opened.append(os.fspath(file) if not isinstance(file, int) else "")
+        return real_open(file, *args, **kwargs)
 
+    monkeypatch.setattr(builtins, "open", recording_open)
+    bench.main()
+    monkeypatch.setattr(builtins, "open", real_open)
 
-def test_reconfirm_suspects_select_only_regression_ratios():
-    """The batch-block guard: best-of-2 can't out-vote a CORRELATED slow
-    pair (a degraded JVM slows both samples), so queries reading >=
-    RECONFIRM_RATIO of last round's value get a post-quiesce confirm
-    pass. Selection is ratio-driven and HEADLINE-scoped."""
-    assert bench.RECONFIRM_RATIO == 1.5  # the published protocol
-    some = bench.HEADLINE[0]
-    other = bench.HEADLINE[1]
-    picked = bench._reconfirm_suspects({some: 2.2, other: 1.1})
-    assert picked == [some]
-    # boundary: exactly at the ratio still confirms (>=)
-    assert bench._reconfirm_suspects({some: 1.5}) == [some]
-    # no prior round (empty ratios): nothing to confirm against
-    assert bench._reconfirm_suspects({}) == []
-    # non-headline names never schedule extra bench work
-    assert bench._reconfirm_suspects({"not_a_query": 9.9}) == []
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    assert len(lines[0]) < 1900
+    out = json.loads(lines[0])
+    assert {"metric", "value", "unit", "kernel_us_per_record_n7", "host",
+            "scenario2_spread", "queries", "sf"} <= set(out)
+    assert not [k for k in out["queries"] if "_per_" in k]
+    assert out["queries"]["scenario3_reactive"] == 20.0
+    assert out["host"]["headline_task_cpu_s"] == 0.0
 
-
-def test_reconfirm_fast_arm_trigger():
-    """Sub-2s arms sit at the host's noise floor: a 1.38x reading there
-    (VERDICT r9 item 2, loglake_execution_roundtrip) must be adjudicated
-    in-band, so arms whose PREVIOUS value was under FAST_ARM_SECONDS
-    fire the confirm pass at RECONFIRM_RATIO_FAST instead of 1.5."""
-    assert bench.RECONFIRM_RATIO_FAST == 1.25
-    assert bench.FAST_ARM_SECONDS == 2.0
-    some = bench.HEADLINE[0]
-    # the r9 shape: prev 1.345 s, ratio 1.38 — now fires
-    assert bench._reconfirm_suspects({some: 1.38}, {some: 1.345}) == [some]
-    # same ratio on a slow arm (prev >= 2 s): still below 1.5, no fire
-    assert bench._reconfirm_suspects({some: 1.38}, {some: 3.0}) == []
-    # boundary: exactly 1.25 on a fast arm confirms (>=)
-    assert bench._reconfirm_suspects({some: 1.25}, {some: 0.5}) == [some]
-
-
-def test_host_factor_cap_keeps_suspects_firing_past_2x():
-    """VERDICT r11 item 2: the HOST_FACTOR_CAP overflow path. A host
-    whose kernel calibration reads 2.5x contended must NOT have the
-    reconfirm trigger scaled by 2.5 — past the cap the whole reading is
-    untrustworthy and suspects should still fire at the capped 2x
-    scaling rather than be normalized into silence."""
-    assert bench.HOST_FACTOR_CAP == 2.0  # the published protocol
-    # the clamp itself: 2.5x contention caps at 2.0; sub-1.0 (fast
-    # host) never relaxes the trigger; None (no prior kernel) is 1.0
-    assert bench._clamped_host_factor(2.5) == 2.0
-    assert bench._clamped_host_factor(1.3) == 1.3
-    assert bench._clamped_host_factor(0.8) == 1.0
-    assert bench._clamped_host_factor(None) == 1.0
-
-    some = bench.HEADLINE[0]
-    factor = bench._clamped_host_factor(2.5)
-    # a slow arm reading 3.5x: capped trigger is 1.5*2.0=3.0 -> FIRES;
-    # an uncapped 2.5 factor would have silenced it (1.5*2.5=3.75)
-    assert 3.5 < bench.RECONFIRM_RATIO * 2.5  # the silent-if-uncapped shape
-    assert bench._reconfirm_suspects(
-        {some: 3.5}, {some: 5.0}, host_factor=factor
-    ) == [some]
-    # a fast arm reading 2.6x: capped fast trigger 1.25*2.0=2.5 -> FIRES
-    assert bench._reconfirm_suspects(
-        {some: 2.6}, {some: 0.9}, host_factor=factor
-    ) == [some]
-    # readings explained by the capped host state alone stay quiet
-    assert bench._reconfirm_suspects(
-        {some: 2.9}, {some: 5.0}, host_factor=factor
-    ) == []
-    # just under the fast trigger: quiet
-    assert bench._reconfirm_suspects({some: 1.24}, {some: 0.5}) == []
-    # no prev values known: falls back to the 1.5 trigger
-    assert bench._reconfirm_suspects({some: 1.3}) == []
-
-
-def test_reconfirm_host_factor_scales_triggers():
-    """VERDICT r10 item 1: a host whose calibrated kernel reads 1.3x the
-    previous round's burn is uniformly ~1.3x slow, so the confirm
-    triggers scale by that factor — 20 phantom regressions on a
-    contended driver run adjudicate themselves in-band."""
-    some = bench.HEADLINE[0]
-    # 1.6x reading on a kernel-1.3x host: expected, no fire (1.5*1.3=1.95)
-    assert bench._reconfirm_suspects({some: 1.6}, {some: 3.0}, 1.3) == []
-    # 2.0x reading on the same host: beyond host state, fires
-    assert bench._reconfirm_suspects({some: 2.0}, {some: 3.0}, 1.3) == [some]
-    # fast arm under the same host factor: 1.25*1.3 = 1.625 boundary
-    assert bench._reconfirm_suspects({some: 1.62}, {some: 0.5}, 1.3) == []
-    assert bench._reconfirm_suspects({some: 1.63}, {some: 0.5}, 1.3) == [some]
-    # host factor 1.0 (idle or no prior kernel) is the old behavior
-    assert bench._reconfirm_suspects({some: 1.5}, {some: 3.0}, 1.0) == [some]
-    assert bench.HOST_FACTOR_CAP == 2.0
-
-
-def test_prev_bench_kernel_recovered():
-    """_prev_bench_queries returns the previous round's kernel
-    calibration so main() can compute the host factor."""
-    fname, prev, kernel = bench._prev_bench_queries()
-    if fname is None:
-        return  # fresh clone without artifacts: nothing to pin
-    assert prev  # queries dict came with it
-    assert kernel > 0  # every recorded bench line carries the burn
+    assert not [p for p in opened if "BENCH_r" in os.path.basename(p)]
+    details = json.loads((tmp_path / "BENCH_DETAILS.json").read_text())
+    assert details["scenario3_reactive_rows_per_sec"] == 25_000.0
+    assert details["scenario4_ramp_rows_per_sec"] == 153_000.0
+    assert set(details["task_cpu_s"]) == set(bench.HEADLINE)
+    after = open(repo_details, "rb").read() if os.path.exists(repo_details) else None
+    assert after == before

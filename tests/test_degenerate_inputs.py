@@ -6,7 +6,7 @@ either crashed (ANSI div-by-zero, np.stack over an empty fit sample,
 driver-side int(None)) or diverged from their oracle (NULL-vs-0 on
 empty aggregates, Spark cube() vs ANSI CUBE over empty input). These
 tests pin the fixed behavior per failure class so it cannot regress;
-the registry-wide evidence is DEGENERATE_SWEEP_r09.json.
+the registry-wide evidence is DEGENERATE_SWEEP_r12.json.
 """
 
 from __future__ import annotations

@@ -41,7 +41,7 @@ tests/test_plans.py pins these shapes per-query for the headline set;
 this sweep is the registry-wide completeness check behind the claim
 "no scale-killers anywhere". Output: PLAN_SWEEP_r{N}.json.
 
-Usage: python tools/plan_sweep.py [sf_dir] [out.json] [prev_artifact.json]
+Usage: python tools/plan_sweep.py SF_DIR OUT.json [PREV_ARTIFACT.json]
 """
 
 from __future__ import annotations
@@ -298,9 +298,10 @@ def _classify_bnlj(plan: str) -> str:
 
 
 def main() -> None:
-    sf = validate_sf_dir(sys.argv[1] if len(sys.argv) > 1
-                         else "/root/testdata/sf0.01")
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLAN_SWEEP_r06.json"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__.rsplit("\n\n", 1)[1].strip())
+    sf = validate_sf_dir(sys.argv[1])
+    out_path = sys.argv[2]
 
     import __spark_entry__ as entry
     from spark_streaming_testbed_spark.session import get_session
