@@ -194,21 +194,20 @@ ORDER BY c_mktsegment
 RELATIONAL_ORACLES["tpch_q1"] = """
 WITH l AS (
   SELECT l_returnflag, l_linestatus, l_quantity, l_extendedprice, l_discount,
-         CAST(l_quantity AS DECIMAL(12,2)) AS qty,
-         CAST(l_extendedprice AS DECIMAL(12,2)) AS price,
-         CAST(l_extendedprice AS DECIMAL(12,2))
-           * (1 - CAST(l_discount AS DECIMAL(3,2))) AS disc_price,
-         CAST(l_extendedprice AS DECIMAL(12,2))
-           * (1 - CAST(l_discount AS DECIMAL(3,2)))
-           * (1 + CAST(l_tax AS DECIMAL(3,2))) AS charge
+         CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS qty,
+         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price,
+         CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS disc,
+         CAST(floor(l_tax * 100 + 0.5) AS BIGINT) AS tax
   FROM lineitem
   WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 )
 SELECT l_returnflag, l_linestatus,
-       CAST(round(sum(qty), 2) AS DOUBLE) AS sum_qty,
-       CAST(round(sum(price), 2) AS DOUBLE) AS sum_base_price,
-       CAST(round(sum(disc_price), 2) AS DOUBLE) AS sum_disc_price,
-       CAST(round(sum(charge), 2) AS DOUBLE) AS sum_charge,
+       CAST(round(CAST(sum(qty) AS DECIMAL(20,0)) * 0.01, 2) AS DOUBLE) AS sum_qty,
+       CAST(round(CAST(sum(price) AS DECIMAL(20,0)) * 0.01, 2) AS DOUBLE) AS sum_base_price,
+       CAST(round(CAST(sum(price * (100 - disc)) AS DECIMAL(20,0)) * 0.0001, 2)
+            AS DOUBLE) AS sum_disc_price,
+       CAST(round(CAST(sum(price * (100 - disc) * (100 + tax)) AS DECIMAL(20,0))
+                  * 0.000001, 2) AS DOUBLE) AS sum_charge,
        round(avg(l_quantity), 6) AS avg_qty,
        round(avg(l_extendedprice), 6) AS avg_price,
        round(avg(l_discount), 6) AS avg_disc,

@@ -14,6 +14,8 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -442,27 +444,31 @@ def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary (adapted to the testdata lineitem schema).
 
-    The four sums run in DECIMAL (the inputs carry 2 dp), so they are
-    exact and do not depend on the order rows are summed in; a double
-    sum can move a 2-dp rounding edge when the input is permuted. The
-    oracle computes them the same way."""
+    The inputs carry 2 dp, so the four sums run over exact integer cents
+    (products in 1e-4 and 1e-6 units) and do not depend on the order
+    rows are summed in; a double sum can move a 2-dp rounding edge when
+    the input is permuted. Only each group's total is scaled back, in
+    DECIMAL, and rounded to 2 dp. The oracle does the same."""
     lineitem = _t(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("decimal(12,2)")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc_price = price * (1 - F.col("l_discount").cast("decimal(3,2)"))
-    charge = disc_price * (1 + F.col("l_tax").cast("decimal(3,2)"))
 
-    def money_sum(col):
-        return F.round(F.sum(col), 2).cast("double")
+    def cents(col: str):
+        return F.floor(F.col(col) * 100 + 0.5)
 
+    def money_sum(units, scale: int):
+        total = F.sum(units).cast("decimal(20,0)") * F.lit(Decimal(f"1e-{scale}"))
+        return F.round(total, 2).cast("double")
+
+    price = cents("l_extendedprice")
+    disc_price = price * (100 - cents("l_discount"))
+    charge = disc_price * (100 + cents("l_tax"))
     return (
         lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            money_sum(qty).alias("sum_qty"),
-            money_sum(price).alias("sum_base_price"),
-            money_sum(disc_price).alias("sum_disc_price"),
-            money_sum(charge).alias("sum_charge"),
+            money_sum(cents("l_quantity"), 2).alias("sum_qty"),
+            money_sum(price, 2).alias("sum_base_price"),
+            money_sum(disc_price, 4).alias("sum_disc_price"),
+            money_sum(charge, 6).alias("sum_charge"),
             F.round(F.avg("l_quantity"), ROUND).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), ROUND).alias("avg_price"),
             F.round(F.avg("l_discount"), ROUND).alias("avg_disc"),
