@@ -55,7 +55,7 @@ def test_main_prints_one_seconds_line(monkeypatch, tmp_path, capsys):
     real_open = builtins.open
 
     def recording_open(file, *args, **kwargs):
-        opened.append(os.fspath(file) if not isinstance(file, int) else "")
+        opened.append(str(file))
         return real_open(file, *args, **kwargs)
 
     monkeypatch.setattr(builtins, "open", recording_open)
