@@ -419,8 +419,6 @@ def scenario4_ramp(spark) -> tuple[float, int]:
     return time.perf_counter() - t0, n_rows
 
 
-
-
 def task_cpu_s(spark, group: str) -> float:
     """Executor CPU seconds of every job in job group ``group``. The
     status store is fed by an asynchronous listener, so the bus is
