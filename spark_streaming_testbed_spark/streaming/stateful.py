@@ -789,7 +789,10 @@ def wide_replay_width(spark, n_keys: int | None = None) -> str:
     For the key-rich Python replays the width is DERIVED FROM THE
     MEASURED KEY COUNT (guide §2: scale partitioning from the data,
     not a constant): ``n_keys / REPLAY_GROUPS_PER_PARTITION``, clamped
-    to [8, session width]. The r12 per-trigger breakdown
+    to [8, session width]. When the session is narrower than 8 the
+    floor wins, so every key-rich replay runs 8 wide; the r12 width
+    measurements were all taken at session width 32 and do not cover
+    that case. The r12 per-trigger breakdown
     (q.recentProgress durationMs) showed why neither extreme wins: at
     the session width (32) the aggregate per-trigger state-store
     commit was 5-8 s vs 0.6-1.0 s at 16 — the commit tax is

@@ -9,6 +9,10 @@
   its replay contract: one file per chunk, strictly increasing mtimes,
   chunk row-sets identical to the old per-chunk day-bucket filters
   (including dropping NULL-day rows).
+- ``wide_replay_width`` must keep its floor of 8, its ramp of
+  ``n_keys / REPLAY_GROUPS_PER_PARTITION`` (96) and its ceiling at the
+  session width, checked on a session pinned 32 wide so the result
+  does not depend on the host's core count.
 """
 from __future__ import annotations
 
@@ -113,15 +117,23 @@ def test_replay_width_scales_with_key_count(spark):
         write_time_ordered_chunks,
     )
 
-    session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # floor of 8 below, session width above, linear ramp between
-    assert wide_replay_width(spark, 0) == "8"
-    assert wide_replay_width(spark, 8 * REPLAY_GROUPS_PER_PARTITION) == str(
-        min(session_w, 8)
-    )
-    assert wide_replay_width(spark, 10**9) == str(session_w)
-    # no estimate -> session width (legacy callers)
-    assert wide_replay_width(spark) == str(session_w)
+    # pin the session to the width the r12 measurements were taken at
+    # (32), so the ramp is checked the same way whatever the host's core
+    # count; the fixture is session-scoped, so restore the old width
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # floor of 8 below, session width above, linear ramp between
+        assert wide_replay_width(spark, 0) == "8"
+        assert wide_replay_width(
+            spark, 8 * REPLAY_GROUPS_PER_PARTITION
+        ) == str(min(session_w, 8))
+        assert wide_replay_width(spark, 10**9) == str(session_w)
+        # no estimate -> session width (legacy callers)
+        assert wide_replay_width(spark) == str(session_w)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # the chunk writer's key estimate rides the bounds job and lands
     # within HLL tolerance of the true cardinality
