@@ -11,7 +11,8 @@ executor CPU of its jobs from Spark's status store
 (``perfbench/scheduler.group_totals``).
 
 The sampling protocol is fixed: scenario 1 is the median of 3 runs,
-every scenario-2 arm runs ARM_RUNS samples, each headline query is the
+every scenario-2 arm runs ARM_RUNS samples after one untimed warm-up
+run, each headline query is the
 best of 2. The bench reports what it measured in this run and nothing
 else; comparing runs is left to interleaved A/B runs (``perfbench/``).
 Every value in the line's ``queries`` map is wall seconds.
@@ -168,6 +169,9 @@ def scenario2_trigger_latency(spark) -> tuple[dict[str, float], dict]:
         "scenario2_trigger_p50_runs": [],
         "scenario2_trigger_max_runs": [],
     }
+    # one untimed run first, so the samples time host noise and not
+    # the first plan's compile and JIT cost
+    run_once()
     for _ in range(ARM_RUNS):
         durs = run_once()
         if durs:
@@ -290,6 +294,9 @@ def scenario2_pid_recovery(spark) -> tuple[dict[str, float], dict]:
         "scenario2_pid_on_max_trigger_runs": [],
         "scenario2_pid_recovery_sec_runs": [],
     }
+    # each arm starts with one untimed run, as in
+    # scenario2_trigger_latency
+    run(controlled=False)
     for _ in range(ARM_RUNS):
         durs_off, _ = run(controlled=False)
         if durs_off:
@@ -299,6 +306,7 @@ def scenario2_pid_recovery(spark) -> tuple[dict[str, float], dict]:
         out["scenario2_pid_off_max_trigger"] = round(
             statistics.median(detail["scenario2_pid_off_max_trigger_runs"]),
             3)
+    run(controlled=True)
     for _ in range(ARM_RUNS):
         durs_on, recs_on = run(controlled=True)
         if durs_on:

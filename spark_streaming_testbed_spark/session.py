@@ -62,7 +62,11 @@ def session_scratch_dir(spark: SparkSession, prefix: str) -> str:
 
 
 def get_session(app_name: str = "spark_streaming_testbed_spark") -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-aware defaults."""
+    """Build (or reuse) a SparkSession with scale-aware defaults.
+
+    Streaming checkpoints (offset and commit logs, state-store delta and
+    checksum files) go through Spark's FileSystem-based checkpoint file
+    manager; see the comment at the conf for why."""
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -77,6 +81,20 @@ def get_session(app_name: str = "spark_streaming_testbed_spark") -> SparkSession
         # convert in load_table (Spark has no native nanos timestamp).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # Without Hadoop's native library the default FileContext-based
+        # manager forks `readlink` about six times per checkpoint rename
+        # (AbstractFileSystem.rename -> getFileLinkStatus ->
+        # FileUtil.readLink), several per trigger. The FileSystem-based
+        # manager writes with FileSystem.create and renames with
+        # FileSystem.rename, which on file: is File.renameTo, no fork.
+        # Both check-then-rename on a local filesystem; .crc files and the
+        # state-file checksums (ChecksumCheckpointFileManager wraps either
+        # manager) are kept.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()

@@ -219,3 +219,60 @@ def test_stateful_ewma_state_survives_restart(spark):
             if batch.get(r.user_id) != (r.n_events, r.ewma)
         ]
         assert not mismatched, mismatched[:5]
+
+
+def test_fs_manager_resumes_filecontext_checkpoint(spark):
+    """A checkpoint written by Spark's default FileContext-based file
+    manager must resume under the FileSystem-based one `get_session`
+    selects: run a stateful aggregation with the conf unset, stop it,
+    set the conf back and resume with more input; the final table must
+    equal an uninterrupted run's."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    with tempfile.TemporaryDirectory(prefix="ckpt_compat_") as tmp:
+        src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
+
+        def add_input(lo, hi):
+            (
+                spark.range(lo, hi)
+                .select(F.col("id"), (F.col("id") % 7).alias("k"))
+                .repartition(3)
+                .write.mode("append")
+                .parquet(src)
+            )
+
+        def run(sink_name, checkpoint):
+            stream = (
+                spark.readStream.schema("id long, k long")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            q = (
+                stream.groupBy("k")
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
+                .writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(sink_name)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return sorted(spark.table(sink_name).collect())
+
+        name = f"ckpt_compat_{uuid.uuid4().hex[:8]}"
+        add_input(0, 600)
+        fs_manager = spark.conf.get(key, None)
+        assert fs_manager, "get_session must select a checkpoint file manager"
+        try:
+            spark.conf.unset(key)
+            first = run(name + "_a", ckpt)
+        finally:
+            spark.conf.set(key, fs_manager)
+        assert sum(r.n for r in first) == 600
+
+        add_input(600, 1000)
+        resumed = run(name + "_b", ckpt)
+        uninterrupted = run(name + "_c", f"{tmp}/ckpt_full")
+
+    assert sum(r.n for r in resumed) == 1000
+    assert resumed == uninterrupted

@@ -11,13 +11,28 @@ the headline rows/s.
 
 from __future__ import annotations
 
+import time
+
 from spark_streaming_testbed_spark.functions.hanoi import (
     BURN_ADDS_PER_MOVE,
-    burn_us_per_record,
+    _burn_adds,
     hanoi_moves,
 )
 
 REF_US_N7 = 31.0  # reference mean per-record cost at n=7, in micros
+
+
+def _burn_cpu_us_per_record(n: int, reps: int = 20_000) -> float:
+    """``burn_us_per_record``'s probe timed on this thread's CPU clock.
+
+    The same ``_burn_adds`` call, but a neighbour's load on a shared
+    host no longer counts against the burn: wall-clock probes failed
+    the bands below on a busy 4-core host and passed alone right after.
+    """
+    total = ((1 << n) - 1) * BURN_ADDS_PER_MOVE * reps
+    t0 = time.thread_time_ns()
+    _burn_adds(total)
+    return (time.thread_time_ns() - t0) / 1000.0 / reps
 
 
 def test_burn_constant_is_pinned():
@@ -48,7 +63,7 @@ def test_burn_cost_matches_reference_band():
     upgrade halving the add cost lands ~18-21 us < 24.8) — and the
     constant itself is pinned exactly by test_burn_constant_is_pinned,
     so CODE drift is caught at 0%, not 15%."""
-    best = min(burn_us_per_record(7) for _ in range(3))
+    best = min(_burn_cpu_us_per_record(7) for _ in range(3))
     assert REF_US_N7 * 0.8 <= best <= REF_US_N7 * 2.0, (
         f"burn kernel cost {best:.1f} us/record at n=7 is outside the "
         f"calibration band around the reference's {REF_US_N7} us — "
@@ -59,7 +74,7 @@ def test_burn_cost_matches_reference_band():
 def test_burn_keeps_reference_growth_shape():
     """Cost must grow ~2x per height step (the 2^n hanoi shape), matching
     the faithful solver's move count."""
-    c6 = min(burn_us_per_record(6) for _ in range(3))
-    c8 = min(burn_us_per_record(8) for _ in range(3))
+    c6 = min(_burn_cpu_us_per_record(6) for _ in range(3))
+    c8 = min(_burn_cpu_us_per_record(8) for _ in range(3))
     assert 2.5 <= c8 / c6 <= 6.5  # ideal 4.03x = (2^8-1)/(2^6-1)
     assert hanoi_moves(8) + 1 == 2 * (hanoi_moves(7) + 1)
