@@ -12,9 +12,9 @@ executor CPU of its jobs from Spark's status store
 
 The sampling protocol is fixed: scenario 1 is the median of 3 runs,
 every scenario-2 arm runs ARM_RUNS samples after one untimed warm-up
-run, each headline query is the
-best of 2. The bench reports what it measured in this run and nothing
-else; comparing runs is left to interleaved A/B runs (``perfbench/``).
+run, each headline query is the best of 2. The bench reports what it
+measured in this run and nothing else; comparing runs is left to
+interleaved A/B runs (``perfbench/``).
 Every value in the line's ``queries`` map is wall seconds.
 """
 
