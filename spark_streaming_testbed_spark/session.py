@@ -82,14 +82,15 @@ def get_session(app_name: str = "spark_streaming_testbed_spark") -> SparkSession
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # Without Hadoop's native library the default FileContext-based
-        # manager forks `readlink` about six times per checkpoint rename
+        # checkpoint manager forks `readlink` about six times per rename
         # (AbstractFileSystem.rename -> getFileLinkStatus ->
-        # FileUtil.readLink), several per trigger. The FileSystem-based
-        # manager writes with FileSystem.create and renames with
-        # FileSystem.rename, which on file: is File.renameTo, no fork.
-        # Both check-then-rename on a local filesystem; .crc files and the
-        # state-file checksums (ChecksumCheckpointFileManager wraps either
-        # manager) are kept.
+        # FileUtil.readLink), and a stateful trigger renames its offset
+        # and commit log entries and every state partition's delta and
+        # checksum file. The FileSystem-based manager writes with
+        # FileSystem.create and renames with FileSystem.rename, which on
+        # file: is File.renameTo, no fork. Both check-then-rename on a
+        # local filesystem; .crc files and the state-file checksums
+        # (ChecksumCheckpointFileManager wraps either manager) are kept.
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

@@ -1,13 +1,14 @@
-"""Checkpoint writes must not fork processes.
+"""Checkpoint renames must not fork `readlink`.
 
 Without Hadoop's native library, the FileContext-based checkpoint file
 manager forks `readlink` several times for every checkpoint rename (the
 offset and commit logs, each state partition's delta and checksum
-file), which made process start-up the largest part of a trigger's
-fixed cost. `get_session` selects the FileSystem-based manager, whose
-local rename is `File.renameTo`. This test records the driver JVM's
-`jdk.ProcessStart` events with JFR around a short stateful stream and
-counts the `readlink` commands among them.
+file), which made process start-up most of a stateful trigger's
+checkpoint commit time. `get_session` selects the FileSystem-based
+manager, whose local rename is `File.renameTo`. This test records the
+driver JVM's `jdk.ProcessStart` events with JFR around a short stateful
+stream and counts the `readlink` commands among them. (Hadoop still
+forks `chmod` for each file it creates; only `libhadoop` removes that.)
 """
 
 from __future__ import annotations
@@ -15,13 +16,14 @@ from __future__ import annotations
 import time
 
 import pytest
+from py4j.protocol import Py4JError
 
 
 def _readlink_starts(spark, run) -> int:
     jvm = spark._jvm
     try:
         rec = jvm.jdk.jfr.Recording()
-    except Exception as exc:  # no jdk.jfr module in this JVM
+    except Py4JError as exc:  # no jdk.jfr module in this JVM
         pytest.skip(f"jdk.jfr is not available: {exc}")
     try:
         rec.enable("jdk.ProcessStart")
