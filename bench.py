@@ -133,8 +133,10 @@ def scenario2_trigger_latency(spark) -> tuple[dict[str, float], dict]:
         RateFeedbackListener,
     )
     from spark_streaming_testbed_spark.streaming.pipeline import (
-        run_stream_to_table,
         windowed_stats,
+    )
+    from spark_streaming_testbed_spark.streaming.replay import (
+        run_stream_to_table,
     )
     from spark_streaming_testbed_spark.sources.profile_source import (
         profile_stream,

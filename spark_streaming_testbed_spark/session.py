@@ -8,6 +8,7 @@ enabled for the pandas-UDF slow path.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +60,27 @@ def session_scratch_dir(spark: SparkSession, prefix: str) -> str:
         _SCRATCH_ROOTS.add(root)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
     return os.path.join(root, f"{prefix}{uuid.uuid4().hex[:8]}")
+
+
+@contextlib.contextmanager
+def conf_override(conf, confs: dict[str, str]):
+    """Set *confs* on a runtime conf for the duration of the block.
+
+    The conf's ACTUAL prior values are captured right before and put
+    back afterwards (unset if there was none): a hard-coded restore-to
+    value would silently set a wrong baseline whenever the session
+    defaults differ, e.g. shuffle partitions = the host's core count."""
+    saved = {k: conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        conf.set(k, v)
+    try:
+        yield saved
+    finally:
+        for k, prev in saved.items():
+            if prev is None:
+                conf.unset(k)
+            else:
+                conf.set(k, prev)
 
 
 def get_session(app_name: str = "spark_streaming_testbed_spark") -> SparkSession:

@@ -119,6 +119,31 @@ def profile_fixed_ramp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def write_profile(
+    spark: SparkSession,
+    plan: TestPlan,
+    path: str,
+    max_seconds: int | None = None,
+    epoch_ms: int = DEFAULT_EPOCH_MS,
+    stream_id: int = 0,
+    seconds_per_file: int = 10,
+) -> None:
+    """Write ``plan`` as parquet under ``path``, one file per
+    ``seconds_per_file`` plan-seconds, range-partitioned on ``ts``."""
+    n_seconds = plan.duration if max_seconds is None else max_seconds
+    if n_seconds is None:
+        raise ValueError("unbounded plan: pass max_seconds")
+    n_files = max(1, math.ceil(n_seconds / seconds_per_file))
+    batch = profile_dataframe(
+        spark, plan, max_seconds=n_seconds, epoch_ms=epoch_ms, stream_id=stream_id
+    )
+    (
+        batch.repartitionByRange(n_files, "ts")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def profile_stream(
     spark: SparkSession,
     plan: TestPlan,
@@ -130,23 +155,14 @@ def profile_stream(
 ) -> DataFrame:
     """Render ``plan`` as a *streaming* DataFrame.
 
-    Materializes the profile to parquet (one file per ``seconds_per_file``
-    plan-seconds, time-ordered) then replays it with a file stream and
-    ``maxFilesPerTrigger=1`` — a deterministic stand-in for the reference's
-    TCP socket that works with ``availableNow`` triggers in tests.
+    Materializes the profile to parquet (see :func:`write_profile`) then
+    replays it with a file stream and ``maxFilesPerTrigger=1`` — a
+    deterministic stand-in for the reference's TCP socket that works
+    with ``availableNow`` triggers in tests.
     """
-    n_seconds = plan.duration if max_seconds is None else max_seconds
-    if n_seconds is None:
-        raise ValueError("unbounded plan: pass max_seconds")
-    n_files = max(1, math.ceil(n_seconds / seconds_per_file))
-    batch = profile_dataframe(
-        spark, plan, max_seconds=n_seconds, epoch_ms=epoch_ms, stream_id=stream_id
-    )
     path = f"{checkpoint_dir}/profile_sid{stream_id}"
-    (
-        batch.repartitionByRange(n_files, "ts")
-        .write.mode("overwrite")
-        .parquet(path)
+    write_profile(
+        spark, plan, path, max_seconds, epoch_ms, stream_id, seconds_per_file
     )
     return (
         spark.readStream.schema(PROFILE_SCHEMA)

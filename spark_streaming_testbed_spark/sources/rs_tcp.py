@@ -276,6 +276,7 @@ def rs_tcp_roundtrip(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..plans.phases import parse_plan
+    from ..session import conf_override
     from .profile_source import _FIXED_RAMP_PLAN_JSON
 
     plan = parse_plan(_FIXED_RAMP_PLAN_JSON)
@@ -285,28 +286,26 @@ def rs_tcp_roundtrip(spark, sf_dir: str):
     # over the ~7-trigger demand replay — pin the narrow width the other
     # few-key profile replays use (r12 A/B: 6.0 s -> 3.8 s at sf0.1; at
     # scale this knob is frozen into the query's checkpoint)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        register(spark)
-        stream = (
-            spark.readStream.format("rs_tcp")
-            .option("port", server.port)
-            .option("rows_per_trigger", 137)
-            .load()
-        )
-        agg = stream.groupBy("value").agg(F.count(F.lit(1)).alias("cnt"))
-        name = f"rs_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory").queryName(name).start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return spark.table(name).orderBy("value")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        server.close()
+    with conf_override(spark.conf, {"spark.sql.shuffle.partitions": "4"}):
+        try:
+            register(spark)
+            stream = (
+                spark.readStream.format("rs_tcp")
+                .option("port", server.port)
+                .option("rows_per_trigger", 137)
+                .load()
+            )
+            agg = stream.groupBy("value").agg(F.count(F.lit(1)).alias("cnt"))
+            name = f"rs_{uuid.uuid4().hex[:8]}"
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory").queryName(name).start()
+            )
+            q.processAllAvailable()
+            q.stop()
+            return spark.table(name).orderBy("value")
+        finally:
+            server.close()
 
 
 RS_TCP_ROUNDTRIP_ORACLE = """

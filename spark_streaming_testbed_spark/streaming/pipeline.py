@@ -19,18 +19,29 @@ from __future__ import annotations
 
 import functools
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.stats import stats_aggs
-from ..plans.phases import TestPlan, parse_plan
+from ..operators.advanced import EVENT_FUNNEL_ORACLE, EWMA_SMOOTH_ORACLE
+from ..operators.dedup import (
+    BENCHMARK_MAX_ID,
+    DECONTAMINATE_ORACLE,
+    _with_shingles,
+)
+from ..operators.oracles import RELATIONAL_ORACLES
+from ..operators.prep import GROUP_SAMPLE_ORACLE
+from ..operators.sketches import HEAVY_HITTERS_ORACLE
+from ..plans.phases import parse_plan
+from ..session import load_table
 from ..sources.profile_source import (
     DEFAULT_EPOCH_MS,
     _FIXED_RAMP_PLAN_JSON,
     profile_stream,
 )
+from . import stateful as st
+from .replay import run_stream_to_table
 
 
 def union_streams(streams: list[DataFrame]) -> DataFrame:
@@ -73,43 +84,6 @@ def tsv_lines(stats: DataFrame) -> DataFrame:
             F.col("cnt"), F.col("sum_v"), F.col("mean_v"), F.col("stddev_v"),
         ).alias("line")
     )
-
-
-def run_stream_to_table(
-    result: DataFrame,
-    mode: str = "complete",
-    shuffle_partitions: int | None = None,
-) -> str:
-    """Drive a streaming aggregation to completion with availableNow into
-    a memory sink; returns the sink table name.
-
-    ``shuffle_partitions`` temporarily overrides
-    ``spark.sql.shuffle.partitions`` for the query's lifetime: state-store
-    partition count is frozen at stream start from that conf, and each
-    partition pays a per-trigger state commit. The profile-replay queries
-    have single-digit distinct keys, so 32 state partitions are pure
-    overhead (~1.3 s/query measured at local[32]); size the override to
-    the state's key cardinality. At production scale the state is keyed
-    per (window, value) across executors — leave it unset there.
-    """
-    spark = result.sparkSession
-    name = f"sink_{uuid.uuid4().hex[:10]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            result.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return name
 
 
 # ---------------------------------------------------------------------------
@@ -313,9 +287,6 @@ def streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled before the join — per-trigger work is scan → explode →
     broadcast-hash-join → append. The per-doc rollup happens on the
     sink table (batch), not in streaming state."""
-    from ..operators.dedup import BENCHMARK_MAX_ID, _with_shingles
-    from ..session import load_table
-
     docs = load_table(spark, sf_dir, "documents")
     bench = (
         _with_shingles(docs.where(F.col("doc_id") < BENCHMARK_MAX_ID))
@@ -346,185 +317,6 @@ def streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_hits", (F.col("n_hits") >= 3).alias("flagged"))
         .orderBy("doc_id")
     )
-
-
-def _streaming_decontaminate_oracle() -> str:
-    """Same report as the batch gate: the stream-static join sees every
-    document exactly once (file stream over the same parquet), so the
-    appended matches roll up to the identical contamination table."""
-    from ..operators.dedup import DECONTAMINATE_ORACLE
-
-    return DECONTAMINATE_ORACLE
-
-
-def _stateful_query(spark, sf_dir):
-    from .stateful import streaming_stateful_totals
-
-    return streaming_stateful_totals(spark, sf_dir)
-
-
-def _stateful_funnel_query(spark, sf_dir):
-    from .stateful import streaming_funnel
-
-    return streaming_funnel(spark, sf_dir)
-
-
-def _streaming_hh_query(spark, sf_dir):
-    from .stateful import streaming_heavy_hitters
-
-    return streaming_heavy_hitters(spark, sf_dir)
-
-
-def _streaming_hh_oracle() -> str:
-    from ..operators.sketches import HEAVY_HITTERS_ORACLE
-
-    return HEAVY_HITTERS_ORACLE
-
-
-def _streaming_late_query(spark, sf_dir):
-    from .stateful import streaming_late_data
-
-    return streaming_late_data(spark, sf_dir)
-
-
-def _streaming_late_oracle() -> str:
-    from .stateful import STREAMING_LATE_DATA_ORACLE
-
-    return STREAMING_LATE_DATA_ORACLE
-
-
-def _streaming_latest_state_query(spark, sf_dir):
-    from .stateful import streaming_latest_state
-
-    return streaming_latest_state(spark, sf_dir)
-
-
-def _streaming_latest_state_oracle() -> str:
-    from ..operators.oracles import RELATIONAL_ORACLES
-
-    return RELATIONAL_ORACLES["latest_state_pivot"]
-
-
-def _streaming_sliding_query(spark, sf_dir):
-    from .stateful import streaming_sliding_stats
-
-    return streaming_sliding_stats(spark, sf_dir)
-
-
-def _streaming_sliding_oracle() -> str:
-    from .stateful import STREAMING_SLIDING_STATS_ORACLE
-
-    return STREAMING_SLIDING_STATS_ORACLE
-
-
-def _streaming_sessionize_query(spark, sf_dir):
-    from .stateful import streaming_sessionize
-
-    return streaming_sessionize(spark, sf_dir)
-
-
-def _streaming_sessionize_oracle() -> str:
-    from ..operators.advanced import SESSION_GAP_MS
-
-    return f"""
-WITH ordered AS (
-  SELECT user_id, epoch_ms(ts) AS t, value,
-         lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_t
-  FROM events),
-marked AS (
-  SELECT user_id, t, value,
-         CASE WHEN prev_t IS NULL OR t - prev_t > {SESSION_GAP_MS}
-              THEN 1 ELSE 0 END AS ns
-  FROM ordered),
-islands AS (
-  SELECT user_id, t, value,
-         sum(ns) OVER (PARTITION BY user_id ORDER BY t
-                       ROWS UNBOUNDED PRECEDING) AS sn
-  FROM marked),
-sess AS (
-  SELECT user_id, min(t) AS session_start_ms,
-         max(t) + {SESSION_GAP_MS} AS session_end_ms,
-         count(*) AS n_events, round(sum(value), 6) AS sum_v
-  FROM islands GROUP BY user_id, sn),
-fwm AS (SELECT max(epoch_ms(ts)) AS m FROM events)
-SELECT user_id, session_start_ms, session_end_ms, n_events, sum_v
-FROM sess CROSS JOIN fwm
-WHERE session_end_ms <= m
-ORDER BY user_id, session_start_ms
-"""
-
-
-def _streaming_topk_query(spark, sf_dir):
-    from .stateful import streaming_topk_users
-
-    return streaming_topk_users(spark, sf_dir)
-
-
-def _streaming_topk_oracle() -> str:
-    from .stateful import STREAMING_TOPK_USERS_ORACLE
-
-    return STREAMING_TOPK_USERS_ORACLE
-
-
-def _streaming_upsert_query(spark, sf_dir):
-    from .stateful import streaming_upsert
-
-    return streaming_upsert(spark, sf_dir)
-
-
-def _streaming_upsert_oracle() -> str:
-    from ..operators.oracles import RELATIONAL_ORACLES
-
-    return RELATIONAL_ORACLES["upsert_merge"]
-
-
-def _streaming_group_sample_query(spark, sf_dir):
-    from .stateful import streaming_group_sample
-
-    return streaming_group_sample(spark, sf_dir)
-
-
-def _streaming_kmv_distinct_query(spark, sf_dir):
-    from .stateful import streaming_kmv_distinct
-
-    return streaming_kmv_distinct(spark, sf_dir)
-
-
-def _streaming_kmv_distinct_oracle() -> str:
-    from .stateful import STREAMING_KMV_DISTINCT_ORACLE
-
-    return STREAMING_KMV_DISTINCT_ORACLE
-
-
-def _streaming_group_sample_oracle() -> str:
-    from ..operators.prep import GROUP_SAMPLE_ORACLE
-
-    return GROUP_SAMPLE_ORACLE
-
-
-def _streaming_ewma_query(spark, sf_dir):
-    from .stateful import streaming_ewma
-
-    return streaming_ewma(spark, sf_dir)
-
-
-def _streaming_ewma_oracle() -> str:
-    from ..operators.advanced import EWMA_SMOOTH_ORACLE
-
-    return EWMA_SMOOTH_ORACLE
-
-
-def _streaming_funnel_oracle() -> str:
-    from ..operators.advanced import EVENT_FUNNEL_ORACLE
-
-    return EVENT_FUNNEL_ORACLE
-
-
-def _stateful_oracle() -> str:
-    from .stateful import STREAMING_STATEFUL_TOTALS_ORACLE
-
-    return STREAMING_STATEFUL_TOTALS_ORACLE
 
 
 _SSJ_PLAN_A = (
@@ -607,57 +399,58 @@ STREAMING_QUERIES = {
     "streaming_profile_stats": streaming_profile_stats,
     "streaming_multi_source_union": streaming_multi_source_union,
     "hanoi_load_stats": hanoi_load_stats,
-    "streaming_stateful_totals": _stateful_query,
+    "streaming_stateful_totals": st.streaming_stateful_totals,
     "streaming_dedup": streaming_dedup,
     "streaming_decontaminate": streaming_decontaminate,
-    "streaming_funnel": _stateful_funnel_query,
+    "streaming_funnel": st.streaming_funnel,
     "streaming_stream_join": streaming_stream_join,
-    "streaming_heavy_hitters": _streaming_hh_query,
-    "streaming_ewma": _streaming_ewma_query,
-    "streaming_group_sample": _streaming_group_sample_query,
-    "streaming_kmv_distinct": _streaming_kmv_distinct_query,
-    "streaming_late_data": _streaming_late_query,
-    "streaming_upsert": _streaming_upsert_query,
-    "streaming_sessionize": _streaming_sessionize_query,
-    "streaming_sliding_stats": _streaming_sliding_query,
-    "streaming_latest_state": _streaming_latest_state_query,
-    "streaming_topk_users": _streaming_topk_query,
+    "streaming_heavy_hitters": st.streaming_heavy_hitters,
+    "streaming_ewma": st.streaming_ewma,
+    "streaming_group_sample": st.streaming_group_sample,
+    "streaming_kmv_distinct": st.streaming_kmv_distinct,
+    "streaming_late_data": st.streaming_late_data,
+    "streaming_upsert": st.streaming_upsert,
+    "streaming_sessionize": st.streaming_sessionize,
+    "streaming_sliding_stats": st.streaming_sliding_stats,
+    "streaming_latest_state": st.streaming_latest_state,
+    "streaming_topk_users": st.streaming_topk_users,
 }
 
 STREAMING_ORACLES = {
     "streaming_profile_stats": STREAMING_PROFILE_STATS_ORACLE,
     "streaming_multi_source_union": STREAMING_MULTI_SOURCE_UNION_ORACLE,
     "hanoi_load_stats": HANOI_LOAD_STATS_ORACLE,
-    "streaming_stateful_totals": _stateful_oracle(),
+    "streaming_stateful_totals": st.STREAMING_STATEFUL_TOTALS_ORACLE,
     "streaming_dedup": STREAMING_DEDUP_ORACLE,
     "streaming_stream_join": STREAMING_STREAM_JOIN_ORACLE,
-    "streaming_decontaminate": _streaming_decontaminate_oracle(),
+    # the stream-static join sees every document exactly once (file
+    # stream over the same parquet), so the appended matches roll up to
+    # the batch decontaminate gate's contamination table
+    "streaming_decontaminate": DECONTAMINATE_ORACLE,
     # batch==stream equality: the stateful funnel shares the batch oracle
-    "streaming_funnel": _streaming_funnel_oracle(),
+    "streaming_funnel": EVENT_FUNNEL_ORACLE,
     # batch==stream equality: the MG sketch + exact confirm reproduces
     # the batch heavy_hitters exactly, so they share one oracle
-    "streaming_heavy_hitters": _streaming_hh_oracle(),
+    "streaming_heavy_hitters": HEAVY_HITTERS_ORACLE,
     # batch==stream equality: k-smallest-hash is an order statistic, so
     # chunked folding equals the batch sample exactly — shared oracle
-    "streaming_group_sample": _streaming_group_sample_oracle(),
-    "streaming_kmv_distinct": _streaming_kmv_distinct_oracle(),
+    "streaming_group_sample": GROUP_SAMPLE_ORACLE,
+    "streaming_kmv_distinct": st.STREAMING_KMV_DISTINCT_ORACLE,
     # batch==stream equality: chunked state folding is bitwise identical
     # to the one-shot batch fold, so the stream shares ewma_smooth's oracle
-    "streaming_ewma": _streaming_ewma_oracle(),
+    "streaming_ewma": EWMA_SMOOTH_ORACLE,
     # T5 late data: the oracle simulates the watermark's admission and
     # append-mode emission rules batch by batch (deterministic replay)
-    "streaming_late_data": _streaming_late_oracle(),
+    "streaming_late_data": st.STREAMING_LATE_DATA_ORACLE,
     # incremental foreachBatch MERGE converges to the one-shot batch
     # merge, so the stream shares upsert_merge's oracle
-    "streaming_upsert": _streaming_upsert_oracle(),
-    # append-mode session_window emits exactly the batch gap-islands
-    # sessions whose end precedes the final watermark
-    "streaming_sessionize": _streaming_sessionize_oracle(),
-    "streaming_sliding_stats": _streaming_sliding_oracle(),
+    "streaming_upsert": RELATIONAL_ORACLES["upsert_merge"],
+    "streaming_sessionize": st.STREAMING_SESSIONIZE_ORACLE,
+    "streaming_sliding_stats": st.STREAMING_SLIDING_STATS_ORACLE,
     # batch==stream: the stateful golden record converges to the batch
     # latest-state pivot, so they share one oracle
-    "streaming_latest_state": _streaming_latest_state_oracle(),
+    "streaming_latest_state": RELATIONAL_ORACLES["latest_state_pivot"],
     # complete-mode counts converge to the batch group-by, so the
     # running leaderboard shares the plain top-k SQL
-    "streaming_topk_users": _streaming_topk_oracle(),
+    "streaming_topk_users": st.STREAMING_TOPK_USERS_ORACLE,
 }

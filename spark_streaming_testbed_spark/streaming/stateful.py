@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator (SURVEY.md §2.6 T9 — the stretch
+"""Custom stateful streaming operators (SURVEY.md §2.6 T9 — the stretch
 tier the reference never had: cross-batch state).
 
 ``running_totals`` keeps per-value running (count, sum) across ALL
@@ -7,17 +7,48 @@ primitive for operators that outlive a window. Each trigger emits the
 updated cumulative row per key touched in that batch, which is exactly
 the reference's "stats so far" console view upgraded to exactly-once
 state.
+
+Every replay query here is a :class:`~.replay.FileReplay` (source
+writer, stream transform, output mode and width) run by
+:func:`~.replay.run_replay`, plus a batch finalizer over its sink table.
+``REPLAYS`` maps the registry names to those parts, and
+``tools/checkpoint_sweep.py`` replays the same objects under a kill and
+restart. ``streaming_upsert`` is the one foreachBatch MERGE loop, built
+from ``upsert_source`` and ``merge_upsert``.
 """
 
 from __future__ import annotations
 
 import os
-import time
+import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.advanced import (
+    EWMA_ALPHA,
+    EWMA_BETA,
+    FUNNEL_STAGES,
+    SESSION_GAP,
+    SESSION_GAP_MS,
+)
+from ..operators.text import md5h, with_tokens
+from ..plans.phases import parse_plan
+from ..session import load_table, session_scratch_dir
+from ..sources.profile_source import PROFILE_SCHEMA, write_profile
+from .replay import (
+    LATE_CHUNKS,
+    FileReplay,
+    read_replay,
+    run_replay,
+    write_chunks,
+    write_interleaved_chunks,
+    write_time_ordered_chunks,
+)
 
 OUTPUT_SCHEMA = "value int, total_cnt long, total_sum long, n_batches int"
 STATE_SCHEMA = "cnt long, sum long, batches int"
@@ -46,84 +77,74 @@ def _update_totals(
     )
 
 
-def running_totals(stream: DataFrame) -> DataFrame:
-    """Per-value cumulative totals across micro-batches (update mode)."""
-    return (
-        stream.groupBy("value")
-        .applyInPandasWithState(
-            _update_totals,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
+def _fold(update_fn, output_schema: str, state_schema: str, *keys: str):
+    """Stream transform: group by ``keys`` and fold each group's rows
+    into its state with ``update_fn`` (``applyInPandasWithState``,
+    update mode, no timeout)."""
+
+    def transform(stream: DataFrame) -> DataFrame:
+        return stream.groupBy(*keys).applyInPandasWithState(
+            update_fn,
+            outputStructType=output_schema,
+            stateStructType=state_schema,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
+
+    return transform
 
 
-def tws_available() -> bool:
-    """True when Spark 4's arbitrary-state v2 (`transformWithStateInPandas`)
-    can actually run here: its state server speaks protobuf to the Python
-    worker, so the `google.protobuf` package must be importable. This
-    container lacks it (documented in COVERAGE.md T9); the probe lets the
-    v2 twin below — and its test — activate automatically the moment the
-    environment gains the dependency, with zero code change."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+def running_totals(stream: DataFrame) -> DataFrame:
+    """Per-value cumulative totals across micro-batches (update mode)."""
+    return _fold(_update_totals, OUTPUT_SCHEMA, STATE_SCHEMA, "value")(stream)
 
 
-def running_totals_tws(stream: DataFrame) -> DataFrame:
-    """`running_totals` on the arbitrary-state v2 API
-    (`transformWithStateInPandas`, SPARK-49564): same per-value cumulative
-    (count, sum, batches) semantics, state held in a ValueState handle
-    instead of the GroupState tuple. Kept as the forward-looking twin of
-    the v1 operator — v2 adds state TTL, multiple typed state variables,
-    and operator-metadata evolution, none of which the v1 API offers.
-    Raises RuntimeError where the protobuf state server can't run (see
-    ``tws_available``)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which this "
-            "environment lacks; use running_totals (applyInPandasWithState)"
-        )
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+#: epoch day of ``ts``, the day-keyed twins' second state key
+DAY_SQL = "cast(unix_date(to_date(ts)) as int) AS day"
 
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
 
-        def handleInputRows(self, key, rows, timerValues):
-            cnt, total, batches = (
-                self._state.get() if self._state.exists() else (0, 0, 0)
+def _events_source(*cols: str, key_cols: tuple | None = None,
+                   interleaved: bool = False):
+    """Source writer: ``events`` projected to ``cols`` (SQL expressions)
+    as time-ordered day chunks, or as ``event_id``-interleaved chunks.
+    With ``key_cols`` the chunk writer's bounds scan also estimates the
+    state-key count, and the replay's width is derived from it."""
+
+    def source(spark, sf_dir: str, path: str):
+        events = load_table(spark, sf_dir, "events").selectExpr(*cols)
+        n_keys = None
+        if interleaved:
+            write_interleaved_chunks(events, path)
+        elif key_cols is None:
+            write_time_ordered_chunks(events, path)
+        else:
+            _, n_keys = write_time_ordered_chunks(
+                events, path, key_cols=key_cols
             )
-            new = 0
-            for pdf in rows:
-                new += len(pdf)
-            cnt += new
-            total += new * int(key[0])
-            batches += 1
-            self._state.update((cnt, total, batches))
-            yield pd.DataFrame(
-                {
-                    "value": [int(key[0])],
-                    "total_cnt": [cnt],
-                    "total_sum": [total],
-                    "n_batches": [batches],
-                }
-            )
+        return events.schema, n_keys
 
-        def close(self) -> None:
-            pass
+    return source
 
-    return stream.groupBy("value").transformWithStateInPandas(
-        statefulProcessor=TotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
+
+TOTALS_PLAN = (
+    '{"sequence": [{"type": "cycle", "values": [4, 5], "rate": 20, '
+    '"duration": 6}]}'
+)
+
+
+def _totals_source(spark, sf_dir: str, path: str):
+    """The cycle profile as 3 files of 2 plan-seconds each."""
+    write_profile(spark, parse_plan(TOTALS_PLAN), path, seconds_per_file=2)
+    return PROFILE_SCHEMA, None
+
+
+#: the cycle plan has TWO state keys (values 4 and 5): the narrow state
+#: width the other few-key profile replays use, so each trigger commits
+#: 4 state partitions, not 32 (r12 A/B: 3.3 s -> 2.2 s at sf0.1; frozen
+#: into the checkpoint at scale)
+TOTALS_REPLAY = FileReplay(
+    _totals_source, running_totals, "update", width=4, keys=("value",)
+)
 
 
 def streaming_stateful_totals(spark, sf_dir: str) -> DataFrame:
@@ -133,48 +154,15 @@ def streaming_stateful_totals(spark, sf_dir: str) -> DataFrame:
     max n_batches). The oracle recomputes the totals from the plan's
     bucket arithmetic in SQL — proving exactly-once state accumulation
     across micro-batches."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from ..plans.phases import parse_plan
-    from ..sources.profile_source import profile_stream
-
-    plan = parse_plan(
-        '{"sequence": [{"type": "cycle", "values": [4, 5], "rate": 20, '
-        '"duration": 6}]}'
+    name = run_replay(spark, TOTALS_REPLAY, sf_dir)
+    w = W.partitionBy("value").orderBy(F.col("n_batches").desc())
+    return (
+        spark.table(name)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("value", "total_cnt", "total_sum")
+        .orderBy("value")
     )
-    with tempfile.TemporaryDirectory(prefix="stateful_") as tmp:
-        stream = profile_stream(spark, plan, tmp, seconds_per_file=2)
-        name = f"sink_{uuid.uuid4().hex[:8]}"
-        # the cycle plan has TWO state keys (values 4 and 5): pin the
-        # narrow state width the other few-key profile replays use so
-        # each trigger commits 4 state partitions, not 32 (r12 A/B:
-        # 3.3 s -> 2.2 s at sf0.1; frozen into the checkpoint at scale)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                running_totals(stream)
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        w = W.partitionBy("value").orderBy(F.col("n_batches").desc())
-        return (
-            spark.table(name)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("value", "total_cnt", "total_sum")
-            .orderBy("value")
-        )
 
 
 STREAMING_STATEFUL_TOTALS_ORACLE = """
@@ -213,8 +201,6 @@ def _update_funnel(
     strictly after the previous anchor IS the batch min-timestamp
     chaining (the first 'view' is the min-ts view; the first 'click'
     strictly after it is the min click > t_view; ...)."""
-    from ..operators.advanced import FUNNEL_STAGES
-
     stage, anchor = state.get if state.exists else (0, -1)
     rows = pd.concat(list(pdfs))
     rows = rows.sort_values(["ts", "event_id"])
@@ -226,6 +212,51 @@ def _update_funnel(
             anchor = int(t)
     state.update((stage, anchor))
     yield pd.DataFrame({"user_id": [int(key[0])], "stage": [stage]})
+
+
+#: key-rich Python replay (one state group per user): width derived from
+#: the measured key count, see wide_replay_width (the r9 "narrow width"
+#: rule applies only to the single-digit-key replays, which pin 4 or 8)
+FUNNEL_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "event_type", "ts",
+                   key_cols=("user_id",)),
+    _fold(_update_funnel, FUNNEL_OUTPUT_SCHEMA, FUNNEL_STATE_SCHEMA,
+          "user_id"),
+    "update",
+    keys=("user_id",),
+)
+
+
+def _funnel_report(final: DataFrame) -> DataFrame:
+    """The batch ``event_funnel`` report from per-user final stages."""
+    # coalesce: SUM over zero users is NULL in Spark while the
+    # shared batch oracle counts 0 (r9 degenerate-input sweep)
+    wide = final.agg(*[
+        F.coalesce(
+            F.sum((F.col("stage") >= k).cast("long")),
+            F.lit(0).cast("long"),
+        ).alias(s)
+        for k, s in enumerate(FUNNEL_STAGES, 1)
+    ])
+    stack = ", ".join(f"'{s}', {s}" for s in FUNNEL_STAGES)
+    funnel = wide.selectExpr(
+        f"stack({len(FUNNEL_STAGES)}, {stack}) AS (stage, users)"
+    )
+    top = funnel.where(
+        F.col("stage") == FUNNEL_STAGES[0]
+    ).select(F.col("users").alias("top_users"))
+    return (
+        funnel.crossJoin(F.broadcast(top))
+        .select(
+            "stage", "users",
+            # try_divide: 0 entrants must yield NULL like the
+            # oracle's x/0, not an ANSI error (r9 sweep) — same
+            # guard as the batch twin event_funnel
+            F.round(F.try_divide("users", "top_users"), 6)
+            .alias("pct_of_top"),
+        )
+        .orderBy(F.col("users").desc(), "stage")
+    )
 
 
 def streaming_funnel(spark, sf_dir: str) -> DataFrame:
@@ -240,88 +271,12 @@ def streaming_funnel(spark, sf_dir: str) -> DataFrame:
 
     Scale shape: per-trigger work is one user-keyed shuffle into the
     stateful operator; state is two longs per user."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.advanced import FUNNEL_STAGES
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", "ts"
-    )
-    with tempfile.TemporaryDirectory(prefix="sfunnel_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        # time-ordered multi-trigger replay (absolute epoch-day chunks,
-        # explicit increasing mtimes) — shared helper, see
-        # write_time_ordered_chunks below
-        # key-rich Python replay (one state group per user): width
-        # derived from the measured key count — see wide_replay_width
-        # (the r9 "narrow width" rule applies only to the
-        # single-digit-key replays, which still pin 8)
-        _, n_keys = write_time_ordered_chunks(
-            events, path, key_cols=("user_id",)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", wide_replay_width(spark, n_keys)
-        )
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            updates = stream.groupBy("user_id").applyInPandasWithState(
-                _update_funnel,
-                outputStructType=FUNNEL_OUTPUT_SCHEMA,
-                stateStructType=FUNNEL_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"sfunnel_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        final = spark.table(name).groupBy("user_id").agg(
+    name = run_replay(spark, FUNNEL_REPLAY, sf_dir)
+    return _funnel_report(
+        spark.table(name).groupBy("user_id").agg(
             F.max("stage").alias("stage")
         )
-        # coalesce: SUM over zero users is NULL in Spark while the
-        # shared batch oracle counts 0 (r9 degenerate-input sweep)
-        wide = final.agg(*[
-            F.coalesce(
-                F.sum((F.col("stage") >= k).cast("long")),
-                F.lit(0).cast("long"),
-            ).alias(s)
-            for k, s in enumerate(FUNNEL_STAGES, 1)
-        ])
-        stack = ", ".join(f"'{s}', {s}" for s in FUNNEL_STAGES)
-        funnel = wide.selectExpr(
-            f"stack({len(FUNNEL_STAGES)}, {stack}) AS (stage, users)"
-        )
-        top = funnel.where(
-            F.col("stage") == FUNNEL_STAGES[0]
-        ).select(F.col("users").alias("top_users"))
-        return (
-            funnel.crossJoin(F.broadcast(top))
-            .select(
-                "stage", "users",
-                # try_divide: 0 entrants must yield NULL like the
-                # oracle's x/0, not an ANSI error (r9 sweep) — same
-                # guard as the batch twin event_funnel
-                F.round(F.try_divide("users", "top_users"), 6)
-                .alias("pct_of_top"),
-            )
-            .orderBy(F.col("users").desc(), "stage")
-        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -351,8 +306,6 @@ def _update_funnel_day(
     STAGE crosses the day boundary. Each e(s) is monotone across
     triggers (more events only advance the scan), so the reader may
     take max per component."""
-    from ..operators.advanced import FUNNEL_STAGES
-
     n_states = len(FUNNEL_STAGES) + 1
     if state.exists:
         flat = list(state.get)
@@ -376,6 +329,16 @@ def _update_funnel_day(
         "day": [int(key[1])],
         **{f"e{s}": [sims[s][0]] for s in range(n_states)},
     })
+
+
+FUNNEL_DAY_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "event_type", "ts", DAY_SQL,
+                   key_cols=("user_id", "day")),
+    _fold(_update_funnel_day, FUNNEL_DAY_OUTPUT_SCHEMA,
+          FUNNEL_DAY_STATE_SCHEMA, "user_id", "day"),
+    "update",
+    keys=("user_id", "day"),
+)
 
 
 def streaming_funnel_daykeyed(spark, sf_dir: str) -> DataFrame:
@@ -418,102 +381,36 @@ def streaming_funnel_daykeyed(spark, sf_dir: str) -> DataFrame:
     overhead. On a multi-executor cluster the crossover moves DOWN:
     the user-keyed scan is one task no matter how many executors,
     while the day sub-keys spread across the fleet."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.advanced import FUNNEL_STAGES
-    from ..session import load_table
-
     n_states = len(FUNNEL_STAGES) + 1
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", "ts",
-        F.unix_date(F.to_date("ts")).cast("int").alias("day"),
+    name = run_replay(spark, FUNNEL_DAY_REPLAY, sf_dir)
+    # last emission per (user, day) = max per component (monotone),
+    # then the day-ordered stitch: fold the entry stage through each
+    # day's transition map, entirely JVM-side.
+    maps = spark.table(name).groupBy("user_id", "day").agg(*[
+        F.max(f"e{s}").alias(f"e{s}") for s in range(n_states)
+    ])
+    final = (
+        maps.groupBy("user_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(
+                    "day",
+                    F.array(*[
+                        F.col(f"e{s}") for s in range(n_states)
+                    ]).alias("m"),
+                ))
+            ).alias("days")
+        )
+        .select(
+            "user_id",
+            F.aggregate(
+                "days",
+                F.lit(0),
+                lambda acc, x: F.element_at(x["m"], acc + 1),
+            ).alias("stage"),
+        )
     )
-    with tempfile.TemporaryDirectory(prefix="sfunnel_day_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        _, n_keys = write_time_ordered_chunks(
-            events, path, key_cols=("user_id", "day")
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", wide_replay_width(spark, n_keys)
-        )
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            updates = stream.groupBy("user_id", "day").applyInPandasWithState(
-                _update_funnel_day,
-                outputStructType=FUNNEL_DAY_OUTPUT_SCHEMA,
-                stateStructType=FUNNEL_DAY_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"sfunnel_day_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # last emission per (user, day) = max per component (monotone),
-        # then the day-ordered stitch: fold the entry stage through each
-        # day's transition map, entirely JVM-side.
-        maps = spark.table(name).groupBy("user_id", "day").agg(*[
-            F.max(f"e{s}").alias(f"e{s}") for s in range(n_states)
-        ])
-        final = (
-            maps.groupBy("user_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(
-                        "day",
-                        F.array(*[
-                            F.col(f"e{s}") for s in range(n_states)
-                        ]).alias("m"),
-                    ))
-                ).alias("days")
-            )
-            .select(
-                "user_id",
-                F.aggregate(
-                    "days",
-                    F.lit(0),
-                    lambda acc, x: F.element_at(x["m"], acc + 1),
-                ).alias("stage"),
-            )
-        )
-        wide = final.agg(*[
-            F.coalesce(
-                F.sum((F.col("stage") >= k).cast("long")),
-                F.lit(0).cast("long"),
-            ).alias(s)
-            for k, s in enumerate(FUNNEL_STAGES, 1)
-        ])
-        stack = ", ".join(f"'{s}', {s}" for s in FUNNEL_STAGES)
-        funnel = wide.selectExpr(
-            f"stack({len(FUNNEL_STAGES)}, {stack}) AS (stage, users)"
-        )
-        top = funnel.where(
-            F.col("stage") == FUNNEL_STAGES[0]
-        ).select(F.col("users").alias("top_users"))
-        return (
-            funnel.crossJoin(F.broadcast(top))
-            .select(
-                "stage", "users",
-                F.round(F.try_divide("users", "top_users"), 6)
-                .alias("pct_of_top"),
-            )
-            .orderBy(F.col("users").desc(), "stage")
-        )
+    return _funnel_report(final)
 
 
 # ---------------------------------------------------------------------------
@@ -563,6 +460,41 @@ def _update_mg_sketch(key, pdfs, state):
     )
 
 
+#: the documents replay as HH_CHUNKS files, doc_id % HH_CHUNKS each
+HH_CHUNKS = 4
+
+
+def _docs_source(spark, sf_dir: str, path: str):
+    """Documents in ``doc_id % HH_CHUNKS`` chunks. Replay order carries
+    no correctness weight here, but the file count fixes the trigger
+    count, which the per-trigger MG summaries DO depend on."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    write_chunks(
+        docs, path, (F.col("doc_id") % HH_CHUNKS).cast("int"), HH_CHUNKS
+    )
+    return docs.schema, None
+
+
+def _heavy_hitter_updates(stream: DataFrame) -> DataFrame:
+    """Tokens hash-partitioned into HH_BUCKETS Misra-Gries summaries."""
+    tokens = with_tokens(stream).select(
+        F.explode("tokens").alias("token")
+    ).withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("token"), F.lit(HH_BUCKETS)).cast("int"),
+    )
+    return _fold(
+        _update_mg_sketch, HH_OUTPUT_SCHEMA, HH_STATE_SCHEMA, "bucket"
+    )(tokens)
+
+
+#: one state partition per bucket
+HH_REPLAY = FileReplay(
+    _docs_source, _heavy_hitter_updates, "update", width=HH_BUCKETS,
+    keys=("bucket",),
+)
+
+
 def streaming_heavy_hitters(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming heavy hitters: documents replay as a
     4-chunk file stream; per-hash-bucket Misra-Gries counter tables live
@@ -578,97 +510,23 @@ def streaming_heavy_hitters(spark, sf_dir: str) -> DataFrame:
     with count > N/k (per-bucket MG bound), so the confirmed output is
     exact regardless of replay order — chunk order carries no
     correctness weight here, unlike the funnel's in-order replay."""
-    import json as _json
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
+    import json
 
     from ..operators.sketches import HH_K
-    from ..operators.text import with_tokens
-    from ..session import load_table
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    with tempfile.TemporaryDirectory(prefix="shh_") as tmp:
-        path = f"{tmp}/docs_chunks"
-        os.makedirs(path, exist_ok=True)
-        N_CHUNKS = 4
-        t_base = time.time()
-        # ONE partitioned write instead of N_CHUNKS filtered scan+write
-        # jobs (r12, same rewrite as write_time_ordered_chunks: the
-        # per-chunk loop re-scanned the input four times). The explicit
-        # repartition(N, chunk) puts each chunk wholly in one task, so
-        # every __chunk= directory holds exactly ONE file — replay
-        # order carries no correctness weight here (see docstring), but
-        # the file count fixes the trigger count, which the per-trigger
-        # MG summaries DO depend on.
-        import glob as _glob
-        import shutil as _shutil
-
-        staging = f"{tmp}/docs_chunks__staging"
-        (
-            docs.withColumn(
-                "__chunk", (F.col("doc_id") % N_CHUNKS).cast("int")
-            )
-            .repartition(N_CHUNKS, "__chunk")
-            .write.mode("overwrite")
-            .partitionBy("__chunk")
-            .parquet(staging)
-        )
-        for i in range(N_CHUNKS):
-            parts = sorted(
-                _glob.glob(os.path.join(staging, f"__chunk={i}", "*.parquet"))
-            )
-            for j, src in enumerate(parts):
-                dst = os.path.join(path, f"chunk_{i:05d}_{j}.parquet")
-                _shutil.move(src, dst)
-                os.utime(dst, (t_base + i, t_base + i))
-        _shutil.rmtree(staging, ignore_errors=True)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(HH_BUCKETS))
-        try:
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            tokens = with_tokens(stream).select(
-                F.explode("tokens").alias("token")
-            ).withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("token"), F.lit(HH_BUCKETS)).cast("int"),
-            )
-            updates = tokens.groupBy("bucket").applyInPandasWithState(
-                _update_mg_sketch,
-                outputStructType=HH_OUTPUT_SCHEMA,
-                stateStructType=HH_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"shh_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            w = W.partitionBy("bucket").orderBy(F.col("batch").desc())
-            finals = (
-                spark.table(name)
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select("payload", "n_b")
-                .collect()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    name = run_replay(spark, HH_REPLAY, sf_dir)
+    w = W.partitionBy("bucket").orderBy(F.col("batch").desc())
+    finals = (
+        spark.table(name)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("payload", "n_b")
+        .collect()
+    )
     # driver-side scalars only: <= HH_BUCKETS tiny JSON summaries
     n_total = sum(r.n_b for r in finals)
     cand_tokens = sorted(
-        {t for r in finals for t in _json.loads(r.payload)}
+        {t for r in finals for t in json.loads(r.payload)}
     )
     if not cand_tokens:
         return spark.createDataFrame(
@@ -701,115 +559,6 @@ EWMA_OUTPUT_SCHEMA = (
 EWMA_STATE_SCHEMA = "s double, n long, last double"
 
 
-def write_time_ordered_chunks(events: DataFrame, path: str,
-                              n_chunks: int = 6,
-                              key_cols: tuple | None = None):
-    """Write ``events`` as ~n_chunks parquet chunk files whose
-    MODIFICATION times strictly increase in event-time order, so the
-    file-stream source replays them as in-order micro-batches. Chunks
-    cut on an absolute epoch-day bucket derived from the data's actual
-    min/max span (any span, any month boundary), and every file gets an
-    explicit utime — replay order never depends on write latency.
-    Returns the number of chunks written; with ``key_cols`` given, the
-    same bounds scan also estimates the replay's state-key cardinality
-    (``approx_count_distinct`` rides in the one aggregate job, so the
-    width heuristic in ``wide_replay_width`` costs no extra pass) and
-    the return becomes ``(n_chunks, n_keys)``."""
-    from pyspark.sql import functions as F
-
-    import glob
-    import shutil
-
-    day = F.unix_date(F.to_date("ts"))
-    aggs = [F.min(day).alias("lo"), F.max(day).alias("hi")]
-    if key_cols is not None:
-        aggs.append(
-            F.approx_count_distinct(F.struct(*key_cols)).alias("nk")
-        )
-    bounds = events.select(*aggs).first()
-    lo = 0 if bounds.lo is None else int(bounds.lo)
-    hi = lo if bounds.hi is None else int(bounds.hi)
-    width = max(1, -(-(hi - lo + 1) // n_chunks))
-    chunk = F.floor((day - F.lit(lo)) / F.lit(width)).cast("long")
-    n_out = (hi - lo) // width + 1
-    os.makedirs(path, exist_ok=True)
-    t_base = time.time()
-    # ONE partitioned write instead of n_out filtered scan+write jobs
-    # (r12: the per-chunk loop cost ~1.7 s of the replay queries' wall
-    # at sf0.1, all of it re-scanning the same input). The explicit
-    # repartition(n_out, chunk) puts every chunk wholly in one task, so
-    # each __chunk= directory holds exactly ONE file — required: two
-    # files of one chunk would share an mtime and replay in undefined
-    # relative order. NULL-day rows are dropped exactly as the old
-    # per-chunk ``where(chunk == i)`` filters dropped them.
-    staging = path.rstrip("/") + "__staging"
-    (
-        events.withColumn("__chunk", chunk)
-        .where(F.col("__chunk").isNotNull())
-        .repartition(n_out, "__chunk")
-        .write.mode("overwrite")
-        .partitionBy("__chunk")
-        .parquet(staging)
-    )
-    for i in range(n_out):
-        parts = sorted(
-            glob.glob(os.path.join(staging, f"__chunk={i}", "*.parquet"))
-        )
-        for j, src in enumerate(parts):
-            dst = os.path.join(path, f"chunk_{i:05d}_{j}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (t_base + i, t_base + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    if key_cols is not None:
-        return n_out, int(bounds.nk)
-    return n_out
-
-
-#: target state groups per partition for the width heuristic below —
-#: the r12 width sweep on the 1.5k-key EWMA replay measured a U-curve
-#: (8 partitions: 8.4 s, 16: 6.1 s, 32: 7.4 s); ~96 groups/partition
-#: reproduces its optimum and stays far from both failure modes.
-REPLAY_GROUPS_PER_PARTITION = 96
-
-
-def wide_replay_width(spark, n_keys: int | None = None) -> str:
-    """State-shuffle width for a KEY-RICH stateful replay (state keyed
-    per user / (user, day): thousands of groups at bench scale, one per
-    entity at 100 TB).
-
-    Two costs trade off per trigger: every state partition pays a fixed
-    commit (state-store delta file + metadata) whether or not it holds
-    keys, while ``applyInPandasWithState`` pays ~1 ms of Python per
-    GROUP serially within a partition. With single-digit key counts the
-    commit tax dominates — those replays pin a narrow width of 8 (r9
-    measurement: 32 partitions on a 2-key profile replay wasted
-    ~1.3 s/query; re-confirmed r12: the few-key and JVM-state replays
-    all ran slower at 32).
-
-    For the key-rich Python replays the width is DERIVED FROM THE
-    MEASURED KEY COUNT (guide §2: scale partitioning from the data,
-    not a constant): ``n_keys / REPLAY_GROUPS_PER_PARTITION``, clamped
-    to [8, session width]. When the session is narrower than 8 the
-    floor wins, so every key-rich replay runs 8 wide; the r12 width
-    measurements were all taken at session width 32 and do not cover
-    that case. The r12 per-trigger breakdown
-    (q.recentProgress durationMs) showed why neither extreme wins: at
-    the session width (32) the aggregate per-trigger state-store
-    commit was 5-8 s vs 0.6-1.0 s at 16 — the commit tax is
-    super-linear in empty-ish partitions — while at 8 the serial
-    per-group Python fold under-parallelizes (width sweep:
-    8.4/6.1/7.4 s at 8/16/32 on the 1.5k-key EWMA replay). At 100 TB
-    the entity count (millions+) saturates the clamp to the session
-    width, so the cluster deployment still gets full parallelism and
-    the knob frozen into the checkpoint is the right one; callers
-    without a key estimate keep the session width."""
-    session_w = spark.conf.get("spark.sql.shuffle.partitions")
-    if n_keys is None:
-        return session_w
-    want = -(-int(n_keys) // REPLAY_GROUPS_PER_PARTITION)
-    return str(max(8, min(int(session_w), want)))
-
-
 def _update_ewma(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
@@ -821,8 +570,6 @@ def _update_ewma(
     same α/β literals as the batch ``ewma_smooth`` codegen expression,
     so chunked streaming folding is bitwise identical to the one-shot
     batch fold — which is what lets the stream share the batch oracle."""
-    from ..operators.advanced import EWMA_ALPHA, EWMA_BETA
-
     if state.exists:
         s, n, last = state.get
     else:
@@ -844,6 +591,15 @@ def _update_ewma(
     )
 
 
+EWMA_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "ts", "value",
+                   key_cols=("user_id",)),
+    _fold(_update_ewma, EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA, "user_id"),
+    "update",
+    keys=("user_id",),
+)
+
+
 def streaming_ewma(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming EWMA: events replay as a time-ordered
     multi-trigger file stream; per-user (ewma, n, last) state folds the
@@ -855,74 +611,32 @@ def streaming_ewma(spark, sf_dir: str) -> DataFrame:
 
     Scale shape: per-trigger work is one user-keyed shuffle into the
     stateful operator; state is three scalars per user, forever."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
+    name = run_replay(spark, EWMA_REPLAY, sf_dir)
+    # n_events strictly increases per update, so the per-user final
+    # state is the struct-max on (n_events, ...) — no window needed
+    final = (
+        spark.table(name)
+        .groupBy("user_id")
+        .agg(
+            F.max(
+                F.struct("n_events", "last_value", "ewma")
+            ).alias("fin")
+        )
     )
-    with tempfile.TemporaryDirectory(prefix="sewma_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        _, n_keys = write_time_ordered_chunks(
-            events, path, key_cols=("user_id",)
+    # floor-based 6-dp rounding to match the batch twin and the
+    # shared oracle (see ewma_smooth: round() disagrees between
+    # engines within an ulp of a half boundary; floor(x*1e6+0.5)
+    # is deterministic on identical doubles)
+    return (
+        final.select(
+            "user_id",
+            F.col("fin.n_events").alias("n_events"),
+            F.col("fin.last_value").alias("last_value"),
+            (F.floor(F.col("fin.ewma") * F.lit(1e6) + F.lit(0.5))
+             / F.lit(1e6)).alias("ewma"),
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", wide_replay_width(spark, n_keys)
-        )
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            updates = stream.groupBy("user_id").applyInPandasWithState(
-                _update_ewma,
-                outputStructType=EWMA_OUTPUT_SCHEMA,
-                stateStructType=EWMA_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"sewma_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # n_events strictly increases per update, so the per-user final
-        # state is the struct-max on (n_events, ...) — no window needed
-        final = (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("n_events", "last_value", "ewma")
-                ).alias("fin")
-            )
-        )
-        # floor-based 6-dp rounding to match the batch twin and the
-        # shared oracle (see ewma_smooth: round() disagrees between
-        # engines within an ulp of a half boundary; floor(x*1e6+0.5)
-        # is deterministic on identical doubles)
-        return (
-            final.select(
-                "user_id",
-                F.col("fin.n_events").alias("n_events"),
-                F.col("fin.last_value").alias("last_value"),
-                (F.floor(F.col("fin.ewma") * F.lit(1e6) + F.lit(0.5))
-                 / F.lit(1e6)).alias("ewma"),
-            )
-            .orderBy("user_id")
-        )
+        .orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -977,6 +691,27 @@ def _update_group_sample(
     )
 
 
+def _group_sample_updates(stream: DataFrame) -> DataFrame:
+    """Content hashes ranked JVM-side, then the per-type bottom-k fold."""
+    hashed = stream.select(
+        "event_type", "event_id", "value",
+        md5h("cast(event_id as string)").alias("h"),
+    )
+    return _fold(
+        _update_group_sample, GS_OUTPUT_SCHEMA, GS_STATE_SCHEMA,
+        "event_type",
+    )(hashed)
+
+
+GROUP_SAMPLE_REPLAY = FileReplay(
+    _events_source("event_type", "event_id", "ts", "value"),
+    _group_sample_updates,
+    "update",
+    width=8,
+    keys=("event_type",),
+)
+
+
 def streaming_group_sample(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming per-group sample: events replay as a
     time-ordered multi-trigger file stream; each type's state holds only
@@ -989,108 +724,43 @@ def streaming_group_sample(spark, sf_dir: str) -> DataFrame:
     Scale shape: per-trigger work is one bounded-key shuffle into the
     stateful operator; the hash ranks are computed JVM-side before
     Python sees anything."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.text import md5h
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_type", "event_id", "ts", "value"
+    name = run_replay(spark, GROUP_SAMPLE_REPLAY, sf_dir)
+    w = W.partitionBy("event_type")
+    return (
+        spark.table(name)
+        .withColumn("_max_seen", F.max("n_seen").over(w))
+        .where(F.col("n_seen") == F.col("_max_seen"))
+        .select("event_type", "rn", "event_id", "value")
+        .orderBy("event_type", "rn")
     )
-    with tempfile.TemporaryDirectory(prefix="sgsamp_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        write_time_ordered_chunks(events, path)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-                .select(
-                    "event_type", "event_id", "value",
-                    md5h("cast(event_id as string)").alias("h"),
-                )
-            )
-            updates = stream.groupBy("event_type").applyInPandasWithState(
-                _update_group_sample,
-                outputStructType=GS_OUTPUT_SCHEMA,
-                stateStructType=GS_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"sgsamp_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("event_type")
-        return (
-            spark.table(name)
-            .withColumn("_max_seen", F.max("n_seen").over(w))
-            .where(F.col("n_seen") == F.col("_max_seen"))
-            .select("event_type", "rn", "event_id", "value")
-            .orderBy("event_type", "rn")
-        )
 
 
 # ---------------------------------------------------------------------------
 # Watermarked late-data handling: deterministic drop/emit accounting (T5)
 # ---------------------------------------------------------------------------
 
-LATE_CHUNKS = 4
 LATE_DELAY_US = 3_600_000_000  # 1 hour watermark delay
 
 
-def write_interleaved_chunks(events: DataFrame, path: str,
-                             n_chunks: int = LATE_CHUNKS) -> None:
-    """Write events as chunks interleaved by ``event_id % n_chunks``
-    with strictly increasing mtimes: every chunk spans the full time
-    range, so each replayed micro-batch delivers data that is LATE
-    relative to the watermark raised by the previous ones — the adverse
-    arrival order the late-data contract is about."""
-    from pyspark.sql import functions as F
-
-    import glob
-    import shutil
-
-    os.makedirs(path, exist_ok=True)
-    t_base = time.time()
-    # ONE partitioned write instead of n_chunks filtered scan+write jobs
-    # (r12, same rewrite as write_time_ordered_chunks): repartition on
-    # the chunk id so each __chunk= directory holds exactly ONE file —
-    # the file count fixes the trigger count, and which rows share a
-    # micro-batch (event_id % n_chunks) is the late-data contract.
-    staging = path.rstrip("/") + "__staging"
-    (
-        events.withColumn(
-            "__chunk", (F.col("event_id") % n_chunks).cast("int")
+def _late_data_agg(stream: DataFrame) -> DataFrame:
+    """1-day tumbling windows per type behind a 1-hour watermark."""
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.round(F.sum("value"), 6).alias("sum_v"),
         )
-        .repartition(n_chunks, "__chunk")
-        .write.mode("overwrite")
-        .partitionBy("__chunk")
-        .parquet(staging)
     )
-    for i in range(n_chunks):
-        parts = sorted(
-            glob.glob(os.path.join(staging, f"__chunk={i}", "*.parquet"))
-        )
-        for j, src in enumerate(parts):
-            dst = os.path.join(path, f"chunk_{i:05d}_{j}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (t_base + i, t_base + i))
-    shutil.rmtree(staging, ignore_errors=True)
+
+
+LATE_DATA_REPLAY = FileReplay(
+    _events_source("event_id", "ts", "event_type", "value",
+                   interleaved=True),
+    _late_data_agg,
+    "append",
+    width=8,
+)
 
 
 def streaming_late_data(spark, sf_dir: str) -> DataFrame:
@@ -1110,56 +780,17 @@ def streaming_late_data(spark, sf_dir: str) -> DataFrame:
     - a (window, key) group is EMITTED iff its window end ≤ the final
       watermark (still-open windows stay in state, unemitted).
     """
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    with tempfile.TemporaryDirectory(prefix="slate_") as tmp:
-        path = f"{tmp}/events_interleaved"
-        write_interleaved_chunks(events, path)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            agg = (
-                stream.withWatermark("ts", "1 hour")
-                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.round(F.sum("value"), 6).alias("sum_v"),
-                )
-            )
-            name = f"slate_{uuid.uuid4().hex[:8]}"
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            spark.table(name)
-            .select(
-                F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-                "event_type",
-                "cnt",
-                "sum_v",
-            )
-            .orderBy("window_start_ms", "event_type")
+    name = run_replay(spark, LATE_DATA_REPLAY, sf_dir)
+    return (
+        spark.table(name)
+        .select(
+            F.unix_millis(F.col("w.start")).alias("window_start_ms"),
+            "event_type",
+            "cnt",
+            "sum_v",
         )
+        .orderBy("window_start_ms", "event_type")
+    )
 
 
 STREAMING_LATE_DATA_ORACLE = f"""
@@ -1194,6 +825,55 @@ ORDER BY 1, 2
 # Streaming incremental upsert: foreachBatch MERGE with A/B table flip
 # ---------------------------------------------------------------------------
 
+UPSERT_FEED_SCHEMA = "event_id long, cents long, src string"
+
+
+def upsert_source(spark, sf_dir: str, path: str) -> DataFrame:
+    """Write ``upsert_merge``'s update feed (orders from 1997-01-01,
+    urgent repriced in integer cents, keyed ``event_id``) under ``path``
+    as interleaved chunks; return the base table it merges into."""
+    orders = load_table(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    base = orders.where(
+        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
+    ).select(
+        "o_orderkey", cents.alias("cents"), F.lit("keep").alias("action")
+    )
+    updates = orders.where(
+        F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
+    ).select(
+        F.col("o_orderkey").alias("event_id"),
+        F.when(
+            F.col("o_orderpriority") == "1-URGENT",
+            F.expr("cast(cast(round(o_totalprice * 100) as bigint) "
+                   "* 11 div 10 as bigint)"),
+        ).otherwise(cents).alias("cents"),
+        F.lit("upd").alias("src"),
+    )
+    write_interleaved_chunks(updates, path)
+    return base
+
+
+def merge_upsert(current: DataFrame, batch: DataFrame) -> DataFrame:
+    """One MERGE step: the feed batch full-outer-joined onto the current
+    table. Action labels persist, so 'update' survives later batches
+    that do not touch the key."""
+    b = batch.select(
+        F.col("event_id").alias("o_orderkey"),
+        F.col("cents").alias("cents_u"),
+    )
+    return (
+        current.join(b, "o_orderkey", "full")
+        .select(
+            "o_orderkey",
+            F.coalesce("cents_u", "cents").alias("cents"),
+            F.when(F.col("cents").isNull(), "insert")
+            .when(F.col("cents_u").isNotNull(), "update")
+            .otherwise(F.col("action")).alias("action"),
+        )
+    )
+
+
 def streaming_upsert(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED incremental materialized upsert: the update feed
     of ``upsert_merge`` (orders from 1997-01-01, urgent repriced)
@@ -1210,71 +890,22 @@ def streaming_upsert(spark, sf_dir: str) -> DataFrame:
     isolation; a table format would give this via versioned commits).
     Action labels persist so 'update' survives later keep-only batches.
     """
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..session import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    base = orders.where(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    ).select(
-        "o_orderkey", cents.alias("cents"), F.lit("keep").alias("action")
-    )
-    updates = orders.where(
-        F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
-    ).select(
-        "o_orderkey",
-        F.when(
-            F.col("o_orderpriority") == "1-URGENT",
-            F.expr("cast(cast(round(o_totalprice * 100) as bigint) "
-                   "* 11 div 10 as bigint)"),
-        ).otherwise(cents).alias("cents"),
-        F.lit("upd").alias("src"),
-    )
     with tempfile.TemporaryDirectory(prefix="supsert_") as tmp:
         feed = f"{tmp}/feed"
-        write_interleaved_chunks(
-            updates.withColumnRenamed("o_orderkey", "event_id"), feed
-        )
         state = [f"{tmp}/state_a", f"{tmp}/state_b"]
-        base.write.mode("overwrite").parquet(state[0])
+        upsert_source(spark, sf_dir, feed).write.mode("overwrite").parquet(
+            state[0]
+        )
         cur = [0]
 
         def merge_batch(batch, _id):
-            b = (
-                batch.withColumnRenamed("event_id", "o_orderkey")
-                .select(
-                    "o_orderkey",
-                    F.col("cents").alias("cents_u"),
-                )
-            )
-            cur_tbl = spark.read.parquet(state[cur[0]])
-            merged = (
-                cur_tbl.join(b, "o_orderkey", "full")
-                .select(
-                    "o_orderkey",
-                    F.coalesce("cents_u", "cents").alias("cents"),
-                    F.when(
-                        F.col("cents").isNull(), "insert"
-                    ).when(
-                        F.col("cents_u").isNotNull(), "update"
-                    ).otherwise(F.col("action")).alias("action"),
-                )
-            )
+            merged = merge_upsert(spark.read.parquet(state[cur[0]]), batch)
             merged.write.mode("overwrite").parquet(state[1 - cur[0]])
             cur[0] = 1 - cur[0]
 
-        stream = (
-            spark.readStream.schema("event_id long, cents long, src string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
         q = (
-            stream.writeStream.foreachBatch(merge_batch)
+            read_replay(spark, UPSERT_FEED_SCHEMA, feed)
+            .writeStream.foreachBatch(merge_batch)
             .trigger(availableNow=True)
             .start()
         )
@@ -1283,8 +914,6 @@ def streaming_upsert(spark, sf_dir: str) -> DataFrame:
         # path and re-read it lazily: no O(state) driver collect
         # (VERDICT r4), and the result stays valid after the replay's
         # TemporaryDirectory vanishes
-        from ..session import session_scratch_dir
-
         durable = session_scratch_dir(spark, "supsert_final_")
         os.rename(state[cur[0]], durable)
         return spark.read.parquet(durable).select(
@@ -1295,6 +924,29 @@ def streaming_upsert(spark, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming sessionization: native session_window across triggers
 # ---------------------------------------------------------------------------
+
+def _session_agg(stream: DataFrame) -> DataFrame:
+    """Native ``session_window`` per user behind a zero-delay watermark."""
+    return (
+        stream.withWatermark("ts", "0 seconds")
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_v"),
+        )
+    )
+
+
+#: r12 width A/B (interleaved, 4 reps at sf0.1): 4 beats 8 on every rep
+#: for the sessionize, sliding and top-k replays — the per-trigger state
+#: commit tax outweighs the extra parallelism at these key profiles
+SESSIONIZE_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "ts", "value"),
+    _session_agg,
+    "append",
+    width=4,
+)
+
 
 def streaming_sessionize(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming sessionization: events replay as
@@ -1308,64 +960,49 @@ def streaming_sessionize(spark, sf_dir: str) -> DataFrame:
 
     Scale shape: per-trigger work is one user-keyed shuffle into the
     session-state operator; state holds only open sessions."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.advanced import SESSION_GAP
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    with tempfile.TemporaryDirectory(prefix="ssess_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        write_time_ordered_chunks(events, path)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        # r12 width A/B (interleaved, 4 reps at sf0.1): 4 beats 8 on
-        # every rep here — the per-trigger state commit tax outweighs
-        # the extra parallelism at this key profile
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            agg = (
-                stream.withWatermark("ts", "0 seconds")
-                .groupBy(
-                    F.session_window("ts", SESSION_GAP).alias("sw"),
-                    "user_id",
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.round(F.sum("value"), 6).alias("sum_v"),
-                )
-            )
-            name = f"ssess_{uuid.uuid4().hex[:8]}"
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            spark.table(name)
-            .select(
-                "user_id",
-                F.unix_millis(F.col("sw.start")).alias("session_start_ms"),
-                F.unix_millis(F.col("sw.end")).alias("session_end_ms"),
-                "n_events",
-                "sum_v",
-            )
-            .orderBy("user_id", "session_start_ms")
+    name = run_replay(spark, SESSIONIZE_REPLAY, sf_dir)
+    return (
+        spark.table(name)
+        .select(
+            "user_id",
+            F.unix_millis(F.col("sw.start")).alias("session_start_ms"),
+            F.unix_millis(F.col("sw.end")).alias("session_end_ms"),
+            "n_events",
+            "sum_v",
         )
+        .orderBy("user_id", "session_start_ms")
+    )
+
+
+#: append-mode session_window emits exactly the batch gap-islands
+#: sessions whose end precedes the final watermark
+STREAMING_SESSIONIZE_ORACLE = f"""
+WITH ordered AS (
+  SELECT user_id, epoch_ms(ts) AS t, value,
+         lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+           AS prev_t
+  FROM events),
+marked AS (
+  SELECT user_id, t, value,
+         CASE WHEN prev_t IS NULL OR t - prev_t > {SESSION_GAP_MS}
+              THEN 1 ELSE 0 END AS ns
+  FROM ordered),
+islands AS (
+  SELECT user_id, t, value,
+         sum(ns) OVER (PARTITION BY user_id ORDER BY t
+                       ROWS UNBOUNDED PRECEDING) AS sn
+  FROM marked),
+sess AS (
+  SELECT user_id, min(t) AS session_start_ms,
+         max(t) + {SESSION_GAP_MS} AS session_end_ms,
+         count(*) AS n_events, round(sum(value), 6) AS sum_v
+  FROM islands GROUP BY user_id, sn),
+fwm AS (SELECT max(epoch_ms(ts)) AS m FROM events)
+SELECT user_id, session_start_ms, session_end_ms, n_events, sum_v
+FROM sess CROSS JOIN fwm
+WHERE session_end_ms <= m
+ORDER BY user_id, session_start_ms
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1394,8 +1031,6 @@ def _update_sessions_day(
     full sub-session list stays in state (bounded: a day holds at most
     day_ms / gap_ms + 1 sessions) and is re-emitted each trigger, so the
     reader takes the max-``n_total`` emission per key."""
-    from ..operators.advanced import SESSION_GAP_MS
-
     if state.exists:
         starts, lasts, ns, sums, n_total = state.get
         starts, lasts = list(starts), list(lasts)
@@ -1428,6 +1063,16 @@ def _update_sessions_day(
             "sums": [sums],
         }
     )
+
+
+SESSIONIZE_DAY_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "ts", "value", DAY_SQL,
+                   key_cols=("user_id", "day")),
+    _fold(_update_sessions_day, SESS_DAY_OUTPUT_SCHEMA,
+          SESS_DAY_STATE_SCHEMA, "user_id", "day"),
+    "update",
+    keys=("user_id", "day"),
+)
 
 
 def streaming_sessionize_daykeyed(spark, sf_dir: str) -> DataFrame:
@@ -1476,121 +1121,99 @@ def streaming_sessionize_daykeyed(spark, sf_dir: str) -> DataFrame:
     on a cluster where the day sub-keys would spread across
     executors); the skew90 tier measures this pair's walls each round
     alongside the funnel's."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    from ..operators.advanced import SESSION_GAP_MS
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value",
-        F.unix_date(F.to_date("ts")).cast("int").alias("day"),
+    name = run_replay(spark, SESSIONIZE_DAY_REPLAY, sf_dir)
+    # final watermark = global max event time (zero-delay watermark)
+    fwm_ms = load_table(spark, sf_dir, "events").agg(
+        F.max(F.unix_millis("ts")).alias("m")
+    ).first().m
+    if fwm_ms is None:
+        return spark.createDataFrame(
+            [],
+            "user_id long, session_start_ms long, session_end_ms "
+            "long, n_events long, sum_v double",
+        )
+    # last emission per (user, day) = max n_total (monotone), then
+    # explode the sub-session list into session-cardinality rows
+    kw = W.partitionBy("user_id", "day")
+    subs = (
+        spark.table(name)
+        .withColumn("_mx", F.max("n_total").over(kw))
+        .where(F.col("n_total") == F.col("_mx"))
+        .select(
+            "user_id",
+            F.explode(
+                F.arrays_zip("starts", "lasts", "ns", "sums")
+            ).alias("s"),
+        )
+        .select(
+            "user_id",
+            F.col("s.starts").alias("start_ms"),
+            (F.col("s.lasts") + F.lit(SESSION_GAP_MS)).alias("end_ms"),
+            F.col("s.ns").alias("n_events"),
+            F.col("s.sums").alias("sum_raw"),
+        )
     )
-    with tempfile.TemporaryDirectory(prefix="ssess_day_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        _, n_keys = write_time_ordered_chunks(
-            events, path, key_cols=("user_id", "day")
+    # session-level islands stitch: one window pass over session rows
+    uw = W.partitionBy("user_id").orderBy("start_ms")
+    chained = (
+        subs.withColumn("_prev_end", F.lag("end_ms").over(uw))
+        .withColumn(
+            "_new",
+            (
+                F.col("_prev_end").isNull()
+                | (F.col("start_ms") > F.col("_prev_end"))
+            ).cast("int"),
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", wide_replay_width(spark, n_keys)
+        .withColumn(
+            "_chain",
+            F.sum("_new").over(
+                uw.rowsBetween(W.unboundedPreceding, 0)
+            ),
         )
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            updates = stream.groupBy("user_id", "day").applyInPandasWithState(
-                _update_sessions_day,
-                outputStructType=SESS_DAY_OUTPUT_SCHEMA,
-                stateStructType=SESS_DAY_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"ssess_day_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # final watermark = global max event time (zero-delay watermark)
-        fwm_ms = events.agg(
-            F.max(F.unix_millis("ts")).alias("m")
-        ).first().m
-        if fwm_ms is None:
-            return spark.createDataFrame(
-                [],
-                "user_id long, session_start_ms long, session_end_ms "
-                "long, n_events long, sum_v double",
-            )
-        # last emission per (user, day) = max n_total (monotone), then
-        # explode the sub-session list into session-cardinality rows
-        kw = W.partitionBy("user_id", "day")
-        subs = (
-            spark.table(name)
-            .withColumn("_mx", F.max("n_total").over(kw))
-            .where(F.col("n_total") == F.col("_mx"))
-            .select(
-                "user_id",
-                F.explode(
-                    F.arrays_zip("starts", "lasts", "ns", "sums")
-                ).alias("s"),
-            )
-            .select(
-                "user_id",
-                F.col("s.starts").alias("start_ms"),
-                (F.col("s.lasts") + F.lit(SESSION_GAP_MS)).alias("end_ms"),
-                F.col("s.ns").alias("n_events"),
-                F.col("s.sums").alias("sum_raw"),
-            )
+    )
+    return (
+        chained.groupBy("user_id", "_chain")
+        .agg(
+            F.min("start_ms").alias("session_start_ms"),
+            F.max("end_ms").alias("session_end_ms"),
+            F.sum("n_events").alias("n_events"),
+            F.round(F.sum("sum_raw"), 6).alias("sum_v"),
         )
-        # session-level islands stitch: one window pass over session rows
-        uw = W.partitionBy("user_id").orderBy("start_ms")
-        chained = (
-            subs.withColumn("_prev_end", F.lag("end_ms").over(uw))
-            .withColumn(
-                "_new",
-                (
-                    F.col("_prev_end").isNull()
-                    | (F.col("start_ms") > F.col("_prev_end"))
-                ).cast("int"),
-            )
-            .withColumn(
-                "_chain",
-                F.sum("_new").over(
-                    uw.rowsBetween(W.unboundedPreceding, 0)
-                ),
-            )
+        .where(F.col("session_end_ms") <= F.lit(int(fwm_ms)))
+        .select(
+            "user_id", "session_start_ms", "session_end_ms",
+            "n_events", "sum_v",
         )
-        return (
-            chained.groupBy("user_id", "_chain")
-            .agg(
-                F.min("start_ms").alias("session_start_ms"),
-                F.max("end_ms").alias("session_end_ms"),
-                F.sum("n_events").alias("n_events"),
-                F.round(F.sum("sum_raw"), 6).alias("sum_v"),
-            )
-            .where(F.col("session_end_ms") <= F.lit(int(fwm_ms)))
-            .select(
-                "user_id", "session_start_ms", "session_end_ms",
-                "n_events", "sum_v",
-            )
-            .orderBy("user_id", "session_start_ms")
-        )
+        .orderBy("user_id", "session_start_ms")
+    )
 
 
 # ---------------------------------------------------------------------------
 # Streaming sliding (hopping) windows: append-mode emission, oracle-checked
 # ---------------------------------------------------------------------------
+
+def _sliding_agg(stream: DataFrame) -> DataFrame:
+    """10-minute windows every 5 minutes per type, zero-delay watermark."""
+    return (
+        stream.withWatermark("ts", "0 seconds")
+        .groupBy(
+            F.window("ts", "10 minutes", "5 minutes").alias("w"),
+            "event_type",
+        )
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.round(F.sum("value"), 6).alias("sum_v"),
+        )
+    )
+
+
+SLIDING_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "ts", "value", "event_type"),
+    _sliding_agg,
+    "append",
+    width=4,
+)
+
 
 def streaming_sliding_stats(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming sliding windows: 10-minute windows every
@@ -1605,62 +1228,17 @@ def streaming_sliding_stats(spark, sf_dir: str) -> DataFrame:
     Scale shape: per-trigger work is the map-side window expansion plus
     one keyed shuffle into window state; state holds only the ≤2
     still-open hops."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value", "event_type"
-    )
-    with tempfile.TemporaryDirectory(prefix="sslide_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        write_time_ordered_chunks(events, path)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        # r12 width A/B (interleaved, 4 reps at sf0.1): 4 beats 8 on
-        # every rep here — the per-trigger state commit tax outweighs
-        # the extra parallelism at this key profile
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            agg = (
-                stream.withWatermark("ts", "0 seconds")
-                .groupBy(
-                    F.window("ts", "10 minutes", "5 minutes").alias("w"),
-                    "event_type",
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.round(F.sum("value"), 6).alias("sum_v"),
-                )
-            )
-            name = f"sslide_{uuid.uuid4().hex[:8]}"
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            spark.table(name)
-            .select(
-                F.unix_timestamp(F.col("w.start")).alias("window_start"),
-                "event_type",
-                "cnt",
-                "sum_v",
-            )
-            .orderBy("window_start", "event_type")
+    name = run_replay(spark, SLIDING_REPLAY, sf_dir)
+    return (
+        spark.table(name)
+        .select(
+            F.unix_timestamp(F.col("w.start")).alias("window_start"),
+            "event_type",
+            "cnt",
+            "sum_v",
         )
+        .orderBy("window_start", "event_type")
+    )
 
 
 STREAMING_SLIDING_STATS_ORACLE = """
@@ -1744,74 +1322,42 @@ def _update_latest_state(
     yield pd.DataFrame(out)
 
 
+LATEST_STATE_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "ts", "event_type", "value",
+                   key_cols=("user_id",)),
+    _fold(_update_latest_state, LS_OUTPUT_SCHEMA, LS_STATE_SCHEMA,
+          "user_id"),
+    "update",
+    keys=("user_id",),
+)
+
+
 def streaming_latest_state(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming golden record: per-user latest value per
     event type maintained in ``applyInPandasWithState`` across a
     time-ordered replay — the continuously-current materialized state
     the batch ``latest_state_pivot`` computes in one pass, shared
     oracle proves batch == stream. State is 5 small cells per user."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "event_type", "value"
+    name = run_replay(spark, LATEST_STATE_REPLAY, sf_dir)
+    w_cols = [f"last_{t}" for t in LS_TYPES]
+    final = (
+        spark.table(name)
+        .groupBy("user_id")
+        .agg(
+            F.max(
+                F.struct("upd", "last_seen_ms", *w_cols)
+            ).alias("f")
+        )
     )
-    with tempfile.TemporaryDirectory(prefix="sls_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        _, n_keys = write_time_ordered_chunks(
-            events, path, key_cols=("user_id",)
+    return (
+        final.select(
+            "user_id",
+            F.col("f.last_seen_ms").alias("last_seen_ms"),
+            *[F.col(f"f.last_{t}").alias(f"last_{t}")
+              for t in LS_TYPES],
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", wide_replay_width(spark, n_keys)
-        )
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            updates = stream.groupBy("user_id").applyInPandasWithState(
-                _update_latest_state,
-                outputStructType=LS_OUTPUT_SCHEMA,
-                stateStructType=LS_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"sls_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        w_cols = [f"last_{t}" for t in LS_TYPES]
-        final = (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("upd", "last_seen_ms", *w_cols)
-                ).alias("f")
-            )
-        )
-        return (
-            final.select(
-                "user_id",
-                F.col("f.last_seen_ms").alias("last_seen_ms"),
-                *[F.col(f"f.last_{t}").alias(f"last_{t}")
-                  for t in LS_TYPES],
-            )
-            .orderBy("user_id")
-        )
+        .orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1819,6 +1365,23 @@ def streaming_latest_state(spark, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 TOPK_USERS_K = 20
+
+
+def _purchase_counts(stream: DataFrame) -> DataFrame:
+    """Running purchase count per user (complete mode)."""
+    return (
+        stream.where(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_purchases"))
+    )
+
+
+TOPK_REPLAY = FileReplay(
+    _events_source("user_id", "event_id", "ts", "event_type"),
+    _purchase_counts,
+    "complete",
+    width=4,
+)
 
 
 def streaming_topk_users(spark, sf_dir: str) -> DataFrame:
@@ -1832,57 +1395,17 @@ def streaming_topk_users(spark, sf_dir: str) -> DataFrame:
     shuffle is user-keyed); the rank runs on the final counter table,
     which is node-cardinality. Ties break on user_id so the cut at k is
     deterministic in both engines."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "event_type"
+    name = run_replay(spark, TOPK_REPLAY, sf_dir)
+    ranked = spark.table(name).select(
+        "user_id", "n_purchases",
+        F.row_number().over(
+            W.orderBy(F.col("n_purchases").desc(), F.col("user_id"))
+        ).alias("rnk"),
     )
-    with tempfile.TemporaryDirectory(prefix="stopk_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        write_time_ordered_chunks(events, path)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        # r12 width A/B (interleaved, 4 reps at sf0.1): 4 beats 8 on
-        # every rep here — the per-trigger state commit tax outweighs
-        # the extra parallelism at this key profile
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
-            counts = (
-                stream.where(F.col("event_type") == "purchase")
-                .groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n_purchases"))
-            )
-            name = f"stopk_{uuid.uuid4().hex[:8]}"
-            q = (
-                counts.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        ranked = spark.table(name).select(
-            "user_id", "n_purchases",
-            F.row_number().over(
-                W.orderBy(F.col("n_purchases").desc(), F.col("user_id"))
-            ).alias("rnk"),
-        )
-        return (
-            ranked.where(F.col("rnk") <= TOPK_USERS_K)
-            .orderBy("rnk")
-        )
+    return (
+        ranked.where(F.col("rnk") <= TOPK_USERS_K)
+        .orderBy("rnk")
+    )
 
 
 STREAMING_TOPK_USERS_ORACLE = f"""
@@ -1942,6 +1465,25 @@ def _update_kmv(
     )
 
 
+def _kmv_updates(stream: DataFrame) -> DataFrame:
+    """User-id hashes computed JVM-side, then the per-type bottom-k fold."""
+    hashed = stream.select(
+        "event_type", md5h("cast(user_id as string)").alias("h")
+    )
+    return _fold(
+        _update_kmv, SKMV_OUTPUT_SCHEMA, SKMV_STATE_SCHEMA, "event_type"
+    )(hashed)
+
+
+KMV_REPLAY = FileReplay(
+    _events_source("event_type", "ts", "user_id"),
+    _kmv_updates,
+    "update",
+    width=8,
+    keys=("event_type",),
+)
+
+
 def streaming_kmv_distinct(spark, sf_dir: str) -> DataFrame:
     """ORACLE-CHECKED streaming distinct-user estimator: events replay
     as a time-ordered multi-trigger file stream; each type's state is
@@ -1957,71 +1499,26 @@ def streaming_kmv_distinct(spark, sf_dir: str) -> DataFrame:
     Scale shape: hashes are computed JVM-side before Python sees rows;
     per-trigger work is one bounded-key shuffle into the stateful
     operator."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.text import md5h
-    from ..session import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_type", "ts", "user_id"
-    )
-    with tempfile.TemporaryDirectory(prefix="skmv_") as tmp:
-        path = f"{tmp}/events_by_ts"
-        write_time_ordered_chunks(events, path)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-                .select(
-                    "event_type",
-                    md5h("cast(user_id as string)").alias("h"),
-                )
-            )
-            updates = stream.groupBy("event_type").applyInPandasWithState(
-                _update_kmv,
-                outputStructType=SKMV_OUTPUT_SCHEMA,
-                stateStructType=SKMV_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            name = f"skmv_{uuid.uuid4().hex[:8]}"
-            q = (
-                updates.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("event_type")
-        return (
-            spark.table(name)
-            .withColumn("_max_seen", F.max("n_seen").over(w))
-            .where(F.col("n_seen") == F.col("_max_seen"))
-            # a type with < K distinct users has no k-th order statistic;
-            # the oracle's inner join on `kth` drops it, so we must too
-            .where(F.col("h_k").isNotNull())
-            .select(
-                "event_type",
-                "n_seen",
-                "h_k",
-                F.expr(
-                    f"cast(floor({_SKMV_NUM} / cast(h_k as double))"
-                    " as bigint)"
-                ).alias("kmv_est"),
-            )
-            .orderBy("event_type")
+    name = run_replay(spark, KMV_REPLAY, sf_dir)
+    w = W.partitionBy("event_type")
+    return (
+        spark.table(name)
+        .withColumn("_max_seen", F.max("n_seen").over(w))
+        .where(F.col("n_seen") == F.col("_max_seen"))
+        # a type with < K distinct users has no k-th order statistic;
+        # the oracle's inner join on `kth` drops it, so we must too
+        .where(F.col("h_k").isNotNull())
+        .select(
+            "event_type",
+            "n_seen",
+            "h_k",
+            F.expr(
+                f"cast(floor({_SKMV_NUM} / cast(h_k as double))"
+                " as bigint)"
+            ).alias("kmv_est"),
         )
+        .orderBy("event_type")
+    )
 
 
 STREAMING_KMV_DISTINCT_ORACLE = f"""
@@ -2043,3 +1540,20 @@ SELECT n.event_type, n.n_seen, k.h_k,
 FROM n JOIN kth k ON n.event_type = k.event_type
 ORDER BY 1
 """
+
+
+#: the memory-sink registry replays by registry name (streaming_upsert is
+#: the foreachBatch MERGE loop above)
+REPLAYS = {
+    "streaming_stateful_totals": TOTALS_REPLAY,
+    "streaming_funnel": FUNNEL_REPLAY,
+    "streaming_heavy_hitters": HH_REPLAY,
+    "streaming_ewma": EWMA_REPLAY,
+    "streaming_group_sample": GROUP_SAMPLE_REPLAY,
+    "streaming_late_data": LATE_DATA_REPLAY,
+    "streaming_sessionize": SESSIONIZE_REPLAY,
+    "streaming_sliding_stats": SLIDING_REPLAY,
+    "streaming_latest_state": LATEST_STATE_REPLAY,
+    "streaming_topk_users": TOPK_REPLAY,
+    "streaming_kmv_distinct": KMV_REPLAY,
+}

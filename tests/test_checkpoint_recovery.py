@@ -135,16 +135,13 @@ def test_stateful_ewma_state_survives_restart(spark):
     the same checkpoint, and every user updated after the restart must
     land on EXACTLY the batch fold's (n_events, ewma) — impossible
     unless the pre-restart fold state was recovered bit-for-bit."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from spark_streaming_testbed_spark.operators.advanced import ewma_smooth
     from spark_streaming_testbed_spark.session import load_table
-    from spark_streaming_testbed_spark.streaming.stateful import (
-        EWMA_OUTPUT_SCHEMA,
-        EWMA_STATE_SCHEMA,
-        _update_ewma,
+    from spark_streaming_testbed_spark.streaming.replay import (
+        read_replay,
         write_time_ordered_chunks,
     )
+    from spark_streaming_testbed_spark.streaming.stateful import EWMA_REPLAY
 
     sf = "/root/testdata/sf0.001"
     events = load_table(spark, sf, "events").select(
@@ -162,17 +159,8 @@ def test_stateful_ewma_state_survives_restart(spark):
         def start(outdir):
             # the memory sink does not support checkpoint recovery;
             # foreachBatch-to-parquet is the recoverable sink shape
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            updates = stream.groupBy("user_id").applyInPandasWithState(
-                _update_ewma,
-                outputStructType=EWMA_OUTPUT_SCHEMA,
-                stateStructType=EWMA_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
+            updates = EWMA_REPLAY.transform(
+                read_replay(spark, events.schema, src)
             )
             return (
                 updates.writeStream.outputMode("update")

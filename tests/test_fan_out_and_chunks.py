@@ -73,7 +73,7 @@ def test_fanned_union_keyed_op_stays_correct(spark):
 
 
 def test_time_ordered_chunks_contract(spark):
-    from spark_streaming_testbed_spark.streaming.stateful import (
+    from spark_streaming_testbed_spark.streaming.replay import (
         write_time_ordered_chunks,
     )
 
@@ -111,8 +111,10 @@ def test_time_ordered_chunks_contract(spark):
 
 
 def test_replay_width_scales_with_key_count(spark):
-    from spark_streaming_testbed_spark.streaming.stateful import (
+    from spark_streaming_testbed_spark.session import conf_override
+    from spark_streaming_testbed_spark.streaming.replay import (
         REPLAY_GROUPS_PER_PARTITION,
+        SHUFFLE_PARTITIONS,
         wide_replay_width,
         write_time_ordered_chunks,
     )
@@ -120,10 +122,8 @@ def test_replay_width_scales_with_key_count(spark):
     # pin the session to the width the r12 measurements were taken at
     # (32), so the ramp is checked the same way whatever the host's core
     # count; the fixture is session-scoped, so restore the old width
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with conf_override(spark.conf, {SHUFFLE_PARTITIONS: "32"}):
+        session_w = int(spark.conf.get(SHUFFLE_PARTITIONS))
         # floor of 8 below, session width above, linear ramp between
         assert wide_replay_width(spark, 0) == "8"
         assert wide_replay_width(
@@ -132,8 +132,6 @@ def test_replay_width_scales_with_key_count(spark):
         assert wide_replay_width(spark, 10**9) == str(session_w)
         # no estimate -> session width (legacy callers)
         assert wide_replay_width(spark) == str(session_w)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # the chunk writer's key estimate rides the bounds job and lands
     # within HLL tolerance of the true cardinality

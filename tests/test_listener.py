@@ -8,10 +8,8 @@ import time
 from spark_streaming_testbed_spark.plans import parse_plan
 from spark_streaming_testbed_spark.sources.profile_source import profile_stream
 from spark_streaming_testbed_spark.streaming.listener import RateFeedbackListener
-from spark_streaming_testbed_spark.streaming.pipeline import (
-    run_stream_to_table,
-    windowed_stats,
-)
+from spark_streaming_testbed_spark.streaming.pipeline import windowed_stats
+from spark_streaming_testbed_spark.streaming.replay import run_stream_to_table
 
 
 def test_listener_receives_real_metrics_and_estimates(spark):

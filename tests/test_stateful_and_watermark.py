@@ -3,38 +3,23 @@
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
 from spark_streaming_testbed_spark.plans import parse_plan
 from spark_streaming_testbed_spark.sources.profile_source import profile_stream
-from spark_streaming_testbed_spark.streaming.stateful import running_totals
-
-PLAN = (
-    '{"sequence": [{"type": "cycle", "values": [4, 5], "rate": 20, '
-    '"duration": 6}]}'
+from spark_streaming_testbed_spark.streaming.replay import run_stream_to_table
+from spark_streaming_testbed_spark.streaming.stateful import (
+    TOTALS_PLAN,
+    running_totals,
 )
 
 
-def _run(df, mode="update"):
-    name = f"sink_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return name
-
-
 def test_stateful_running_totals_accumulate_across_batches(spark):
-    plan = parse_plan(PLAN)
+    plan = parse_plan(TOTALS_PLAN)
     with tempfile.TemporaryDirectory() as tmp:
         stream = profile_stream(spark, plan, tmp, seconds_per_file=2)
-        table = _run(running_totals(stream))
+        table = run_stream_to_table(running_totals(stream), mode="update")
         rows = spark.table(table).collect()
     # multiple triggers → multiple emissions per key; final row per key
     # carries the grand total
@@ -50,43 +35,6 @@ def test_stateful_running_totals_accumulate_across_batches(spark):
     assert all(r.total_sum == r.total_cnt * r.value for r in finals.values())
     # state really crossed batches (3 files → 3 triggers)
     assert max(r.n_batches for r in rows) >= 2
-
-
-def test_transform_with_state_twin_or_documented_gate(spark):
-    """T9 v2: where the container has protobuf, the arbitrary-state v2
-    twin must reproduce the v1 finals bit for bit; where it doesn't, the
-    gate must fail loudly with the documented reason rather than half-run.
-    The probe makes this test upgrade itself the moment the environment
-    gains the dependency."""
-    import pytest
-
-    from spark_streaming_testbed_spark.streaming.stateful import (
-        running_totals_tws,
-        tws_available,
-    )
-
-    plan = parse_plan(PLAN)
-    if not tws_available():
-        with tempfile.TemporaryDirectory() as tmp:
-            stream = profile_stream(spark, plan, tmp, seconds_per_file=2)
-            with pytest.raises(RuntimeError, match="protobuf"):
-                running_totals_tws(stream)
-        return
-    with tempfile.TemporaryDirectory() as tmp:
-        stream = profile_stream(spark, plan, tmp, seconds_per_file=2)
-        v1 = spark.table(_run(running_totals(stream))).collect()
-        stream2 = profile_stream(spark, plan, tmp + "/b", seconds_per_file=2)
-        v2 = spark.table(_run(running_totals_tws(stream2))).collect()
-
-    def finals(rows):
-        out = {}
-        for r in rows:
-            cur = out.get(r.value)
-            if cur is None or r.n_batches > cur.n_batches:
-                out[r.value] = r
-        return {k: (r.total_cnt, r.total_sum) for k, r in out.items()}
-
-    assert finals(v1) == finals(v2)
 
 
 def test_watermark_semantics_documented_divergence(spark):
@@ -123,7 +71,7 @@ def test_watermark_semantics_documented_divergence(spark):
 
         # parity mode (no watermark): every row aggregated
         no_wm = stream().groupBy("value").count()
-        t1 = _run(no_wm, mode="complete")
+        t1 = run_stream_to_table(no_wm, mode="complete")
         total_no_wm = sum(r["count"] for r in spark.table(t1).collect())
         assert total_no_wm == 60
 
@@ -134,7 +82,7 @@ def test_watermark_semantics_documented_divergence(spark):
             .groupBy(F.window("ts", "2 seconds"), "value")
             .count()
         )
-        t2 = _run(wm, mode="append")
+        t2 = run_stream_to_table(wm, mode="append")
         total_wm = sum(r["count"] for r in spark.table(t2).collect())
         assert total_wm <= total_no_wm
 

@@ -7,25 +7,30 @@ state fold exactly where it stopped, so the final answer is identical to
 an uninterrupted run.  This sweep proves that contract for EVERY
 stateful registry query in ``streaming/stateful.py``:
 
-- each op's source chunks are materialized ONCE (a restart must see the
-  same files — the file-source offset log pins file→batch mapping);
-- the op runs twice on those chunks: once uninterrupted, and once with
-  a DETERMINISTIC kill injected at a mid-stream trigger boundary — the
-  foreachBatch sink raises on batch ``n_files // 2`` before writing
-  anything, so the checkpoint holds exactly the earlier commits and the
-  restart must recover state and reprocess from there (no timing race,
-  unlike a poll-and-stop kill);
+- each op's source is written ONCE by the registry's own source writer
+  (a restart must see the same files — the file-source offset log pins
+  file→batch mapping), so the replay keeps the registry's file count
+  and chunk order;
+- the op runs twice on those files, through the registry's own stream
+  transform and output mode at the registry's own shuffle width: once
+  uninterrupted, and once with a DETERMINISTIC kill injected at a
+  mid-stream trigger boundary — the foreachBatch sink raises on batch
+  ``n_files // 2`` before writing anything, so the checkpoint holds
+  exactly the earlier commits and the restart must recover state and
+  reprocess from there (no timing race, unlike a poll-and-stop kill);
 - both runs write each micro-batch's output to ``out/bid=N`` with
   ``mode=overwrite`` (idempotent under at-least-once batch replay, the
   documented foreachBatch semantics), and a per-output-mode finalizer
   derives the op's final answer: update → each key's rows from its last
   emitting batch; append → the union over batches; complete → the last
-  batch; merge → the last ping-pong state table;
+  batch; merge → the last table of the merge chain;
 - the two finals must digest-equal, row for row.
 
-Every op here reuses the SAME state-update functions and stream
-transforms as the registry queries (imported, not re-implemented) —
-only the replay/kill scaffolding lives in this tool.
+The replays are the registry's ``FileReplay`` parts (``stateful.REPLAYS``),
+not copies of them; ``streaming_upsert`` uses the registry's feed writer
+and merge step under a restart-safe merge chain (see ``run_upsert``).
+Only the kill-injecting sink, the checkpoint restart and the finalizers
+live in this tool.
 
 Usage: python tools/checkpoint_sweep.py [sf_dir] [out.json] [op ...]
 """
@@ -43,191 +48,28 @@ sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tools")
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402
 
 from spark_streaming_testbed_spark.session import (  # noqa: E402
+    conf_override,
     get_session,
-    load_table,
 )
 from spark_streaming_testbed_spark.streaming import stateful as st  # noqa: E402
+from spark_streaming_testbed_spark.streaming.replay import (  # noqa: E402
+    SHUFFLE_PARTITIONS,
+    read_replay,
+)
 
 KILL_MSG = "checkpoint-sweep injected kill"
 
-TOTALS_PLAN = (
-    '{"sequence": [{"type": "cycle", "values": [4, 5], "rate": 20, '
-    '"duration": 6}]}'
-)
-
-
-def _bump_mtimes(path: str) -> int:
-    """Give the chunk files strictly increasing mtimes in (deterministic)
-    sorted-name order and return the file count.  Only used for ops whose
-    result is replay-order-insensitive; order-sensitive ops write their
-    chunks through the package's own mtime-stamping helpers."""
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    t0 = time.time()
-    for i, f in enumerate(files):
-        os.utime(f, (t0 + i, t0 + i))
-    return len(files)
+#: the memory-sink replays, each run through its registry parts
+SPECS = st.REPLAYS
+#: every op the sweep proves: the replays plus the foreachBatch MERGE loop
+OPS = (*SPECS, "streaming_upsert")
 
 
 def _n_files(path: str) -> int:
     return len(glob.glob(os.path.join(path, "*.parquet")))
-
-
-# ---------------------------------------------------------------------------
-# Per-op source preparation: (spark, sf_dir, src_path) -> (schema, n_files)
-# ---------------------------------------------------------------------------
-
-def _prep_totals(spark, sf_dir, src):
-    from spark_streaming_testbed_spark.plans import parse_plan
-    from spark_streaming_testbed_spark.sources.profile_source import (
-        profile_dataframe,
-    )
-
-    (
-        profile_dataframe(spark, parse_plan(TOTALS_PLAN))
-        .repartitionByRange(6, "ts")
-        .write.mode("overwrite")
-        .parquet(src)
-    )
-    return "ts timestamp, value int, stream_id int", _bump_mtimes(src)
-
-
-def _prep_events(cols):
-    def prep(spark, sf_dir, src):
-        events = load_table(spark, sf_dir, "events").select(*cols)
-        n = st.write_time_ordered_chunks(events, src)
-        return events.schema, max(n, _n_files(src))
-
-    return prep
-
-
-def _prep_events_interleaved(cols):
-    def prep(spark, sf_dir, src):
-        events = load_table(spark, sf_dir, "events").select(*cols)
-        st.write_interleaved_chunks(events, src)
-        return events.schema, _n_files(src)
-
-    return prep
-
-
-def _prep_docs(spark, sf_dir, src):
-    # the 4-chunk doc_id%4 split of streaming_heavy_hitters
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    os.makedirs(src, exist_ok=True)
-    for i in range(4):
-        (
-            docs.where(F.col("doc_id") % 4 == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    return docs.schema, _bump_mtimes(src)
-
-
-# ---------------------------------------------------------------------------
-# Per-op stream transforms — each reuses the registry op's update fn/agg
-# ---------------------------------------------------------------------------
-
-def _apply_state(update_fn, out_schema, state_schema, *keys):
-    def transform(stream):
-        return stream.groupBy(*keys).applyInPandasWithState(
-            update_fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    return transform
-
-
-def _t_heavy_hitters(stream):
-    from spark_streaming_testbed_spark.operators.text import with_tokens
-
-    tokens = with_tokens(stream).select(
-        F.explode("tokens").alias("token")
-    ).withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("token"), F.lit(st.HH_BUCKETS)).cast("int"),
-    )
-    return _apply_state(
-        st._update_mg_sketch, st.HH_OUTPUT_SCHEMA, st.HH_STATE_SCHEMA,
-        "bucket",
-    )(tokens)
-
-
-def _t_group_sample(stream):
-    from spark_streaming_testbed_spark.operators.text import md5h
-
-    hashed = stream.select(
-        "event_type", "event_id", "value",
-        md5h("cast(event_id as string)").alias("h"),
-    )
-    return _apply_state(
-        st._update_group_sample, st.GS_OUTPUT_SCHEMA, st.GS_STATE_SCHEMA,
-        "event_type",
-    )(hashed)
-
-
-def _t_kmv(stream):
-    from spark_streaming_testbed_spark.operators.text import md5h
-
-    hashed = stream.select(
-        "event_type", md5h("cast(user_id as string)").alias("h")
-    )
-    return _apply_state(
-        st._update_kmv, st.SKMV_OUTPUT_SCHEMA, st.SKMV_STATE_SCHEMA,
-        "event_type",
-    )(hashed)
-
-
-def _t_late_data(stream):
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 6).alias("sum_v"),
-        )
-    )
-
-
-def _t_sessionize(stream):
-    from spark_streaming_testbed_spark.operators.advanced import SESSION_GAP
-
-    return (
-        stream.withWatermark("ts", "0 seconds")
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_v"),
-        )
-    )
-
-
-def _t_sliding(stream):
-    return (
-        stream.withWatermark("ts", "0 seconds")
-        .groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("w"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 6).alias("sum_v"),
-        )
-    )
-
-
-def _t_topk(stream):
-    return (
-        stream.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_purchases"))
-    )
 
 
 def _canon_hh(row):
@@ -238,92 +80,7 @@ def _canon_hh(row):
     return tuple(d[k] for k in sorted(d))
 
 
-# spec: prepare, transform, mode (update|append|complete), keys, canon?
-SPECS: dict[str, dict] = {
-    "streaming_stateful_totals": {
-        "prepare": _prep_totals,
-        "transform": st.running_totals,
-        "mode": "update",
-        "keys": ["value"],
-    },
-    "streaming_funnel": {
-        "prepare": _prep_events(["user_id", "event_id", "event_type", "ts"]),
-        "transform": _apply_state(
-            st._update_funnel, st.FUNNEL_OUTPUT_SCHEMA,
-            st.FUNNEL_STATE_SCHEMA, "user_id",
-        ),
-        "mode": "update",
-        "keys": ["user_id"],
-    },
-    "streaming_heavy_hitters": {
-        "prepare": _prep_docs,
-        "transform": _t_heavy_hitters,
-        "mode": "update",
-        "keys": ["bucket"],
-        "canon": _canon_hh,
-    },
-    "streaming_ewma": {
-        "prepare": _prep_events(["user_id", "event_id", "ts", "value"]),
-        "transform": _apply_state(
-            st._update_ewma, st.EWMA_OUTPUT_SCHEMA, st.EWMA_STATE_SCHEMA,
-            "user_id",
-        ),
-        "mode": "update",
-        "keys": ["user_id"],
-    },
-    "streaming_group_sample": {
-        "prepare": _prep_events(["event_type", "event_id", "ts", "value"]),
-        "transform": _t_group_sample,
-        "mode": "update",
-        "keys": ["event_type"],
-    },
-    "streaming_late_data": {
-        "prepare": _prep_events_interleaved(
-            ["event_id", "ts", "event_type", "value"]
-        ),
-        "transform": _t_late_data,
-        "mode": "append",
-        "keys": [],
-    },
-    "streaming_sessionize": {
-        "prepare": _prep_events(["user_id", "event_id", "ts", "value"]),
-        "transform": _t_sessionize,
-        "mode": "append",
-        "keys": [],
-    },
-    "streaming_sliding_stats": {
-        "prepare": _prep_events(
-            ["user_id", "event_id", "ts", "value", "event_type"]
-        ),
-        "transform": _t_sliding,
-        "mode": "append",
-        "keys": [],
-    },
-    "streaming_latest_state": {
-        "prepare": _prep_events(
-            ["user_id", "event_id", "ts", "event_type", "value"]
-        ),
-        "transform": _apply_state(
-            st._update_latest_state, st.LS_OUTPUT_SCHEMA,
-            st.LS_STATE_SCHEMA, "user_id",
-        ),
-        "mode": "update",
-        "keys": ["user_id"],
-    },
-    "streaming_topk_users": {
-        "prepare": _prep_events(["user_id", "event_id", "ts", "event_type"]),
-        "transform": _t_topk,
-        "mode": "complete",
-        "keys": [],
-    },
-    "streaming_kmv_distinct": {
-        "prepare": _prep_events(["event_type", "ts", "user_id"]),
-        "transform": _t_kmv,
-        "mode": "update",
-        "keys": ["event_type"],
-    },
-    "streaming_upsert": {"mode": "merge"},  # custom runner below
-}
+CANON = {"streaming_heavy_hitters": _canon_hh}
 
 
 # ---------------------------------------------------------------------------
@@ -340,62 +97,51 @@ def _committed_batches(ckpt: str) -> int:
     )
 
 
-def _run_stream(spark, transform, schema, src, out, ckpt, kill_bid, mode):
-    """One (possibly killed-and-resumed) availableNow replay; returns the
-    number of batches committed before the injected failure (0 for the
-    uninterrupted arm)."""
-    killed = {"fired": False}
+def _killable(write_batch, kill_bid: int | None):
+    """foreachBatch sink that raises the injected kill once, on batch
+    ``kill_bid`` and before writing anything; else ``write_batch``."""
+    fired = []
 
     def sink(df, bid):
-        if kill_bid is not None and bid == kill_bid and not killed["fired"]:
-            killed["fired"] = True
+        if bid == kill_bid and not fired:
+            fired.append(bid)
             raise RuntimeError(KILL_MSG)
-        df.write.mode("overwrite").parquet(f"{out}/bid={bid}")
+        write_batch(df, bid)
 
-    def start():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return (
-            transform(stream)
-            .writeStream.outputMode(mode)
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return sink
 
-    q = start()
-    committed_at_kill = 0
+
+def _run_resumed(start, ckpt: str) -> int:
+    """Run ``start()``'s availableNow query to completion; if the
+    injected kill fires, restart it once on the same checkpoint. Returns
+    the number of batches committed before the kill (0 for the
+    uninterrupted arm)."""
     try:
-        q.awaitTermination()
+        start().awaitTermination()
+        return 0
     except Exception as e:  # noqa: BLE001
         if KILL_MSG not in str(e):
             raise
-        committed_at_kill = _committed_batches(ckpt)
-        q2 = start()
-        q2.awaitTermination()
-    return committed_at_kill
+    committed = _committed_batches(ckpt)
+    start().awaitTermination()
+    return committed
 
 
-def _final_rows(spark, spec, out):
+def _final_rows(spark, name, replay, out):
     df = spark.read.parquet(out)  # bid=N partition discovery
-    mode = spec["mode"]
-    if mode == "append":
+    if replay.mode == "append":
         fin = df.drop("bid")
-    elif mode == "complete":
+    elif replay.mode == "complete":
         m = df.agg(F.max("bid")).first()[0]
         fin = df.where(F.col("bid") == m).drop("bid")
     else:  # update: each key's rows from its last emitting batch
-        w = Window.partitionBy(*spec["keys"])
+        w = Window.partitionBy(*replay.keys)
         fin = (
             df.withColumn("_mb", F.max("bid").over(w))
             .where(F.col("bid") == F.col("_mb"))
             .drop("bid", "_mb")
         )
-    canon = spec.get("canon", lambda r: tuple(
+    canon = CANON.get(name, lambda r: tuple(
         r.asDict()[k] for k in sorted(r.asDict())
     ))
     return sorted(repr(canon(r)) for r in fin.collect())
@@ -405,46 +151,64 @@ def _digest(rows: list[str]) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
-def run_generic(spark, name, spec, sf_dir) -> dict:
+def _verdict(res: dict, committed: int, rows_un: list[str],
+             rows_int: list[str]) -> dict:
+    """Record the kill point and compare the two arms' final rows."""
+    res.update(
+        committed_before_kill=committed,
+        interrupted_mid_stream=0 < committed < res["n_source_files"],
+        rows=len(rows_un),
+        digest_uninterrupted=_digest(rows_un),
+        digest_resumed=_digest(rows_int),
+    )
+    res["equal"] = (
+        res["digest_uninterrupted"] == res["digest_resumed"]
+        and res["rows"] > 0
+    )
+    if not res["equal"]:
+        res["first_diff"] = next(
+            ((a, b) for a, b in zip(rows_un, rows_int) if a != b),
+            (f"row counts {len(rows_un)} vs {len(rows_int)}", ""),
+        )
+    return res
+
+
+def run_generic(spark, name, replay, sf_dir) -> dict:
+    """Kill-and-resume for one registry ``FileReplay``: its own source
+    files, transform, output mode and width, into a parquet sink."""
     with tempfile.TemporaryDirectory(prefix=f"cksweep_{name}_") as tmp:
         src = f"{tmp}/src"
-        schema, n_files = spec["prepare"](spark, sf_dir, src)
-        kill_bid = max(1, n_files // 2)
-        res = {"n_source_files": n_files, "kill_bid": kill_bid}
+        schema, width = replay.write(spark, sf_dir, src)
+        n_files = _n_files(src)
+        res = {"n_source_files": n_files, "kill_bid": max(1, n_files // 2),
+               "width": int(width)}
 
-        _run_stream(
-            spark, spec["transform"], schema, src,
-            f"{tmp}/out_un", f"{tmp}/ckpt_un", None, spec["mode"],
-        )
-        rows_un = _final_rows(spark, spec, f"{tmp}/out_un")
-
-        committed = _run_stream(
-            spark, spec["transform"], schema, src,
-            f"{tmp}/out_int", f"{tmp}/ckpt_int", kill_bid, spec["mode"],
-        )
-        rows_int = _final_rows(spark, spec, f"{tmp}/out_int")
-
-        res.update(
-            committed_before_kill=committed,
-            interrupted_mid_stream=0 < committed < n_files,
-            rows=len(rows_un),
-            digest_uninterrupted=_digest(rows_un),
-            digest_resumed=_digest(rows_int),
-        )
-        res["equal"] = (
-            res["digest_uninterrupted"] == res["digest_resumed"]
-            and res["rows"] > 0
-        )
-        if not res["equal"]:
-            res["first_diff"] = next(
-                (
-                    (a, b)
-                    for a, b in zip(rows_un, rows_int)
-                    if a != b
+        def run(arm: str, kill: int | None) -> tuple[int, list[str]]:
+            out, ckpt = f"{tmp}/out_{arm}", f"{tmp}/ckpt_{arm}"
+            sink = _killable(
+                lambda df, bid: df.write.mode("overwrite").parquet(
+                    f"{out}/bid={bid}"
                 ),
-                (f"row counts {len(rows_un)} vs {len(rows_int)}", ""),
+                kill,
             )
-        return res
+
+            def start():
+                return (
+                    replay.transform(read_replay(spark, schema, src))
+                    .writeStream.outputMode(replay.mode)
+                    .foreachBatch(sink)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+
+            with conf_override(spark.conf, {SHUFFLE_PARTITIONS: width}):
+                committed = _run_resumed(start, ckpt)
+            return committed, _final_rows(spark, name, replay, out)
+
+        _, rows_un = run("un", None)
+        committed, rows_int = run("int", res["kill_bid"])
+        return _verdict(res, committed, rows_un, rows_int)
 
 
 def run_upsert(spark, sf_dir) -> dict:
@@ -453,89 +217,40 @@ def run_upsert(spark, sf_dir) -> dict:
     restart loses — the recoverable shape writes each merge's result to a
     per-batch-id table ``state_N`` reading from ``state_{N-1}``, so batch
     replay re-reads the PRE-batch base (idempotent) and a restart finds
-    the chain on disk.  Semantically the same merge as
-    ``streaming_upsert`` (same base/update construction, imported
-    expressions), with the commit protocol made restart-safe."""
-    orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    base = orders.where(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    ).select(
-        "o_orderkey", cents.alias("cents"), F.lit("keep").alias("action")
-    )
-    updates = orders.where(
-        F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
-    ).select(
-        F.col("o_orderkey").alias("event_id"),
-        F.when(
-            F.col("o_orderpriority") == "1-URGENT",
-            F.expr("cast(cast(round(o_totalprice * 100) as bigint) "
-                   "* 11 div 10 as bigint)"),
-        ).otherwise(cents).alias("cents"),
-        F.lit("upd").alias("src"),
-    )
+    the chain on disk.  The feed, the base table and the merge step are
+    the registry's own (``stateful.upsert_source``,
+    ``stateful.merge_upsert``); only the commit protocol differs."""
     with tempfile.TemporaryDirectory(prefix="cksweep_upsert_") as tmp:
         feed = f"{tmp}/feed"
-        st.write_interleaved_chunks(updates, feed)
+        base = st.upsert_source(spark, sf_dir, feed)
         n_files = _n_files(feed)
-        kill_bid = max(1, n_files // 2)
-        res = {"n_source_files": n_files, "kill_bid": kill_bid}
+        res = {"n_source_files": n_files, "kill_bid": max(1, n_files // 2)}
 
         def run(arm: str, kill: int | None) -> tuple[int, list[str]]:
             root = f"{tmp}/{arm}"
-            os.makedirs(root, exist_ok=True)
             base.write.mode("overwrite").parquet(f"{root}/state_seed")
-            killed = {"fired": False}
 
             def merge_batch(batch, bid):
-                if kill is not None and bid == kill and not killed["fired"]:
-                    killed["fired"] = True
-                    raise RuntimeError(KILL_MSG)
                 prev = (
                     f"{root}/state_seed" if bid == 0
                     else f"{root}/state_{bid - 1}"
                 )
-                b = batch.select(
-                    F.col("event_id").alias("o_orderkey"),
-                    F.col("cents").alias("cents_u"),
-                )
-                merged = (
-                    spark.read.parquet(prev)
-                    .join(b, "o_orderkey", "full")
-                    .select(
-                        "o_orderkey",
-                        F.coalesce("cents_u", "cents").alias("cents"),
-                        F.when(F.col("cents").isNull(), "insert")
-                        .when(F.col("cents_u").isNotNull(), "update")
-                        .otherwise(F.col("action")).alias("action"),
-                    )
-                )
-                merged.write.mode("overwrite").parquet(f"{root}/state_{bid}")
+                st.merge_upsert(spark.read.parquet(prev), batch).write.mode(
+                    "overwrite"
+                ).parquet(f"{root}/state_{bid}")
+
+            sink = _killable(merge_batch, kill)
 
             def start():
-                stream = (
-                    spark.readStream
-                    .schema("event_id long, cents long, src string")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(feed)
-                )
                 return (
-                    stream.writeStream.foreachBatch(merge_batch)
+                    read_replay(spark, st.UPSERT_FEED_SCHEMA, feed)
+                    .writeStream.foreachBatch(sink)
                     .option("checkpointLocation", f"{root}/ckpt")
                     .trigger(availableNow=True)
                     .start()
                 )
 
-            q = start()
-            committed = 0
-            try:
-                q.awaitTermination()
-            except Exception as e:  # noqa: BLE001
-                if KILL_MSG not in str(e):
-                    raise
-                committed = _committed_batches(f"{root}/ckpt")
-                q2 = start()
-                q2.awaitTermination()
+            committed = _run_resumed(start, f"{root}/ckpt")
             last = max(
                 int(d.rsplit("_", 1)[1])
                 for d in os.listdir(root)
@@ -550,19 +265,8 @@ def run_upsert(spark, sf_dir) -> dict:
             return committed, rows
 
         _, rows_un = run("un", None)
-        committed, rows_int = run("int", kill_bid)
-        res.update(
-            committed_before_kill=committed,
-            interrupted_mid_stream=0 < committed < n_files,
-            rows=len(rows_un),
-            digest_uninterrupted=_digest(rows_un),
-            digest_resumed=_digest(rows_int),
-        )
-        res["equal"] = (
-            res["digest_uninterrupted"] == res["digest_resumed"]
-            and res["rows"] > 0
-        )
-        return res
+        committed, rows_int = run("int", res["kill_bid"])
+        return _verdict(res, committed, rows_un, rows_int)
 
 
 def main() -> int:
@@ -576,20 +280,18 @@ def main() -> int:
 
     spark = get_session("checkpoint-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    # narrow micro-batch width, matching the registry ops' own setting
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     results: dict[str, dict] = {}
     n_equal = n_err = 0
-    for name, spec in SPECS.items():
+    for name in OPS:
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            if spec["mode"] == "merge":
-                res = run_upsert(spark, sf_dir)
+            if name in SPECS:
+                res = run_generic(spark, name, SPECS[name], sf_dir)
             else:
-                res = run_generic(spark, name, spec, sf_dir)
+                res = run_upsert(spark, sf_dir)
             res["wall_s"] = round(time.time() - t0, 2)
             ok = res["equal"] and res["interrupted_mid_stream"]
             n_equal += int(ok)

@@ -24,7 +24,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import contextlib
 import dataclasses
 import hashlib
 import json
@@ -42,7 +41,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from spark_streaming_testbed_spark.session import TABLES, get_session  # noqa: E402
+from spark_streaming_testbed_spark.session import (  # noqa: E402
+    TABLES,
+    conf_override,
+    get_session,
+)
 
 # --- one query, its oracle, and how two results compare ---------------
 
@@ -223,27 +226,6 @@ def digest(run: Run) -> str:
 
 
 # --- the registry loop --------------------------------------------------
-
-
-@contextlib.contextmanager
-def conf_override(conf, confs: dict[str, str]):
-    """Set *confs* on a runtime conf for the duration of the block.
-
-    The conf's ACTUAL prior values are captured right before and put
-    back afterwards (unset if there was none): a hard-coded restore-to
-    value would silently set a wrong baseline whenever the session
-    defaults differ, e.g. shuffle partitions = the host's core count."""
-    saved = {k: conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        conf.set(k, v)
-    try:
-        yield saved
-    finally:
-        for k, prev in saved.items():
-            if prev is None:
-                conf.unset(k)
-            else:
-                conf.set(k, prev)
 
 
 def sweep_registry(spark, passes, only: set[str], noop: bool = False):
