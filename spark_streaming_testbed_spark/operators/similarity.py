@@ -119,7 +119,7 @@ def _auto_lsh_config(n_vecs: int) -> tuple[int, int]:
     corpus size — constant per-vector work, linear total — and the
     second independent table diversifies recall (the standard
     multi-table hyperplane-LSH tradeoff). Measured at 20k distinct
-    vectors (tools/sf1_smoke.py): 13 planes + 2 tables ~ 3.3x faster
+    vectors (``tools/sweep.py scale``): 13 planes + 2 tables ~ 3.3x faster
     than the pinned 8/1 with pooled label agreement within the
     binomial noise floor."""
     if n_vecs <= GATE_MAX_VECS:
@@ -1415,7 +1415,7 @@ def knn_graph(
     second independent table — expected candidate pairs are
     n_tables · n²/2^planes, so growing planes with log2(n) keeps
     per-vector candidates constant (linear total work) and the extra
-    table holds recall. tools/sf1_smoke.py measures exactly this
+    table holds recall. ``tools/sweep.py scale`` measures exactly this
     configuration at 10× distinct vectors."""
     emb = load_table(spark, sf_dir, "embeddings")
     if n_planes is None or n_tables is None:

@@ -129,19 +129,23 @@ def write_profile(
     seconds_per_file: int = 10,
 ) -> None:
     """Write ``plan`` as parquet under ``path``, one file per
-    ``seconds_per_file`` plan-seconds, range-partitioned on ``ts``."""
+    ``seconds_per_file`` plan-seconds with mtimes increasing in
+    event-time order (:func:`~..streaming.replay.write_chunks`), so a
+    file stream replays the profile in ``ts`` order."""
+    from pyspark.sql import functions as F
+
+    from ..streaming.replay import write_chunks
+
     n_seconds = plan.duration if max_seconds is None else max_seconds
     if n_seconds is None:
         raise ValueError("unbounded plan: pass max_seconds")
-    n_files = max(1, math.ceil(n_seconds / seconds_per_file))
     batch = profile_dataframe(
         spark, plan, max_seconds=n_seconds, epoch_ms=epoch_ms, stream_id=stream_id
     )
-    (
-        batch.repartitionByRange(n_files, "ts")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    chunk = F.floor(
+        (F.unix_millis("ts") - F.lit(epoch_ms)) / F.lit(1000 * seconds_per_file)
+    ).cast("long")
+    write_chunks(batch, path, chunk, max(1, math.ceil(n_seconds / seconds_per_file)))
 
 
 def profile_stream(

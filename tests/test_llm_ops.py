@@ -1471,9 +1471,9 @@ def test_template_shingles_are_widely_spread(spark):
 
 
 def _write_synthetic_embeddings(out_dir, n, clustered, seed=123):
-    """Above-gate synthetic corpus for the calibrated-nprobe tests —
-    the same shapes tools/sf1_smoke.py generates (iid normal(0,0.125)
-    64-d vs a 50-cluster Gaussian mixture), small enough for a unit
+    """Above-gate synthetic corpus for the calibrated-nprobe tests (iid
+    normal(0,0.125) 64-d, as the ``tools/sweep.py scale`` tier
+    generates, or a 50-cluster Gaussian mixture), small enough for a unit
     test but > GATE_MAX_VECS so the scaled path is exercised."""
     import os
 

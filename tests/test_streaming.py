@@ -11,7 +11,11 @@ from spark_streaming_testbed_spark.streaming.pipeline import (
     streaming_profile_stats,
     windowed_stats,
 )
-from spark_streaming_testbed_spark.sources.profile_source import profile_dataframe
+from spark_streaming_testbed_spark.sources.profile_source import (
+    DEFAULT_EPOCH_MS,
+    profile_dataframe,
+    write_profile,
+)
 
 
 def test_streaming_equals_batch_on_same_profile(spark):
@@ -31,6 +35,36 @@ def test_streaming_equals_batch_on_same_profile(spark):
     batch_rows = {tuple(r) for r in batch.collect()}
     assert stream_rows == batch_rows
     assert len(stream_rows) > 0
+
+
+def test_profile_files_replay_in_event_time_order(spark, tmp_path):
+    """A file stream replays files in mtime order, so a written profile
+    must be one file per ``seconds_per_file`` window, with mtimes in
+    window order: file ``k`` by mtime holds exactly the ts range of
+    plan-seconds ``[2k, 2k + 2)``. A ramp's rows are not uniform in
+    time, so a cut at row quantiles would not match the windows."""
+    import glob
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    plan = parse_plan(
+        '{"sequence": [{"type": "ramp", "value": 7, "startRate": 10, '
+        '"endRate": 400, "duration": 10}]}'
+    )
+    write_profile(spark, plan, str(tmp_path / "p"), seconds_per_file=2)
+    files = sorted(glob.glob(str(tmp_path / "p" / "*.parquet")),
+                   key=os.path.getmtime)
+    assert len(files) == 5
+    mtimes = [os.path.getmtime(f) for f in files]
+    assert mtimes == sorted(set(mtimes))  # no ties
+    for k, f in enumerate(files):
+        ts = pq.read_table(f)["ts"]
+        per_ms = {"ms": 1, "us": 1000, "ns": 1_000_000}[ts.type.unit]
+        ms = pc.cast(ts, "int64").to_numpy() // per_ms
+        lo, hi = ms.min() - DEFAULT_EPOCH_MS, ms.max() - DEFAULT_EPOCH_MS
+        assert 2000 * k <= lo <= hi < 2000 * (k + 1), (k, lo, hi)
 
 
 def test_pid_controller_converges_to_sustainable_rate():

@@ -1,5 +1,6 @@
 """Spark-free unit tests for the registry-sweep runner (tools/sweep.py),
-its CLI guards (tools/_guards.py) and the round-artifact assembler."""
+its input-dir tiers, its CLI guards (tools/_guards.py) and the
+round-artifact assembler."""
 
 from __future__ import annotations
 
@@ -116,7 +117,8 @@ def test_determinism_passes_restore_session_partitions(monkeypatch):
     conf = FakeConf({sweep.SHUFFLE_PARTITIONS: "6"})
     spark = SimpleNamespace(
         conf=conf,
-        sparkContext=SimpleNamespace(setJobDescription=lambda d: None))
+        sparkContext=SimpleNamespace(setJobDescription=lambda d: None,
+                                     setLocalProperty=lambda k, v: None))
     seen = []
 
     def query(spark, sf_dir):
@@ -186,3 +188,66 @@ def test_order_artifact_copies_the_sweep_seed(tmp_path):
     art = assembler.order_artifact(14, str(tmp_path), "abc1234")
     assert art["seed"] == sweep.PERMUTE_SEED == 777
     assert (art["order_invariant"], art["order_dependent"]) == (284, 1)
+
+
+# --- the data-bound tier ------------------------------------------------
+
+
+def test_build_scale_tier(tmp_path):
+    import pyarrow.compute as pc
+
+    sweep.build_scale_tier(SF_SMOKE, str(tmp_path))
+    src = {f: pq.read_table(os.path.join(SF_SMOKE, f))
+           for f in os.listdir(SF_SMOKE) if f.endswith(".parquet")}
+    big = {f: pq.read_table(str(tmp_path / f)) for f in src}
+    for f, t in src.items():
+        assert big[f].schema.equals(t.schema, check_metadata=True), f
+    for f in ("region.parquet", "nation.parquet"):
+        assert big[f].equals(src[f])
+    for name in sweep.REKEY:
+        assert len(big[f"{name}.parquet"]) == sweep.SCALE * len(
+            src[f"{name}.parquet"])
+
+    def keys(table, col):
+        return set(big[f"{table}.parquet"][col].to_pylist())
+
+    for table, col, ref, ref_col in (
+            ("lineitem", "l_orderkey", "orders", "o_orderkey"),
+            ("orders", "o_custkey", "customer", "c_custkey"),
+            ("lineitem", "l_partkey", "part", "p_partkey"),
+            ("lineitem", "l_suppkey", "supplier", "s_suppkey")):
+        assert keys(table, col) <= keys(ref, ref_col), (table, col)
+    events, src_events = big["events.parquet"], src["events.parquet"]
+    assert len(events) == sweep.SCALE * len(src_events)
+    assert pc.count_distinct(events["user_id"]).as_py() > 5 * (
+        pc.count_distinct(src_events["user_id"]).as_py())
+    assert pc.min(events["ts"]).as_py() >= pc.min(src_events["ts"]).as_py()
+    assert pc.max(events["ts"]).as_py() <= pc.max(src_events["ts"]).as_py()
+    docs = big["documents.parquet"]
+    assert len(docs) == sweep.SCALE * len(src["documents.parquet"])
+    assert pc.count_distinct(docs["text"]).as_py() < len(docs)
+    assert len(big["embeddings.parquet"]) == sweep.SCALE * len(
+        src["embeddings.parquet"])
+    assert "scale" in sweep.MODES
+    registry = sweep.entrymod.queries()
+    for names in (sweep.SCALE_ORACLE_EXEMPT, sweep.SCALE_QUERIES,
+                  sweep.SCALE_WALL_BOUNDS):
+        assert set(names) <= set(registry)
+
+
+def test_scale_artifact_copies_the_sweep_guards(tmp_path):
+    guards = {"ann_ivf_topk.recall": sweep._guard(0.89, lo=0.7),
+              "streaming_ewma.wall_ratio": sweep._guard(13.0, hi=12.0)}
+    assert [g["pass"] for g in guards.values()] == [True, False]
+    assert sweep._guard(None, hi=2)["pass"] is False
+    doc = {"mode": "scale", "sf_dir": SF_SMOKE, "scale": sweep.SCALE,
+           "source_counts": {"pass": 39, "fail": 0, "rows_only": 0},
+           "scale_counts": {"pass": 34, "fail": 0, "rows_only": 5},
+           "walls": {}, "state": {}, "guards": guards,
+           "failed_guards": ["streaming_ewma.wall_ratio"], "failures": {}}
+    (tmp_path / "scale.json").write_text(json.dumps(doc))
+    art = assembler.scale_artifact(14, str(tmp_path), "abc1234")
+    assert art["head_commit"] == "abc1234"
+    assert art["guards"] == guards
+    assert art["failed_guards"] == ["streaming_ewma.wall_ratio"]
+    assert art["scale_counts"]["rows_only"] == 5

@@ -2,7 +2,7 @@
 
 Companion to ``tools/run_round_gates.sh``: reads the JSON results that
 ``tools/sweep.py --out`` wrote for the oracle / determinism / order /
-degenerate modes and the sf1 smoke log, and writes
+degenerate / scale modes, and writes
 ORACLE_TRIPLE_SF_rN.json, DETERMINISM_rN.json, ORDER_INVARIANCE_rN.json,
 DEGENERATE_SWEEP_rN.json and SCALE_SMOKE_rN.json stamped with the
 current HEAD. Refuses to record a non-green summary over an existing
@@ -108,6 +108,22 @@ def degenerate_artifact(n: int, g: str, head: str) -> dict:
     return out
 
 
+def scale_artifact(n: int, g: str, head: str) -> dict:
+    doc = _load(g, "scale")
+    return {
+        "note": (
+            f"Round-{n} data-bound tier: the scale query set on sf0.1 "
+            "and on its 10x tier, each against its DuckDB oracle, with "
+            "wall and row ratios and the recall, agreement and "
+            "state-size guards."
+        ),
+        "head_commit": head,
+        **{k: doc[k] for k in ("sf_dir", "scale", "source_counts",
+                               "scale_counts", "walls", "state", "guards",
+                               "failed_guards", "failures")},
+    }
+
+
 def _degen_green(doc: dict) -> bool:
     return all(
         not doc[m].get("flagged")
@@ -149,9 +165,9 @@ def main() -> int:
     degen = degenerate_artifact(n, g, head)
     write("DEGENERATE_SWEEP", degen, _degen_green(degen))
 
-    txt = open(f"{g}/sf1.log").read()
-    blob = txt[txt.index("{\n"):txt.rindex("}") + 1]
-    write("SCALE_SMOKE", json.loads(blob), True)
+    scale = scale_artifact(n, g, head)
+    write("SCALE_SMOKE", scale, not scale["failed_guards"]
+          and not scale["failures"])
     return 0
 
 

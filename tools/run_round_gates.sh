@@ -46,8 +46,7 @@ sweep degen_one_row one_row sf0.001
 sweep degen_nulls nulls sf0.001
 sweep degen_skew skew sf0.01
 sweep degen_skew90 skew90 sf0.1
-step sf1_smoke
-python tools/sf1_smoke.py > "$G/sf1.log" 2>&1; fin sf1_smoke $?
+sweep scale scale sf0.1
 step pytest
 python -m pytest tests/ -q > "$G/pytest.log" 2>&1; fin pytest $?
 echo MARATHON_DONE >> "$G/progress.txt"

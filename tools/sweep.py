@@ -15,7 +15,12 @@ pass and checks each result against a reference:
   row-permuted with seed 777).
 
 ``time`` is the same loop into the noop sink: two runs per query, the
-min is reported. Every mode writes its result as JSON to ``--out``.
+min is reported. ``scale`` is the data-bound tier: the SCALE_QUERIES
+set (or the named subset) on the input and on a 10x tier built from it
+(``build_scale_tier``), each against its oracle, with per-query wall
+and row ratios and the SCALE guards (LSH and IVF recall, kNN wall and
+agreement, state-store size per key). Every mode writes its result as
+JSON to ``--out``.
 
 Usage:
     python tools/sweep.py MODE SF_DIR [QUERY ...] [--out PATH]
@@ -35,6 +40,9 @@ import tempfile
 import time
 
 import duckdb
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -80,9 +88,15 @@ def run_query(spark, fn, sf_dir: str, noop: bool = False) -> Run:
     return Run(sdf.columns, dtypes, rows, round(time.perf_counter() - t0, 3))
 
 
+#: DuckDB spill cap: an oracle that outgrows it fails with an error
+#: instead of filling the disk the Spark JVM writes to
+ORACLE_TEMP_LIMIT = "4GB"
+
+
 def oracle_connection(sf_dir: str):
     """A DuckDB connection with one view per registry table of sf_dir."""
     con = duckdb.connect()
+    con.execute(f"SET max_temp_directory_size = '{ORACLE_TEMP_LIMIT}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
@@ -124,8 +138,6 @@ def _canon_spark_type(dt: str) -> str:
 
 def _canon_arrow_type(t) -> str:
     """Canonicalize a pyarrow DataType (DuckDB result) the same way."""
-    import pyarrow as pa
-
     if pa.types.is_integer(t):
         return "int"
     if pa.types.is_float32(t):
@@ -228,6 +240,11 @@ def digest(run: Run) -> str:
 # --- the registry loop --------------------------------------------------
 
 
+#: local property naming the running ``label:name``; a stream's thread
+#: inherits it, so a listener can tell which query started the stream
+QUERY_PROPERTY = "sweep.query"
+
+
 def sweep_registry(spark, passes, only: set[str], noop: bool = False):
     """Run every selected registry query once per pass, in registry
     order, and yield ``(name, {label: Run})``. A pass is ``(label, conf
@@ -238,26 +255,32 @@ def sweep_registry(spark, passes, only: set[str], noop: bool = False):
         runs = {}
         for label, confs, sf_dir in passes:
             spark.sparkContext.setJobDescription(f"{label}:{name}")
+            spark.sparkContext.setLocalProperty(QUERY_PROPERTY,
+                                                f"{label}:{name}")
             with conf_override(spark.conf, confs):
                 runs[label] = run_query(spark, fn, sf_dir, noop)
         yield name, runs
     spark.sparkContext.setJobDescription(None)
+    spark.sparkContext.setLocalProperty(QUERY_PROPERTY, None)
 
 
-def run_tier(spark, label: str, tier_dir: str, only: set[str]) -> dict:
+def run_tier(spark, label: str, tier_dir: str, only: set[str],
+             rows_only: set[str] = frozenset()) -> dict:
     """The correctness gate over one input dir: every query on
-    Spark against its ``oracle_sql()`` twin on DuckDB."""
+    Spark against its ``oracle_sql()`` twin on DuckDB (the ``rows_only``
+    names without it)."""
     oracles = entrymod.oracle_sql()
     con = oracle_connection(tier_dir)
     res: dict = {"pass": 0, "fail": 0, "rows_only": 0,
-                 "failures": {}, "walls": {}}
+                 "failures": {}, "walls": {}, "rows": {}}
     for name, runs in sweep_registry(spark, [(label, {}, tier_dir)], only):
         got = runs[label]
         if got.error:
             status = [f"spark error: {got.error}"]
         else:
             res["walls"][name] = got.wall_s
-            if name not in oracles:
+            res["rows"][name] = len(got.rows)
+            if name not in oracles or name in rows_only:
                 print(f"rows-only [{label}] {name}: {len(got.rows)} rows "
                       f"({got.wall_s:.1f}s)", flush=True)
                 res["rows_only"] += 1
@@ -369,10 +392,6 @@ NULL_MASKS = [
 
 def build_null_tier(src: str, dst: str) -> None:
     """Copy ``src`` with the NULL_MASKS columns nulled on their 20 %."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     masks: dict[str, list] = {}
     for table, key, col, residue in NULL_MASKS:
         masks.setdefault(table, []).append((key, col, residue))
@@ -400,10 +419,6 @@ def build_skew_tier(src: str, dst: str, hot: str = "50") -> None:
     divisible by 10 → the hot key, i.e. one key owns ~90 % of the
     stream). Tables that are not rewritten are symlinked, not copied —
     at sf0.1 the lineitem copy would dominate the tier's build time."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     def hot_mask(ids: np.ndarray) -> pa.Array:
         if hot == "90":
             return pa.array(ids % 10 != 0)
@@ -449,8 +464,6 @@ PERMUTE_SEED = 777
 def permute_tables(src: str, dst: str) -> None:
     """Copy ``src`` with every table row-permuted (one shuffle per
     table, in file-name order, from one PERMUTE_SEED generator)."""
-    import numpy as np
-
     rng = np.random.default_rng(PERMUTE_SEED)
     for f in sorted(os.listdir(src)):
         if not f.endswith(".parquet"):
@@ -458,6 +471,133 @@ def permute_tables(src: str, dst: str) -> None:
         t = pq.read_table(os.path.join(src, f))
         t = t.take(rng.permutation(len(t)))
         pq.write_table(t, os.path.join(dst, f))
+
+
+#: the data-bound tier holds SCALE times every source table's rows (and
+#: user keys); region and nation are fixed TPC-H dimensions and stay
+SCALE = 10
+SCALE_SEED = 42
+#: per-replica key shifts of the replicated TPC-H tables: replica ``i``
+#: adds ``i * step`` to each listed column. Foreign keys shift in
+#: lockstep (o_orderkey/l_orderkey, o_custkey/c_custkey,
+#: l_partkey/p_partkey, l_suppkey/s_suppkey), so joins stay intact
+#: while every join and group key's cardinality grows with the data.
+REKEY = {
+    "orders": {"o_orderkey": 10_000_000, "o_custkey": 1_000_000},
+    "lineitem": {"l_orderkey": 10_000_000, "l_partkey": 1_000_000,
+                 "l_suppkey": 100_000},
+    "customer": {"c_custkey": 1_000_000},
+    "part": {"p_partkey": 1_000_000},
+    "supplier": {"s_suppkey": 100_000},
+}
+#: share of generated documents that are perturbed (near-dup) and
+#: verbatim (exact-dup) copies of an earlier one, so the dedup and LSH
+#: queries have a ground-truth pair set at scale
+NEAR_DUP_RATE = 0.015
+EXACT_DUP_RATE = 0.002
+
+
+def _scale_events(t, rng) -> dict:
+    """SCALE x the rows and SCALE x the distinct users of ``t``, ``ts``
+    uniform over the source's own span; event type, value and props are
+    drawn from the source's columns."""
+    n = SCALE * len(t)
+    n_users = SCALE * pc.count_distinct(t["user_id"]).as_py()
+    ts = t["ts"].cast(pa.int64())
+    lo, hi = pc.min(ts).as_py(), pc.max(ts).as_py()
+    pick = pa.array(rng.integers(0, len(t), n))
+    return {
+        "event_id": pa.array(np.arange(n)),
+        "ts": pa.array(rng.integers(lo, hi + 1, n)),
+        "user_id": pa.array(rng.integers(0, n_users, n)),
+        **{c: t[c].take(pick) for c in ("event_type", "value", "props")},
+    }
+
+
+def _scale_documents(t, rng) -> dict:
+    """SCALE x the documents of ``t``: token lengths drawn from the
+    source's, tokens uniform over its vocabulary, lang and source drawn
+    from its columns, plus injected near-dup and exact-dup copies."""
+    n = SCALE * len(t)
+    src_tokens = [s.split(" ") for s in t["text"].to_pylist() if s]
+    vocab = np.array(sorted({w for toks in src_tokens for w in toks}))
+    lens = rng.choice([len(toks) for toks in src_tokens], n)
+    texts: list[str] = []
+    for i in range(n):
+        r = rng.random()
+        if i > 10 and r < EXACT_DUP_RATE:
+            texts.append(texts[rng.integers(0, i)])
+        elif i > 10 and r < EXACT_DUP_RATE + NEAR_DUP_RATE:
+            # 1-3 token substitutions: Jaccard lands mostly above the
+            # 0.4 pair threshold but spreads across it
+            toks = texts[rng.integers(0, i)].split(" ")
+            for _ in range(rng.integers(1, 4)):
+                toks[rng.integers(0, len(toks))] = vocab[
+                    rng.integers(0, len(vocab))]
+            texts.append(" ".join(toks))
+        else:
+            texts.append(" ".join(vocab[rng.integers(0, len(vocab), lens[i])]))
+    pick = pa.array(rng.integers(0, len(t), n))
+    return {
+        "doc_id": pa.array(np.arange(n)),
+        "text": pa.array(texts),
+        "n_chars": pa.array([len(s) for s in texts]),
+        **{c: t[c].take(pick) for c in ("lang", "source")},
+    }
+
+
+def _scale_embeddings(t, rng) -> dict:
+    """SCALE x the vectors of ``t``: iid normal(0, 0.125) in the source's
+    dimension (unit norm in expectation at 64-d), labels drawn from the
+    source's."""
+    n = SCALE * len(t)
+    dim = len(t["embedding"][0])
+    vecs = rng.normal(0.0, 0.125, n * dim).astype(np.float32)
+    return {
+        "vec_id": pa.array(np.arange(n)),
+        "embedding": pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32)),
+            pa.array(vecs)),
+        "label": t["label"].take(pa.array(rng.integers(0, len(t), n))),
+    }
+
+
+#: the tables the tier generates as distinct, in-distribution data:
+#: each generator returns its table's columns by name
+SCALE_GENERATORS = {
+    "events": _scale_events,
+    "documents": _scale_documents,
+    "embeddings": _scale_embeddings,
+}
+
+
+def build_scale_tier(src: str, dst: str) -> None:
+    """Write the data-bound tier of ``src`` into ``dst``: SCALE copies of
+    every REKEY table (one row group per replica, keys shifted), SCALE x
+    distinct generated ``SCALE_GENERATORS`` tables, and every other
+    table (region, nation) as is."""
+    for f in sorted(os.listdir(src)):
+        if not f.endswith(".parquet"):
+            continue
+        name = f[: -len(".parquet")]
+        t = pq.read_table(os.path.join(src, f))
+        out = os.path.join(dst, f)
+        if name in SCALE_GENERATORS and len(t):
+            cols = SCALE_GENERATORS[name](t, np.random.default_rng(SCALE_SEED))
+            pq.write_table(pa.table([cols[c.name].cast(c.type)
+                                     for c in t.schema], schema=t.schema), out)
+        elif name in REKEY:
+            with pq.ParquetWriter(out, t.schema) as w:
+                for i in range(SCALE):
+                    rep = t
+                    for col, step in REKEY[name].items():
+                        j = rep.schema.get_field_index(col)
+                        shifted = pc.add(rep[col], pa.scalar(
+                            i * step, rep.schema.field(j).type))
+                        rep = rep.set_column(j, rep.schema.field(j), shifted)
+                    w.write_table(rep)
+        else:
+            pq.write_table(t, out)
 
 
 #: input-dir transform of each DuckDB-checked mode (None: the input as is)
@@ -666,6 +806,263 @@ def run_skew(spark, src: str, only: set[str], hot: str = "50") -> dict:
     }
 
 
+# --- the data-bound tier ------------------------------------------------
+
+#: the state-store streaming ops and whether their state is keyed per
+#: user (keys grow with the users) or per a fixed key set (event type,
+#: sketch bucket, window span: keys hold flat)
+STATE_OPS = {
+    "streaming_ewma": True,
+    "streaming_funnel": True,
+    "streaming_kmv_distinct": False,
+    "streaming_heavy_hitters": False,
+    "streaming_latest_state": True,
+    "streaming_topk_users": True,
+    "streaming_sessionize": True,
+    "streaming_sliding_stats": False,
+}
+
+#: ``scale``'s default query set: flagship shuffle, window, text,
+#: dedup, similarity and graph operators, and the stateful replays
+SCALE_QUERIES = (
+    "batch_stats", "tpch_q1", "cumulative_counts", "target_encoding",
+    "k_anonymity_audit", "percentile_rank_features", "gap_fill_locf",
+    "cusum_drift", "ngram_jaccard_pairs", "lsh_near_dup_pairs",
+    "minhash_signatures", "simhash", "ngram_novelty", "feature_hashing",
+    "token_stats", "dedup_clusters", "duplicate_spans", "cosine_topk",
+    "ann_ivf_topk", "knn_label_agreement", "semantic_dup_pairs",
+    "hard_negatives", "embedding_threshold_sweep", "triangle_count",
+    "lpa_communities", "kcore_decomposition", "pagerank_coactivity",
+    "degree_assortativity", "link_prediction_topk",
+    "streaming_profile_stats", "streaming_upsert", *STATE_OPS,
+)
+
+#: queries with no oracle parity on the tier, which run rows-only there.
+#: Above GATE_MAX_VECS vectors the embedding queries leave the pinned
+#: LSH/IVF configs their static oracles encode for log2(n)/sqrt(n)-scaled
+#: ones; the recall and agreement guards check the scaled configs.
+#: Two graph queries are exempt for cost: 10x users in the same span
+#: give the co-activity graph ~100x the edges, and their static oracles
+#: (a wedge join, an unrolled peeling) do not finish on one host.
+SCALE_ORACLE_EXEMPT = {
+    **dict.fromkeys(
+        ("ann_ivf_topk", "knn_graph", "knn_label_agreement",
+         "semantic_dup_pairs", "embedding_threshold_sweep"),
+        "scaled LSH/IVF config above GATE_MAX_VECS; the oracle encodes "
+        "the pinned gate config"),
+    "triangle_count": "the oracle's wedge join outgrows ORACLE_TEMP_LIMIT "
+                      "on the ~100x-edge tier graph",
+    "kcore_decomposition": "the oracle's unrolled peeling runs past 10 "
+                           "min on the ~100x-edge tier graph",
+}
+
+#: wall-ratio bound (tier over source) per guarded query; a query over
+#: its bound is re-run once on both dirs and the min of 2 is kept
+SCALE_WALL_BOUNDS = {"knn_label_agreement": 5.0,
+                     **dict.fromkeys(STATE_OPS, 12.0)}
+
+
+def _guard(value, lo=None, hi=None) -> dict:
+    """One recorded guard: its value, its bounds and whether it holds
+    (a missing value fails)."""
+    ok = value is not None and (lo is None or value >= lo) and (
+        hi is None or value <= hi)
+    return {"value": value, "min": lo, "max": hi, "pass": bool(ok)}
+
+
+def state_listener(spark):
+    """A listener keeping, per ``label:name`` of the query that started
+    the stream (``QUERY_PROPERTY``), the peak ``numRowsTotal`` state
+    operator and its ``memoryUsedBytes``, from each stream's own
+    progress. ``drain()`` waits until every started stream's events
+    have arrived (delivery is asynchronous)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    sc = spark.sparkContext
+
+    class StateSizes(StreamingQueryListener):
+        def __init__(self):
+            self.owner: dict[str, str] = {}
+            self.live: set[str] = set()
+            self.peak: dict[str, tuple[int, int]] = {}
+
+        def onQueryStarted(self, event):  # noqa: N802
+            # runs on the stream's thread, which inherits the property
+            self.owner[str(event.runId)] = sc.getLocalProperty(
+                QUERY_PROPERTY)
+            self.live.add(str(event.runId))
+
+        def onQueryProgress(self, event):  # noqa: N802
+            owner = self.owner.get(str(event.progress.runId))
+            for op in event.progress.stateOperators:
+                size = (op.numRowsTotal, op.memoryUsedBytes)
+                if owner and size > self.peak.get(owner, (-1, 0)):
+                    self.peak[owner] = size
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            self.live.discard(str(event.runId))
+
+        def drain(self, timeout_s: float = 60.0) -> None:
+            t_end = time.time() + timeout_s
+            while self.live and time.time() < t_end:
+                time.sleep(0.2)
+
+    return StateSizes()
+
+
+def _rerun_over_bounds(spark, src, tier_dir, walls, only) -> dict:
+    """Re-run every query whose wall ratio exceeds its
+    SCALE_WALL_BOUNDS entry once on both dirs and keep the min of 2
+    walls (a GC pause or compile stall can inflate a single sample);
+    returns the re-measured walls."""
+    over = {n for n, b in SCALE_WALL_BOUNDS.items()
+            if n in only and walls[n]["wall_ratio"] > b}
+    if not over:  # an empty selection means the whole registry
+        return {}
+    passes = [("source", {}, src), ("scale", {}, tier_dir)]
+    reruns = {}
+    for name, runs in sweep_registry(spark, passes, over):
+        w = walls[name]
+        reruns[name] = {"source_s": runs["source"].wall_s,
+                        "scale_s": runs["scale"].wall_s}
+        w["source_s"] = min(w["source_s"], runs["source"].wall_s)
+        w["scale_s"] = min(w["scale_s"], runs["scale"].wall_s)
+        w["wall_ratio"] = round(w["scale_s"] / max(w["source_s"], 1e-9), 2)
+        print(f"[scale-rerun] {name}: min-of-2 ratio {w['wall_ratio']}",
+              flush=True)
+    return reruns
+
+
+def _pairs(spark, fn, sf_dir, cols, **kw) -> set:
+    return {tuple(r[c] for c in cols) for r in fn(spark, sf_dir, **kw).collect()}
+
+
+def scale_guards(spark, tier_dir, walls, state, only) -> dict:
+    """Every SCALE guard whose queries ran: LSH pairs within the exact
+    pairs with recall >= 0.8, IVF recall >= 0.7 against exact cosine,
+    kNN wall ratio <= 5 and pooled label agreement within 50 bp of the
+    pinned 8-plane / 1-table config, and per state op: bytes per key
+    ratio <= 2, keys 5-15x (per-user state) or <= 1.5x, wall ratio
+    <= 12."""
+    from spark_streaming_testbed_spark.operators import dedup, similarity
+
+    guards: dict = {}
+    if {"lsh_near_dup_pairs", "ngram_jaccard_pairs"} <= only:
+        cols = ("doc_a", "doc_b")
+        exact = _pairs(spark, dedup.ngram_jaccard_pairs, tier_dir, cols)
+        lsh = _pairs(spark, dedup.lsh_near_dup_pairs, tier_dir, cols)
+        guards["lsh_near_dup_pairs.false_positives"] = _guard(
+            len(lsh - exact), hi=0)
+        guards["lsh_near_dup_pairs.recall"] = _guard(
+            round(len(lsh & exact) / max(len(exact), 1), 4), lo=0.8)
+    if {"ann_ivf_topk", "cosine_topk"} <= only:
+        cols = ("q_id", "c_id")
+        exact = _pairs(spark, similarity.cosine_topk, tier_dir, cols)
+        ivf = _pairs(spark, similarity.ann_ivf_topk, tier_dir, cols)
+        guards["ann_ivf_topk.recall"] = _guard(
+            round(len(ivf & exact) / max(len(exact), 1), 4), lo=0.7)
+    if "knn_label_agreement" in only:
+        def pooled_bp(**kw) -> float:
+            rows = similarity.knn_label_agreement(
+                spark, tier_dir, **kw).collect()
+            return 1e4 * sum(r.n_agree for r in rows) / max(
+                sum(r.n_edges for r in rows), 1)
+
+        guards["knn_label_agreement.pooled_delta_bp"] = _guard(round(abs(
+            pooled_bp() - pooled_bp(n_planes=8, n_tables=1)), 1), hi=50)
+    for name, bound in SCALE_WALL_BOUNDS.items():
+        if name in only:
+            guards[f"{name}.wall_ratio"] = _guard(
+                walls[name]["wall_ratio"], hi=bound)
+    for name, user_keyed in STATE_OPS.items():
+        if name not in only:
+            continue
+        s = state[name]
+        guards[f"{name}.bytes_per_key_ratio"] = _guard(
+            s["bytes_per_key_ratio"], hi=2)
+        guards[f"{name}.state_key_ratio"] = _guard(
+            s["state_key_ratio"], *((5, 15) if user_keyed else (None, 1.5)))
+    return guards
+
+
+def _state_sizes(peak: dict, name: str) -> dict:
+    """Peak state keys and bytes of ``name`` on both dirs, and their
+    tier-over-source ratios."""
+    out: dict = {}
+    for label in ("source", "scale"):
+        keys, size = peak.get(f"{label}:{name}", (None, None))
+        out[label] = {"keys": keys, "bytes": size,
+                      "bytes_per_key": round(size / keys, 1) if keys else None}
+    src, big = out["source"], out["scale"]
+    out["state_key_ratio"] = (round(big["keys"] / src["keys"], 2)
+                              if src["keys"] and big["keys"] else None)
+    out["bytes_per_key_ratio"] = (
+        round(big["bytes_per_key"] / src["bytes_per_key"], 2)
+        if src["bytes_per_key"] and big["bytes_per_key"] else None)
+    return out
+
+
+def run_scale(spark, src: str, only: set[str]) -> dict:
+    """The data-bound tier: an unmeasured warm-up pass, then the oracle
+    gate on ``src`` and on its ``build_scale_tier`` (SCALE_ORACLE_EXEMPT
+    rows-only there), per-query wall and row ratios, a min-of-2 re-run
+    of every query over its SCALE_WALL_BOUNDS entry, and the
+    ``scale_guards``."""
+    only = only or set(SCALE_QUERIES)
+    listener = state_listener(spark)
+    spark.streams.addListener(listener)
+    try:
+        print("[scale] unmeasured warmup pass (plan compile + JIT)...",
+              flush=True)
+        for _ in sweep_registry(spark, [("warmup", {}, src)], only):
+            pass
+        source = run_tier(spark, "source", src, only)
+        with tempfile.TemporaryDirectory(prefix="sweep_scale_") as d:
+            build_scale_tier(src, d)
+            tier = run_tier(spark, "scale", d, only, set(SCALE_ORACLE_EXEMPT))
+            walls = {
+                n: {"source_s": source["walls"][n], "scale_s": s,
+                    "wall_ratio": round(s / max(source["walls"][n], 1e-9), 2),
+                    "source_rows": source["rows"][n],
+                    "scale_rows": tier["rows"][n],
+                    "rows_ratio": round(tier["rows"][n]
+                                        / max(source["rows"][n], 1), 2)}
+                for n, s in tier["walls"].items() if n in source["walls"]
+            }
+            reruns = _rerun_over_bounds(spark, src, d, walls, set(walls))
+            listener.drain()
+            state = {n: _state_sizes(listener.peak, n)
+                     for n in STATE_OPS if n in walls}
+            guards = scale_guards(spark, d, walls, state, set(walls))
+    finally:
+        spark.streams.removeListener(listener)
+    failed = {k: v for k, v in guards.items() if not v["pass"]}
+    print("\n[scale] per-query walls and rows, tier over source:\n"
+          + json.dumps(walls, indent=1))
+    print(f"\n[scale] guards: {json.dumps(guards, indent=1)}\n[scale] "
+          f"failed guards: {sorted(failed) if failed else 'NONE'}",
+          flush=True)
+    counts = ("pass", "fail", "rows_only")
+    return {
+        "source": src,
+        "scale": SCALE,
+        "queries": sorted(only),
+        "oracle_exempt": SCALE_ORACLE_EXEMPT,
+        "source_counts": {k: source[k] for k in counts},
+        "scale_counts": {k: tier[k] for k in counts},
+        "walls": walls,
+        "reruns": reruns,
+        "state": state,
+        "guards": guards,
+        "failed_guards": sorted(failed),
+        "failures": {**{f"source:{k}": v for k, v in source["failures"].items()},
+                     **{f"scale:{k}": v for k, v in tier["failures"].items()}},
+    }
+
+
 # --- modes --------------------------------------------------------------
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -725,7 +1122,7 @@ def run_time(spark, sf_dir: str, only: set[str]) -> dict:
 
 
 MODES = (*ORACLE_INPUTS, "skew", "skew90", "determinism", "order", "config",
-         "time")
+         "time", "scale")
 
 
 def run_mode(spark, mode: str, sf_dir: str, only: set[str]):
@@ -744,13 +1141,19 @@ def run_mode(spark, mode: str, sf_dir: str, only: set[str]):
                       for v in (res["funnel_variant"],
                                 res["sessionize_variant"]))
         return res, total, n_fail, bool(n_fail or unequal or res["flagged"])
+    if mode == "scale":
+        res = run_scale(spark, sf_dir, only)
+        total = sum(res[k][c] for k in ("source_counts", "scale_counts")
+                    for c in ("pass", "fail", "rows_only"))
+        n_fail = res["source_counts"]["fail"] + res["scale_counts"]["fail"]
+        return res, total, n_fail, bool(n_fail or res["failed_guards"])
     with tempfile.TemporaryDirectory(prefix=f"sweep_{mode}_") as d:
         if mode in ORACLE_INPUTS:
             if ORACLE_INPUTS[mode]:
                 ORACLE_INPUTS[mode](sf_dir, d)
                 sf_dir = d
             res = run_tier(spark, mode, sf_dir, only)
-            del res["walls"]
+            del res["walls"], res["rows"]
             total = res["pass"] + res["fail"] + res["rows_only"]
             return res, total, res["fail"], res["fail"] > 0
         if mode == "determinism":
