@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import build_once, load_table
 
 SESSION_GAP = "30 minutes"
 # Boundary convention (pinned by tests/test_session_boundary.py): Spark's
@@ -338,6 +338,43 @@ ADVANCED_ORACLES = {
 FUNNEL_STAGES = ("view", "click", "purchase")
 
 
+def funnel_stage_counts(events: DataFrame,
+                        within_hours: int | None = None) -> DataFrame:
+    """``(stage, users, top_users)`` per stage of ``FUNNEL_STAGES`` over
+    ``(user_id, event_type, ts)`` rows: stage k's anchor is each user's
+    first stage-k event after their stage-(k-1) anchor (and, with
+    ``within_hours``, at most that many hours after it); ``users``
+    counts a stage's anchors and ``top_users`` the first stage's.
+
+    Stage k's anchors are read twice (the stage-k count and the
+    stage-k+1 join), so the plan re-derives earlier stages: 7 scans of
+    the event log for 3 stages. The anchors are still not built once:
+    each stage is one user-keyed aggregate over a filtered scan, and
+    interleaved A/B runs measured the per-stage checkpoint jobs slower
+    than the re-scans at sf0.1 and on its 10x tier."""
+    anchors = None
+    stage_counts = []
+    for stage in FUNNEL_STAGES:
+        hits = events.where(F.col("event_type") == stage)
+        if anchors is not None:
+            after = F.col("ts") > F.col("anchor_ts")
+            if within_hours is not None:
+                after = after & (F.col("ts") <= F.col("anchor_ts") + F.expr(
+                    f"INTERVAL {within_hours} HOURS"))
+            hits = hits.join(anchors, "user_id").where(after)
+        anchors = hits.groupBy("user_id").agg(F.min("ts").alias("anchor_ts"))
+        stage_counts.append(anchors.agg(
+            F.count(F.lit(1)).alias("users")
+        ).select(F.lit(stage).alias("stage"), "users"))
+    funnel = stage_counts[0]
+    for df in stage_counts[1:]:
+        funnel = funnel.unionByName(df)
+    top = funnel.where(F.col("stage") == FUNNEL_STAGES[0]).select(
+        F.col("users").alias("top_users")
+    )
+    return funnel.crossJoin(F.broadcast(top))
+
+
 def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel over the events table: users whose first
     ``view`` precedes a ``click`` that precedes a ``purchase``. Stage k
@@ -352,37 +389,12 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists are ever materialized (collect_list funnels die on power
     users), and no window over the raw event stream.
 
-    Each stage's anchor table is localCheckpointed (r12): stage k's
-    anchors are consumed twice (the stage-k count and the stage-k+1
-    join), so without materialization stage 3's lineage re-derived
-    stages 1-2 and the union re-derived stage 1 again — 7 scans of the
-    event log for a 3-stage funnel, growing quadratically with stage
-    count. The anchor tables are user-cardinality and only shrink."""
+    The chain is ``funnel_stage_counts``."""
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    anchors = None
-    stage_counts = []
-    for stage in FUNNEL_STAGES:
-        hits = events.where(F.col("event_type") == stage)
-        if anchors is not None:
-            hits = hits.join(anchors, "user_id").where(
-                F.col("ts") > F.col("anchor_ts")
-            )
-        anchors = hits.groupBy("user_id").agg(
-            F.min("ts").alias("anchor_ts")
-        ).localCheckpoint(eager=True)
-        stage_counts.append(anchors.agg(
-            F.count(F.lit(1)).alias("users")
-        ).select(F.lit(stage).alias("stage"), "users"))
-    funnel = stage_counts[0]
-    for df in stage_counts[1:]:
-        funnel = funnel.unionByName(df)
-    top = funnel.where(F.col("stage") == FUNNEL_STAGES[0]).select(
-        F.col("users").alias("top_users")
-    )
     return (
-        funnel.crossJoin(F.broadcast(top))
+        funnel_stage_counts(events)
         .select(
             "stage", "users",
             # try_divide: 0 entrants on a degenerate feed must yield
@@ -870,7 +882,12 @@ PAGERANK_ITERS = 5
 
 def _coactivity_edges(ev: DataFrame) -> DataFrame:
     """Directed edge (u, v) whenever two distinct users acted in the
-    same (event_type, minute) cell — both directions, distinct."""
+    same (event_type, minute) cell — both directions, distinct.
+
+    Built once (r12): every graph query reads the edge list several
+    times (degrees, both sides of a wedge join, every iteration of a
+    loop), and each read would otherwise re-run the cells self-join
+    from the scan."""
     cells = ev.select(
         "event_type",
         F.floor(F.unix_millis("ts") / F.lit(60_000)).alias("minute"),
@@ -878,7 +895,7 @@ def _coactivity_edges(ev: DataFrame) -> DataFrame:
     ).distinct()
     a = cells.alias("a")
     b = cells.alias("b")
-    return (
+    return build_once(
         a.join(
             b,
             (F.col("a.event_type") == F.col("b.event_type"))
@@ -904,7 +921,7 @@ def pagerank_coactivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node-keyed) with the edge list on src plus ONE aggregation on dst —
     the standard distributed power iteration; rank and degree vectors
     are node-cardinality (tiny next to edges). The edge list and node
-    vector are localCheckpointed ONCE before the loop (r12): without
+    vector are built ONCE before the loop (r12): without
     it, every iteration's lineage re-derives the co-activity self-join
     from the scan — the round-start plan held 22 parquet scans and 49
     exchanges for 5 iterations, and exchange reuse does not collapse
@@ -919,11 +936,9 @@ def pagerank_coactivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained SQL CTEs.
     """
     ev = load_table(spark, sf_dir, "events")
-    edges = _coactivity_edges(ev).localCheckpoint(eager=True)
+    edges = _coactivity_edges(ev)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node"), "deg").localCheckpoint(
-        eager=True
-    )
+    nodes = build_once(deg.select(F.col("src").alias("node"), "deg"))
     n_nodes = nodes.count()
     if n_nodes == 0:
         # degenerate corpus (no two users share a cell): empty ranking,
@@ -1253,10 +1268,8 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     # the slim (src, dst) edge list feeds FOUR downstream branches (deg,
-    # und, and both wedge sides via ori); without a checkpoint each
-    # branch would re-run the cells self-join — localCheckpoint cuts the
-    # lineage once, at 16 bytes/row
-    edges = _coactivity_edges(ev).localCheckpoint(eager=True)
+    # und, and both wedge sides via ori), 16 bytes/row, built once
+    edges = _coactivity_edges(ev)
     # undirected degree == out-degree of the symmetric edge list
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     und = edges.where(F.col("src") < F.col("dst"))
@@ -1276,9 +1289,10 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("deg_hi"),
         )
     )
-    # ori is consumed three times (both wedge sides + the closing-edge
-    # probe); checkpoint the oriented list too (lo, hi, deg_hi)
-    ori = ori.localCheckpoint(eager=True)
+    # ori is read three times (both wedge sides + the closing-edge
+    # probe) but not built once: it re-derives from the built edge list
+    # by two degree joins, and building it did not win wall time by more
+    # than the run-to-run spread at sf0.1 or on its 10x tier
     e1 = ori.alias("e1")
     e2 = ori.alias("e2")
     wedge_order = (F.col("e1.deg_hi") < F.col("e2.deg_hi")) | (
@@ -1481,17 +1495,15 @@ def ts_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranking uses the rounded r; ties break on (user_a, user_b)."""
     ev = load_table(spark, sf_dir, "events")
     day = F.unix_date(F.to_date("ts"))
-    # localCheckpoint (r12): the daily-count table feeds the bounds
-    # action, the per-user stats (both pair sides) and both series
-    # sides of the inner product — five consumers that each re-derived
-    # the groupBy from the scan otherwise (6 scans in the round-start
-    # plan). It is user x active-day cardinality, far smaller than the
-    # event log.
+    # the daily-count table feeds the bounds action, the per-user stats
+    # (both pair sides) and both series sides of the inner product, so
+    # the plan re-derives it per consumer; building it once halved task
+    # CPU but did not win wall time by more than the run-to-run spread
+    # at sf0.1 or on its 10x tier, so it is not built once
     cells = (
         ev.select(F.col("user_id"), day.alias("day"))
         .groupBy("user_id", "day")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     bounds = cells.agg(
         F.min("day").alias("lo"), F.max("day").alias("hi")
@@ -1751,11 +1763,11 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one edges⋈labels join plus one (node, label) count
     aggregate per round — the Pregel shape; the label vector is
-    node-cardinality and localCheckpoint cuts lineage each round. The
+    node-cardinality and build_once cuts lineage each round. The
     argmax is a partial-aggregable struct-max (count, then -label), no
     per-node sort window. The oracle unrolls the same rounds as CTEs."""
     ev = load_table(spark, sf_dir, "events")
-    edges = _coactivity_edges(ev).localCheckpoint(eager=True)
+    edges = _coactivity_edges(ev)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1765,7 +1777,7 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        labels = build_once(
             votes.groupBy("dst")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl")))
                  .alias("m"))
@@ -1773,7 +1785,6 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dst").alias("node"),
                 (-F.col("m.nl")).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
     return labels.orderBy("node")
 
@@ -2120,14 +2131,14 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each peel round is one edges-vs-alive semi-join pair
     plus a degree aggregate — the Pregel shape shared with
-    ``lpa_communities`` — with ``localCheckpoint`` cutting lineage and
+    ``lpa_communities`` — with ``build_once`` cutting lineage and
     a 1-row count as the convergence scalar (the dedup_clusters
     convention). Rounds are bounded by the peel depth (here single
     digits; pathological chains are capped at KCORE_MAX_ITERS with the
     oracle pinned to the same cap). The oracle runs the identical peel
     as a DuckDB recursive CTE over the adjacency map."""
     ev = load_table(spark, sf_dir, "events")
-    edges = _coactivity_edges(ev).localCheckpoint(eager=True)
+    edges = _coactivity_edges(ev)
     out_rows = []
     for k in KCORE_KS:
         alive = edges.select(F.col("src").alias("node")).distinct()
@@ -2141,10 +2152,8 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("src")
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            alive = (
-                deg.where(F.col("cnt") >= k)
-                .select(F.col("src").alias("node"))
-                .localCheckpoint(eager=True)
+            alive = build_once(
+                deg.where(F.col("cnt") >= k).select(F.col("src").alias("node"))
             )
             n = alive.count()
             if n == prev_n:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import fan_out, load_table
+from ..session import build_once, fan_out, load_table
 from .text import MD5H_SQL_TEMPLATE, TOKENS_SQL, md5h, with_tokens
 
 import math
@@ -138,14 +138,47 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 2× slower at sf0.1, and the single shuffle is keyed on
     doc_id so it stays linear at 100 TB."""
     docs = _with_shingles(load_table(spark, sf_dir, "documents"))
-    exploded = docs.select("doc_id", F.explode("shingles").alias("s")).withColumn(
+    return _signatures(docs).orderBy("doc_id")
+
+
+def _signatures(shingled: DataFrame) -> DataFrame:
+    """The MinHash signature of every ``(doc_id, shingles)`` row:
+    explode → one md5-derived base hash per shingle → K fused min
+    aggregates keyed on doc_id."""
+    exploded = shingled.select("doc_id", F.explode("shingles").alias("s")).withColumn(
         "h", F.expr("cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)")
     )
-    aggs = [
+    return exploded.groupBy("doc_id").agg(*[
         F.min(F.expr(_mix_expr("h", j, "spark"))).alias(f"mh{j}")
         for j in range(MINHASH_K)
-    ]
-    return exploded.groupBy("doc_id").agg(*aggs).orderBy("doc_id")
+    ])
+
+
+def _shingle_index(docs: DataFrame) -> DataFrame:
+    """The ``(doc_id, shingles)`` rows of the documents that have
+    shingles, built once: the LSH pair queries read it three times (the
+    signatures and both sides of the Jaccard verify)."""
+    return build_once(
+        _with_shingles(docs)
+        .where(F.size("shingles") > 0)
+        .select("doc_id", "shingles")
+    )
+
+
+def _jaccard_verified(cand: DataFrame, index: DataFrame,
+                      a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+    """Candidate pairs ``(a, b)`` whose exact shingle Jaccard, read from
+    both documents' rows of *index*, is at least JACCARD_THRESHOLD."""
+    sh_a = index.select(F.col("doc_id").alias(a), F.col("shingles").alias("sh_a"))
+    sh_b = index.select(F.col("doc_id").alias(b), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        cand.join(sh_a, a).join(sh_b, b)
+        .select(a, b, F.round(inter / union, 6).alias("jaccard"))
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .orderBy(a, b)
+    )
 
 
 def _minhash_oracle() -> str:
@@ -174,9 +207,10 @@ MINHASH_SIGNATURES_ORACLE = _minhash_oracle()
 # LSH near-dup candidate pairs → verified pairs → survivors
 # ---------------------------------------------------------------------------
 
-def _banded(docs_with_sig: DataFrame) -> DataFrame:
-    """Explode a signature table into slim ``(doc_id, band, bh)`` rows."""
-    r = MINHASH_K // LSH_BANDS
+def _banded(docs_with_sig: DataFrame, n_bands: int = LSH_BANDS) -> DataFrame:
+    """Explode a signature table into slim ``(doc_id, band, bh)`` rows,
+    ``n_bands`` bands of ``MINHASH_K // n_bands`` rows each."""
+    r = MINHASH_K // n_bands
     bands = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -186,7 +220,7 @@ def _banded(docs_with_sig: DataFrame) -> DataFrame:
                 + ")"
             ).alias("bh"),
         )
-        for b in range(LSH_BANDS)
+        for b in range(n_bands)
     ])
     return (
         docs_with_sig.select("doc_id", F.explode(bands).alias("b"))
@@ -194,7 +228,8 @@ def _banded(docs_with_sig: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_candidates(docs_with_sig: DataFrame) -> DataFrame:
+def _lsh_candidates(docs_with_sig: DataFrame,
+                    n_bands: int = LSH_BANDS) -> DataFrame:
     """Band the signature and self-join on (band, band_hash).
 
     The self-join sides carry only the slim ``(doc_id, band, bh)``
@@ -203,7 +238,7 @@ def _lsh_candidates(docs_with_sig: DataFrame) -> DataFrame:
     surviving candidate pairs by the caller; shipping them through the
     band join itself would multiply the shuffle payload by the document
     shingle count at 100 TB."""
-    exploded = _banded(docs_with_sig)
+    exploded = _banded(docs_with_sig, n_bands)
     left = exploded.alias("l")
     right = exploded.alias("r")
     return (
@@ -229,43 +264,13 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and reproduced step-for-step in DuckDB. The exact-join
     twin ``ngram_jaccard_pairs`` provides the recall ground truth.
 
-    Shape: shingle index materialized once (``localCheckpoint``), then
+    Shape: shingle index built once (``_shingle_index``), then
     (1) explode → codegen md5 → K min aggs for signatures, (2) slim band
     self-join for candidates, (3) candidates ⋈ shingle arrays (doc_id
     keyed, twice) for exact verification. Three doc_id-keyed shuffles,
     all linear in corpus size."""
-    shingled = (
-        _with_shingles(load_table(spark, sf_dir, "documents"))
-        .where(F.size("shingles") > 0)
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=True)
-    )
-    exploded = shingled.select("doc_id", F.explode("shingles").alias("s")).withColumn(
-        "h", F.expr("cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)")
-    )
-    sig_aggs = [
-        F.min(F.expr(_mix_expr("h", j, "spark"))).alias(f"mh{j}")
-        for j in range(MINHASH_K)
-    ]
-    with_sig = exploded.groupBy("doc_id").agg(*sig_aggs)
-    pairs = _lsh_candidates(with_sig)
-    sh_a = shingled.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    sh_b = shingled.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.join(sh_a, "doc_a").join(sh_b, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .orderBy("doc_a", "doc_b")
-    )
+    shingled = _shingle_index(load_table(spark, sf_dir, "documents"))
+    return _jaccard_verified(_lsh_candidates(_signatures(shingled)), shingled)
 
 
 def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,7 +308,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
     is the production path for large corpora). The cap does not bind at the
     test scales (max observed df at sf0.01 is 4)."""
     # fan=False (r12 A/B, 18 shingle consumers, interleaved min-of-3 at
-    # sf0.1): THIS consumer's explode lands in an eager localCheckpoint
+    # sf0.1): THIS consumer's explode lands in an eager build_once
     # whose write already spreads across cores, so the extra text-payload
     # exchange only costs here — and it costs again in every composite
     # that reuses this pair table (dedup_clusters/_star, cluster_report,
@@ -320,19 +325,18 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
     # (codegen'd xxhash64). The oracle joins on the exact string — results
     # agree unless a 64-bit collision lands inside one posting list
     # (probability ~n²/2⁶⁵; a collision would surface as an oracle FAIL).
-    # Materialize the hashed index ONCE (localCheckpoint): the shingle
+    # Build the hashed index ONCE (build_once): the shingle
     # explode is the CPU-expensive step (per-position string builds +
     # array_distinct) and is consumed three times below (df aggregation
     # + both self-join sides). The checkpointed form is the compact
     # (doc_id, n_sh, hash) triple — 20 bytes/row in executor storage —
     # the classic build-the-index-then-query-it shape; without it
     # Catalyst re-derives the explode for every consumer.
-    inv = (
+    inv = build_once(
         base.select(
             "doc_id", "n_sh", F.explode("shingles").alias("sstr")
         )
         .select("doc_id", "n_sh", F.xxhash64("sstr").alias("s"))
-        .localCheckpoint(eager=True)
     )
     # max-df filter: shingles are distinct per doc, so count(*) == doc
     # frequency. Anti-join against the HOT set (df > cap), not an inner
@@ -459,19 +463,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
     row-level diff join). Iterations = graph diameter, and each round is
     one shuffle keyed on vertex — the scalable shape (alternating-star
     contraction would cut rounds to O(log n) if diameters grew).
-    ``localCheckpoint`` truncates the lineage so the plan doesn't grow
+    ``build_once`` truncates the lineage so the plan doesn't grow
     exponentially across rounds."""
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
+    edges = build_once(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"),
                             F.col("doc_a").alias("dst")))
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = build_once(
         edges.select(F.col("src").alias("v")).distinct()
         .select("v", F.col("v").alias("label"))
-        .localCheckpoint(eager=True)
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for _ in range(max_iter):
@@ -480,13 +482,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
             .groupBy(F.col("dst").alias("v2"))
             .agg(F.min("label").alias("nbr_min"))
         )
-        labels = (
+        labels = build_once(
             labels.join(nbr, labels.v == F.col("v2"), "left")
             .select(
                 "v",
                 F.least("label", F.coalesce("nbr_min", "label")).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         new_sum = labels.agg(F.sum("label")).collect()[0][0]
         if new_sum == prev_sum:
@@ -519,7 +520,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 15) -> tuple[DataFrame, int]:
     in O(log n) rounds regardless of graph diameter — the upgrade over
     min-label propagation (O(diameter) rounds) for long-chain duplicate
     graphs. Each half-round is one shuffle keyed on vertex; the edge set
-    only shrinks toward stars, and ``localCheckpoint`` truncates lineage
+    only shrinks toward stars, and ``build_once`` truncates lineage
     per round.
 
     ``edges`` must be canonical undirected pairs ``(u, v)`` with
@@ -527,7 +528,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 15) -> tuple[DataFrame, int]:
     non-root vertex to its component min; roots are absent (label =
     self for them).
     """
-    edges = edges.localCheckpoint(eager=True)
+    edges = build_once(edges)
 
     def witness(e: DataFrame) -> tuple[int, int]:
         row = e.agg(
@@ -570,7 +571,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 15) -> tuple[DataFrame, int]:
             .union(mins2.select("u", F.col("mn").alias("v")))
             .distinct()
         )
-        edges = small.localCheckpoint(eager=True)
+        edges = build_once(small)
         cur = witness(edges)
         if cur == prev:
             converged = True
@@ -944,8 +945,8 @@ def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     version of the 1-(1-s^r)^b S-curve, computed on the corpus itself
     (which is how production pipelines actually pick b and r).
 
-    Scale shape: signatures and the truth set materialize ONCE
-    (localCheckpoint); each configuration re-bands the tiny signature
+    Scale shape: signatures and the truth set are built ONCE
+    (``build_once``); each configuration re-bands the tiny signature
     table (|docs|·b slim rows) and joins slim id pairs. More bands ⇒
     more candidates ⇒ recall can only rise — asserted in tests. The
     signature build, the truth build, and the per-config evaluations
@@ -955,62 +956,19 @@ def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     def _build_sig():
-        shingled = (
-            _with_shingles(load_table(spark, sf_dir, "documents"))
-            .where(F.size("shingles") > 0)
-            .select("doc_id", "shingles")
-            .localCheckpoint(eager=True)
-        )
-        exploded = shingled.select(
-            "doc_id", F.explode("shingles").alias("s")
-        ).withColumn(
-            "h",
-            F.expr("cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)"),
-        )
-        return exploded.groupBy("doc_id").agg(*[
-            F.min(F.expr(_mix_expr("h", j, "spark"))).alias(f"mh{j}")
-            for j in range(MINHASH_K)
-        ]).localCheckpoint(eager=True)
+        # the shingles have one consumer, the signature build, which is
+        # itself built once: no build_once of their own
+        docs = _with_shingles(load_table(spark, sf_dir, "documents"))
+        return build_once(_signatures(docs))
 
     def _build_truth():
-        truth = ngram_jaccard_pairs(spark, sf_dir).select(
+        truth = build_once(ngram_jaccard_pairs(spark, sf_dir).select(
             "doc_a", "doc_b"
-        ).localCheckpoint(eager=True)
+        ))
         return truth, truth.count()
 
     def _eval_config(n_bands, r):
-        bands = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                md5h(
-                    "concat_ws(':', "
-                    + ", ".join(f"mh{b * r + i}" for i in range(r))
-                    + ")"
-                ).alias("bh"),
-            )
-            for b in range(n_bands)
-        ])
-        banded = with_sig.select(
-            "doc_id", F.explode(bands).alias("b")
-        ).select(
-            "doc_id", F.col("b.band").alias("band"),
-            F.col("b.bh").alias("bh"),
-        )
-        cand = (
-            banded.alias("l")
-            .join(
-                banded.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bh") == F.col("r.bh"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_a"),
-                F.col("r.doc_id").alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-            .localCheckpoint(eager=True)
-        )
+        cand = build_once(_lsh_candidates(with_sig, n_bands))
         n_cand = cand.count()
         n_hits = cand.join(truth, ["doc_a", "doc_b"]).count()
         # None (-> SQL NULL) when the corpus has no true near-dup pairs:
@@ -1303,22 +1261,8 @@ def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr_df = docs.agg(
         F.floor(F.max("doc_id") * 0.8).cast("long").alias("thr")
     )
-    shingled = (
-        _with_shingles(docs)
-        .where(F.size("shingles") > 0)
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=True)
-    )
-    exploded = shingled.select(
-        "doc_id", F.explode("shingles").alias("s")
-    ).withColumn(
-        "h", F.expr("cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)")
-    )
-    with_sig = exploded.groupBy("doc_id").agg(*[
-        F.min(F.expr(_mix_expr("h", j, "spark"))).alias(f"mh{j}")
-        for j in range(MINHASH_K)
-    ])
-    banded = _banded(with_sig).crossJoin(F.broadcast(thr_df))
+    shingled = _shingle_index(docs)
+    banded = _banded(_signatures(shingled)).crossJoin(F.broadcast(thr_df))
     new = banded.where(F.col("doc_id") > F.col("thr"))
     old = banded.where(F.col("doc_id") <= F.col("thr"))
     cand = (
@@ -1334,23 +1278,7 @@ def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["new_doc", "dup_of"])
     )
-    sh_n = shingled.select(
-        F.col("doc_id").alias("new_doc"), F.col("shingles").alias("sh_n")
-    )
-    sh_o = shingled.select(
-        F.col("doc_id").alias("dup_of"), F.col("shingles").alias("sh_o")
-    )
-    inter = F.size(F.array_intersect("sh_n", "sh_o"))
-    union = F.size("sh_n") + F.size("sh_o") - inter
-    return (
-        cand.join(sh_n, "new_doc").join(sh_o, "dup_of")
-        .select(
-            "new_doc", "dup_of",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .orderBy("new_doc", "dup_of")
-    )
+    return _jaccard_verified(cand, shingled, "new_doc", "dup_of")
 
 
 LSH_INCREMENTAL_PAIRS_ORACLE = (
@@ -1818,20 +1746,17 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     def _keepers():
-        k = (
+        k = build_once(
             dedup_exact(spark, sf_dir)
             .select(F.col("keeper_doc_id").alias("doc_id"))
-            .localCheckpoint(eager=True)
         )
         return k, k.count()
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_total = pool.submit(docs.count)
         f_keep = pool.submit(_keepers)
-        pairs = (
-            lsh_near_dup_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
+        pairs = build_once(
+            lsh_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
         )
         n_total = f_total.result()
         keepers, n_keep1 = f_keep.result()
@@ -2047,7 +1972,7 @@ def blocking_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     def _mat(build):
-        df = build().select("doc_a", "doc_b").localCheckpoint(eager=True)
+        df = build_once(build().select("doc_a", "doc_b"))
         return df, df.count()
 
     blocker_builds = [

@@ -477,13 +477,12 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sqrt is correctly-rounded per IEEE 754; output floor-quantized
     to millionths.
 
-    The edge list is localCheckpointed ONCE (r12): it feeds the degree
-    aggregate and the xy join, and without materialization each
+    The edge list is built once inside ``_coactivity_edges`` (r12): it
+    feeds the degree aggregate and the xy join, and without it each
     consumer's lineage re-derives the co-activity self-join from the
-    scan (6 parquet scans in the round-start plan) — the build-once
-    shape the rest of the graph family uses."""
+    scan (6 parquet scans in the round-start plan)."""
     ev = _t(spark, sf_dir, "events")
-    edges = _coactivity_edges(ev).localCheckpoint(eager=True)
+    edges = _coactivity_edges(ev)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     xy = (
         edges.join(
@@ -1672,13 +1671,13 @@ def link_prediction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered(20) with a full deterministic tie-break. Integer
     arithmetic end to end.
 
-    The edge list is localCheckpointed ONCE (r12): six consumers (both
-    wedge sides, the anti-join, the degree aggregate reused three ways)
-    each re-derived the co-activity self-join from the scan otherwise
-    (12 parquet scans / 24 exchanges in the round-start plan) — the
-    build-once shape the rest of the graph family uses."""
+    The edge list is built once inside ``_coactivity_edges`` (r12): six
+    consumers (both wedge sides, the anti-join, the degree aggregate
+    reused three ways) each re-derived the co-activity self-join from
+    the scan otherwise (12 parquet scans / 24 exchanges in the
+    round-start plan)."""
     ev = _t(spark, sf_dir, "events")
-    edges = _coactivity_edges(ev).localCheckpoint(eager=True)
+    edges = _coactivity_edges(ev)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     centers = deg.where(F.col("deg") <= LP_HUB_CAP).select(
         F.col("src").alias("w")
@@ -2036,11 +2035,11 @@ def recs_coverage_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the rec lists are anchor-bounded by construction;
     both metrics are one aggregate over them plus a broadcast join to
     the part dimension for brands and a 1-row catalog count. Integer
-    basis points. The rec-list table is localCheckpointed (r12): the
-    brand-diversity chain and the distinct-reco count both consume it,
-    and without materialization each re-derived the full also_bought
-    co-occurrence build (8 scans in the round-start plan)."""
-    recs = also_bought_topn(spark, sf_dir).localCheckpoint(eager=True)
+    basis points. The brand-diversity chain and the distinct-reco
+    count both read the rec lists, so the plan builds them twice; an
+    interleaved A/B measured building them once slower at sf0.1 and on
+    its 10x tier (it ran five more jobs than the second build)."""
+    recs = also_bought_topn(spark, sf_dir)
     part = _t(spark, sf_dir, "part").select(
         F.col("p_partkey"), F.col("p_brand")
     )

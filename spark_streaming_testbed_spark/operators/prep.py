@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import load_table
+from ..session import build_once, load_table
 from .text import MD5H_SQL_TEMPLATE, md5h, with_grams, with_tokens
 
 #: k-anonymity threshold: quasi-identifier groups smaller than this are
@@ -863,29 +863,12 @@ def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the production detector; the pair set materializes ONCE at the
     loosest threshold and every tighter threshold reuses it via an
     explode + re-aggregate (bounded by |thresholds|)."""
-    from .similarity import _cosine_arrow, ivf_assign
+    from .similarity import cluster_cosine_pairs
 
-    assigned = (
-        ivf_assign(spark, sf_dir)
-        .select("vec_id", "embedding", "list_id")
-        .localCheckpoint(eager=True)
-    )
-    a = assigned.select(
-        "list_id", F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-    )
-    b = assigned.select(
-        "list_id", F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-    )
     floor_th = SWEEP_THRESHOLDS[0] / 1000000.0
     pairs = (
-        a.join(b, "list_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            # list-blocked pairs scale with the corpus — Arrow kernel
-            "id_b", F.round(_cosine_arrow("ea", "eb"), 6).alias("cosine")
-        )
+        cluster_cosine_pairs(spark, sf_dir)
+        .select("id_b", "cosine")
         .where(F.col("cosine") >= F.lit(floor_th))
     )
     ths = F.array(
@@ -1690,42 +1673,17 @@ def funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     must land within :data:`FUNNEL_WINDOW_HOURS` of the previous
     stage's anchor — the business definition ("converted within 48 h"),
     which the unbounded funnel over-counts. Same min-timestamp chaining
-    shape as ``event_funnel`` (advanced.py): per-stage conditional
-    aggregates joined co-partitioned on user_id, no per-user event
-    lists, no raw-stream window; integer basis points."""
-    stages = ("view", "click", "purchase")
+    chain as ``event_funnel`` (``advanced.funnel_stage_counts``):
+    per-stage conditional aggregates joined co-partitioned on user_id,
+    no per-user event lists, no raw-stream window; integer basis
+    points."""
+    from .advanced import funnel_stage_counts
+
     events = _t(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    anchors = None
-    counts = []
-    for stage in stages:
-        hits = events.where(F.col("event_type") == stage)
-        if anchors is not None:
-            hits = hits.join(anchors, "user_id").where(
-                (F.col("ts") > F.col("anchor_ts"))
-                & (F.col("ts") <= F.col("anchor_ts")
-                   + F.expr(f"INTERVAL {FUNNEL_WINDOW_HOURS} HOURS"))
-            )
-        # checkpoint each stage's anchors: the stage-count union would
-        # otherwise recompute the whole upstream chain per stage
-        # (1+2+3 passes over the facts instead of 3)
-        anchors = hits.groupBy("user_id").agg(
-            F.min("ts").alias("anchor_ts")
-        ).localCheckpoint(eager=True)
-        counts.append(
-            anchors.agg(F.count(F.lit(1)).alias("users")).select(
-                F.lit(stage).alias("stage"), "users"
-            )
-        )
-    funnel = counts[0]
-    for df in counts[1:]:
-        funnel = funnel.unionByName(df)
-    top = funnel.where(F.col("stage") == stages[0]).select(
-        F.col("users").alias("top_users")
-    )
     return (
-        funnel.crossJoin(F.broadcast(top))
+        funnel_stage_counts(events, within_hours=FUNNEL_WINDOW_HOURS)
         .select(
             "stage", "users",
             # guard: zero entrants (degenerate feed) must yield NULL
@@ -2333,10 +2291,10 @@ def dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each detector keeps its own scale shape; the consensus
     is two full-outer joins of slim id-pair lists. The detector
-    builders run their index materializations (eager localCheckpoints)
-    at build time, so the three builds run CONCURRENTLY from a driver
-    thread pool (guide §2: overlap independent jobs); the join DAG
-    below stays lazy and unchanged."""
+    builders run their index builds (``build_once``) at build time, so
+    the three builds run CONCURRENTLY from a driver thread pool (guide
+    §2: overlap independent jobs); the join DAG below stays lazy and
+    unchanged."""
     from concurrent.futures import ThreadPoolExecutor
 
     from .dedup import lsh_near_dup_pairs, ngram_jaccard_pairs
@@ -3132,12 +3090,12 @@ def session_cooccurrence_lift(
     Scale shape: sessions reduce to distinct (session, type) first;
     the pair join is keyed on the session id and the type sets are
     bounded (|types|² pairs total); counts only. The session table is
-    localCheckpointed (r12): it feeds the total count, the per-type
+    built once (r12): it feeds the total count, the per-type
     counts and both sides of the pair join — without materialization
     each consumer re-derived the session_window aggregate from the
     scan (5 scans in the round-start plan)."""
     ev = _t(spark, sf_dir, "events")
-    sessions = (
+    sessions = build_once(
         ev.groupBy(
             F.session_window("ts", "30 minutes").alias("sw"), "user_id"
         )
@@ -3150,7 +3108,6 @@ def session_cooccurrence_lift(
             ).alias("sid"),
             "types",
         )
-        .localCheckpoint(eager=True)
     )
     present = sessions.select(
         "sid", F.explode("types").alias("etype")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import build_once, load_table
 from .text import MD5H_SQL_TEMPLATE, md5h
 
 TOP_K = 5
@@ -954,13 +954,24 @@ def semantic_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local codegen (:func:`ivf_assign`). The exact global twin
     ``dedup_embedding_pairs`` is the recall ground truth: every pair
     here appears there (cluster-locality only removes candidates)."""
-    # both join sides derive from the same assignment; localCheckpoint
-    # evaluates the quantizer fit + corpus scan once instead of once
-    # per branch (the r3 audit measured the recompute at ~2x)
-    assigned = (
-        ivf_assign(spark, sf_dir)
-        .select("vec_id", "embedding", "list_id")
-        .localCheckpoint(eager=True)
+    return (
+        cluster_cosine_pairs(spark, sf_dir)
+        .where(F.col("cosine") >= SEMDEDUP_THRESHOLD)
+        .orderBy("list_id", "id_a", "id_b")
+    )
+
+
+def cluster_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(list_id, id_a, id_b, cosine)`` for every pair of corpus vectors
+    in one IVF list (``id_a < id_b``, cosine to 6 dp): the within-cluster
+    candidate set of ``semantic_dup_pairs`` and
+    ``prep.embedding_threshold_sweep``.
+
+    Both join sides derive from the same assignment, so it is built
+    once: the quantizer fit and corpus scan run once instead of once per
+    branch (the r3 audit measured the recompute at ~2x)."""
+    assigned = build_once(
+        ivf_assign(spark, sf_dir).select("vec_id", "embedding", "list_id")
     )
     a = assigned.select(
         "list_id", F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea")
@@ -976,8 +987,6 @@ def semantic_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cluster-local ALL-pairs scales with the corpus — Arrow kernel
             F.round(_cosine_arrow("ea", "eb"), 6).alias("cosine"),
         )
-        .where(F.col("cosine") >= SEMDEDUP_THRESHOLD)
-        .orderBy("list_id", "id_a", "id_b")
     )
 
 

@@ -270,6 +270,28 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(par, *cols) if cols else df.repartition(par)
 
 
+def build_once(df: DataFrame) -> DataFrame:
+    """Compute *df* now and return a frame that reads the stored result,
+    with its lineage cut. The only place the package checkpoints.
+
+    A query calls this when several consumers read one table (each would
+    otherwise re-derive it from the scan) or inside an iterative loop
+    (the plan would otherwise grow every round).
+
+    Fault model. With a checkpoint dir set on the SparkContext
+    (``sparkContext.setCheckpointDir``, Spark's own setting) the table is
+    written there with reliable ``checkpoint``: a lost executor only
+    costs a re-read. Without one it is ``localCheckpoint``: the blocks
+    live in executor storage and have no lineage, so losing an executor
+    after the build fails the query ("checkpoint block not found").
+    In ``local[N]`` the only executor is the driver, which cannot be
+    lost without losing the query too, so local blocks cost nothing
+    there. On a cluster, set a checkpoint dir."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table (schema from footer, no inference)."""
     ensure_session_confs(spark)

@@ -62,8 +62,7 @@ Functions [1]: [max(value#2)]
 """,
 )
 
-LITERAL_GRID = _plan(
-    """
+_GRID_TREE = """
 AdaptiveSparkPlan (7)
 +- BroadcastNestedLoopJoin Inner BuildRight (6)
    :- Filter (2)
@@ -72,7 +71,24 @@ AdaptiveSparkPlan (7)
       +- Filter (4)
          +- Scan ExistingRDD (3)
 """
-)
+
+
+def _rdd_leaf(origin: str) -> str:
+    """The detail block Spark prints for ``Scan ExistingRDD (3)`` over
+    an RDD made at *origin*."""
+    return (
+        "(3) Scan ExistingRDD\n"
+        "Output [1]: [k#7]\n"
+        f"Arguments: [k#7], MapPartitionsRDD[11] at {origin} at "
+        "NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)\n"
+    )
+
+
+# createDataFrame over driver rows
+LITERAL_GRID = _plan(_GRID_TREE, _rdd_leaf("applySchemaToPythonRDD"))
+# the same tree over a checkpointed table (build_once): the leaf is an
+# ExistingRDD too, but of a data-sized table
+CHECKPOINTED_GRID = _plan(_GRID_TREE, _rdd_leaf("localCheckpoint"))
 
 KEYED_AGG_OVER_TOPK = _plan(
     """
@@ -138,6 +154,10 @@ def test_keyed_aggregate_over_parquet_is_unbounded():
 
 def test_literal_leaf_build_is_bounded():
     assert plan_sweep._classify_bnlj(LITERAL_GRID) == "bounded_build"
+
+
+def test_checkpointed_leaf_build_is_unbounded():
+    assert plan_sweep._classify_bnlj(CHECKPOINTED_GRID) == "unbounded"
 
 
 def test_keyed_aggregate_passes_through_to_limit():
@@ -223,6 +243,19 @@ def test_prover_against_live_spark_plans(spark):
     grid = spark.range(7).select(F.col("id").alias("offset"))
     literal = _real_plan(docs.crossJoin(grid))
     assert plan_sweep._classify_bnlj(literal) == "bounded_build"
+
+    # an ExistingRDD has no size estimate, so force it to the build side
+    rows = spark.createDataFrame([(1,), (2,)], "k int")
+    driver_rows = _real_plan(docs.crossJoin(F.broadcast(rows)))
+    assert "Scan ExistingRDD" in driver_rows
+    assert plan_sweep._classify_bnlj(driver_rows) == "bounded_build"
+
+    from spark_streaming_testbed_spark.session import build_once
+
+    built = build_once(other)
+    checkpointed = _real_plan(docs.crossJoin(F.broadcast(built)))
+    assert "Scan ExistingRDD" in checkpointed
+    assert plan_sweep._classify_bnlj(checkpointed) == "unbounded"
 
 
 def test_committed_sweep_artifact_is_clean():

@@ -19,8 +19,10 @@ row-non-increasing nodes (Project/Filter/Sort/Window/keyed aggregates/
 scalar-anchor pattern from SURVEY.md - e.g. joining a 1-row global
 MAX/percentile back onto a fact table), an explicit Limit/TakeOrdered
 (at most k rows), or a subtree whose leaves are all driver-local
-literals (ExistingRDD/LocalTableScan/Range - fixed at plan-build time,
-cannot grow with the dataset). Those nested loops degenerate to a map
+literals (LocalTableScan, Range, or an ExistingRDD made by
+``createDataFrame`` over driver rows - fixed at plan-build time, cannot
+grow with the dataset; an ExistingRDD from ``build_once`` holds a
+data-sized table and proves nothing). Those nested loops degenerate to a map
 over the probe side and are exactly the plan you want at 100 TB -
 broadcasting a constant-size side beats shuffling the fact table.
 Anything not provable from the plan must be allowlisted by hand with a
@@ -93,7 +95,12 @@ _LIMITS = {"GlobalLimit", "LocalLimit", "TakeOrderedAndProject", "CollectLimit"}
 # Leaves whose row count is fixed at plan-build time (driver-local
 # literals / generators) — they cannot grow with the dataset, so any
 # subtree built exclusively from them is constant w.r.t. data scale.
-_LITERAL_LEAVES = ("Scan ExistingRDD", "LocalTableScan", "Range")
+_LITERAL_LEAVES = ("LocalTableScan", "Range")
+# An ExistingRDD leaf is a literal only when its Arguments line names a
+# driver-local origin: ``createDataFrame`` over Python rows. Every eager
+# checkpoint scans as ExistingRDD too ("MapPartitionsRDD[n] at
+# localCheckpoint"), over a table of any size.
+_DRIVER_LOCAL_RDD_ORIGINS = ("at applySchemaToPythonRDD ",)
 
 # Intentional exceptions the plan cannot prove bounded on its own; each
 # carries the scale rationale. A hit NOT auto-proven and NOT listed
@@ -197,14 +204,17 @@ def _detail_block(plan: str, nid: int) -> str:
     return m.group(0) if m else ""
 
 
-def _data_independent(node: _Node) -> bool:
+def _data_independent(node: _Node, plan: str) -> bool:
     """True iff every leaf of the subtree is a driver-local literal
-    (ExistingRDD / LocalTableScan / Range) — its row count is fixed at
-    plan-build time and cannot grow with the dataset, no matter what
-    joins/explodes sit above the leaves."""
+    (LocalTableScan / Range / driver-row ExistingRDD) — its row count
+    is fixed at plan-build time and cannot grow with the dataset, no
+    matter what joins/explodes sit above the leaves."""
     if not node.children:
+        if node.label.startswith("Scan ExistingRDD"):
+            detail = _detail_block(plan, node.nid)
+            return any(o in detail for o in _DRIVER_LOCAL_RDD_ORIGINS)
         return node.label.startswith(_LITERAL_LEAVES)
-    return all(_data_independent(c) for c in node.children)
+    return all(_data_independent(c, plan) for c in node.children)
 
 
 def _is_bounded(node: _Node, plan: str) -> bool:
@@ -212,7 +222,7 @@ def _is_bounded(node: _Node, plan: str) -> bool:
     data-independent literal) row count regardless of input size."""
     cur = node
     while True:
-        if _data_independent(cur):
+        if _data_independent(cur, plan):
             return True
         if cur.name in _LIMITS:
             return True

@@ -41,6 +41,10 @@ step config_parity
 python tools/sweep.py config "$TD/sf0.01" --out CONFIG_PARITY_r$N.json > "$G/config.log" 2>&1; fin config_parity $?
 step checkpoint_sweep
 python tools/checkpoint_sweep.py "$TD/sf0.001" CHECKPOINT_SWEEP_r$N.json > "$G/checkpoint.log" 2>&1; fin checkpoint_sweep $?
+# build_once under reliable checkpoints: block loss survived, registry
+# against its oracles at sf0.001, the queries that wrote checkpoints
+step build_once_reliable
+python -m pytest -m degenerate tests/test_build_once.py -q -s > "$G/build_once.log" 2>&1; fin build_once_reliable $?
 sweep degen_empty empty sf0.001
 sweep degen_one_row one_row sf0.001
 sweep degen_nulls nulls sf0.001
