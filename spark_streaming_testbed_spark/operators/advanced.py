@@ -348,7 +348,7 @@ def funnel_stage_counts(events: DataFrame,
 
     Stage k's anchors are read twice (the stage-k count and the
     stage-k+1 join), so the plan re-derives earlier stages: 7 scans of
-    the event log for 3 stages. The anchors are still not built once:
+    the event log for 3 stages. Even so the anchors are not built once:
     each stage is one user-keyed aggregate over a filtered scan, and
     interleaved A/B runs measured the per-stage checkpoint jobs slower
     than the re-scans at sf0.1 and on its 10x tier."""
