@@ -204,16 +204,19 @@ class TestPlan(_Sequence):
         d = self.phases_duration
         return d is not None and d <= second
 
-    def rows(self, max_seconds: int | None = None) -> list[tuple[int, int]]:
-        """Flatten to ``(time_ms, value)`` rows, time-ordered.
-
-        ``max_seconds`` bounds unbounded plans (required for those).
-        """
-        d = self.duration if max_seconds is None else max_seconds
-        if d is None:
+    def n_seconds(self, max_seconds: int | None = None) -> int:
+        """Plan-seconds to render: ``max_seconds`` if given, else the
+        plan's duration. An unbounded plan needs ``max_seconds``."""
+        n = self.duration if max_seconds is None else max_seconds
+        if n is None:
             raise ValueError("unbounded plan: pass max_seconds")
+        return n
+
+    def rows(self, max_seconds: int | None = None) -> list[tuple[int, int]]:
+        """Flatten to ``(time_ms, value)`` rows, time-ordered, over
+        :meth:`n_seconds` plan-seconds."""
         out: list[tuple[int, int]] = []
-        for second in range(d):
+        for second in range(self.n_seconds(max_seconds)):
             for dat in self.values_for(second):
                 out.extend((dat.time_ms, v) for v in dat.values)
         return out

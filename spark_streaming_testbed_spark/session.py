@@ -192,15 +192,17 @@ def pickle_datasources_by_value() -> None:
     whenever the driver process's cwd/PYTHONPATH doesn't already expose
     this package (e.g. the driver harness running from its own cwd).
     Registering the modules the pickled instance closes over — the two
-    DataSource modules and the pure-Python plan arithmetic they use —
-    embeds their code in the pickle itself, so the runner needs nothing
-    but pyspark + stdlib. Idempotent; cheap (the modules are small)."""
+    DataSource modules, the pure-Python plan arithmetic and the admission
+    rule they use — embeds their code in the pickle itself, so the runner
+    needs nothing but pyspark + stdlib. Idempotent; cheap (the modules
+    are small)."""
     from pyspark import cloudpickle
 
     from .plans import phases
     from .sources import profile_datasource, rs_tcp
+    from .streaming import controller
 
-    for mod in (phases, profile_datasource, rs_tcp):
+    for mod in (phases, profile_datasource, rs_tcp, controller):
         cloudpickle.register_pickle_by_value(mod)
 
 

@@ -5,33 +5,30 @@ The reference implements a custom receiver contract
 factories, simple-streaming-app rs/SubscriberInputDStream.scala:13-49) to
 pull demand-driven data into Spark. The Spark-4-native equivalent is the
 Python DataSource API: this module registers ``format("rate_profile")``
-with
+as a **streaming reader** whose per-microbatch offset range advances
+``seconds_per_batch`` plan-seconds at a time — admission control as
+offsets, replacing the reactive-streams demand handshake (each trigger
+*requests* a bounded slice, exactly like ``Subscription.request(n)``).
+A batch render of the same plan is ``profile_source.profile_dataframe``.
 
-- a **batch reader** that partitions the plan's seconds across tasks
-  (column pruning-friendly: fixed 3-column schema), and
-- a **streaming reader** whose per-microbatch offset range advances
-  ``seconds_per_batch`` plan-seconds at a time — admission control as
-  offsets, replacing the reactive-streams demand handshake (each trigger
-  *requests* a bounded slice, exactly like ``Subscription.request(n)``).
+Options:
 
-Options: ``plan`` (JSON test plan), ``max_seconds`` (bound for unbounded
-plans), ``epoch_ms`` (timestamp anchor), ``stream_id``,
-``seconds_per_batch`` (streaming admission quantum).
-
-Admission control (T2/T3, the reference's congestion handling):
-
+- ``plan`` (JSON test plan), ``max_seconds`` (bound for unbounded
+  plans), ``epoch_ms`` (timestamp anchor), ``stream_id``,
+  ``seconds_per_batch`` (admission quantum, default 1);
 - ``strategy``: ``ignore`` (admit everything, default), ``drop`` (admit
   up to the rate budget, surplus discarded), ``sampling`` (over budget →
   admit every k-th row), ``pushback`` (surplus stays queued at the
   source; offsets simply stop advancing) — the four ``-s`` modes of the
-  reference's receiver (test-runs-001/README.md:20-61).
+  reference's receiver (test-runs-001/README.md:20-61), applied by
+  ``streaming.controller.admit``, the rule the simulator uses too;
 - ``rate_limit``: static budget in rows/sec (budget per trigger =
-  rate × seconds_per_batch).
+  rate × seconds_per_batch);
 - ``control_file``: JSON file ``{"rate": <rows/sec>}`` polled at every
   ``read()`` — the live feedback channel. A ``RateFeedbackListener``
   writing PID estimates here closes the back-pressure loop *mid-run*,
   matching the reference's ``updateRateLimit`` push
-  (simple-streaming-app rs/SubscriberInputDStream.scala:43-48).
+  (simple-streaming-app rs/SubscriberInputDStream.scala:43-48);
 - ``accounting_file``: JSONL sink for per-trigger
   offered/requested/admitted/dropped/queued accounting — the observables
   the reference logs and parses back (ReceiverLogData.scala:31-36).
@@ -41,12 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     IntegerType,
     StructField,
@@ -55,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans.phases import TestPlan, parse_plan
+from ..streaming.controller import admit
 from .profile_source import DEFAULT_EPOCH_MS
 
 SCHEMA = StructType([
@@ -78,44 +71,15 @@ def _rows_for_seconds(
                 yield (ts, int(v), stream_id)
 
 
-class _SecondsRange(InputPartition):
-    def __init__(self, lo: int, hi: int) -> None:
-        self.lo, self.hi = lo, hi
-
-
-class ProfileBatchReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.plan = parse_plan(options["plan"])
-        self.max_seconds = int(options.get("max_seconds", 0)) or None
-        self.epoch_ms = int(options.get("epoch_ms", DEFAULT_EPOCH_MS))
-        self.stream_id = int(options.get("stream_id", 0))
-        self.tasks = int(options.get("tasks", 8))
-
-    def partitions(self) -> list[InputPartition]:
-        total = self.plan.duration if self.max_seconds is None else self.max_seconds
-        if total is None:
-            raise ValueError("unbounded plan: set max_seconds")
-        step = max(1, -(-total // self.tasks))
-        return [
-            _SecondsRange(lo, min(lo + step, total))
-            for lo in range(0, total, step)
-        ]
-
-    def read(self, partition: _SecondsRange) -> Iterator[tuple]:
-        return _rows_for_seconds(
-            self.plan, partition.lo, partition.hi, self.epoch_ms, self.stream_id
-        )
-
-
 class ProfileStreamReader(SimpleDataSourceStreamReader):
     """Offsets are ``(plan-second, row-within-second)`` positions; each
     microbatch admits a bounded slice — the structured-streaming form of
     demand signaling (T4), extended with live congestion strategies
     (T2/T3, see module docstring).
 
-    Replay determinism: for ``drop``/``sampling`` the *end* offset also
-    records how many rows were admitted (``adm``) and the sampling
-    stride (``stride``), so ``readBetweenOffsets`` reproduces the exact
+    Replay determinism: when rows are dropped the *end* offset also
+    records the admission stride (``stride``) and how many rows were
+    admitted (``adm``), so ``readBetweenOffsets`` reproduces the exact
     admitted subset from the two offsets alone after a restart.
     """
 
@@ -126,8 +90,6 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
         self.stream_id = int(options.get("stream_id", 0))
         self.quantum = int(options.get("seconds_per_batch", 1))
         self.strategy = options.get("strategy", "ignore")
-        if self.strategy not in ("ignore", "drop", "sampling", "pushback"):
-            raise ValueError(f"unknown congestion strategy: {self.strategy}")
         self.rate_limit = float(options.get("rate_limit", 0)) or None
         self.control_file = options.get("control_file")
         self.accounting_file = options.get("accounting_file")
@@ -136,16 +98,10 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
         # produced up to. Advances one quantum per trigger regardless of
         # consumption — a pushback-stalled offset therefore accumulates a
         # backlog of generated-but-unadmitted rows, like a push source.
-        self._gen_second: int | None = None
+        self._gen_second = 0
 
     def initialOffset(self) -> dict:
         return {"second": 0, "row": 0}
-
-    def _end_second(self) -> int:
-        total = self.plan.duration if self.max_seconds is None else self.max_seconds
-        if total is None:
-            raise ValueError("unbounded plan: set max_seconds")
-        return total
 
     def _current_rate(self) -> float | None:
         """Latest rows/sec budget: control-file estimate wins over the
@@ -192,10 +148,8 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         lo_s, lo_r = start["second"], start.get("row", 0)
-        end_s = self._end_second()
-        gen_lo = self._gen_second if self._gen_second is not None else lo_s
-        gen_lo = max(gen_lo, lo_s)
-        gen_hi = min(gen_lo + self.quantum, end_s)
+        gen_lo = max(self._gen_second, lo_s)
+        gen_hi = min(gen_lo + self.quantum, self.plan.n_seconds(self.max_seconds))
         self._gen_second = gen_hi
         n_new = sum(
             len(d.values)
@@ -208,27 +162,14 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
         budget = (
             max(1, int(rate * self.quantum)) if rate is not None else None
         )
-        dropped = queued = 0
-        if budget is None or self.strategy == "ignore" or len(available) <= budget:
-            admitted = available
-            end = (
-                {"second": gen_hi, "row": 0}
-                if gen_hi > lo_s
-                else {"second": lo_s, "row": lo_r}
-            )
-        elif self.strategy == "drop":
-            admitted = available[:budget]
-            dropped = len(available) - len(admitted)
-            end = {"second": gen_hi, "row": 0, "adm": len(admitted)}
-        elif self.strategy == "sampling":
-            stride = -(-len(available) // budget)
-            admitted = available[::stride]
-            dropped = len(available) - len(admitted)
-            end = {"second": gen_hi, "row": 0, "stride": stride}
-        else:  # pushback: surplus stays at the source, offset stalls
-            admitted = available[:budget]
-            queued = len(available) - len(admitted)
-            end = self._advance(lo_s, lo_r, len(admitted), gen_hi)
+        n_admit, dropped, queued, stride = admit(
+            self.strategy, len(available), budget
+        )
+        admitted = available[::stride][:n_admit]
+        if dropped:
+            end = {"second": gen_hi, "row": 0, "stride": stride, "adm": n_admit}
+        else:  # queued (pushback) rows stay behind the offset
+            end = self._advance(lo_s, lo_r, n_admit, gen_hi)
         if available:
             self._account(
                 {
@@ -237,7 +178,7 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
                     "row": lo_r,
                     "offered": n_new,
                     "requested": budget if budget is not None else n_new,
-                    "admitted": len(admitted),
+                    "admitted": n_admit,
                     "dropped": dropped,
                     "queued": queued,
                 }
@@ -245,7 +186,7 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
             self._trigger += 1
         # the runner copies/pickles the prefetched batch and calls next()
         # on it → must be a list_iterator (picklable), not a generator
-        return iter(list(admitted)), end
+        return iter(admitted), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         lo_s, lo_r = start["second"], start.get("row", 0)
@@ -260,11 +201,7 @@ class ProfileStreamReader(SimpleDataSourceStreamReader):
             n_tail = sum(len(d.values) for d in self.plan.values_for(hi_s))
             rows = rows[: len(rows) - (n_tail - hi_r)]
         rows = rows[lo_r:]
-        if "stride" in end:
-            rows = rows[:: end["stride"]]
-        elif "adm" in end:
-            rows = rows[: end["adm"]]
-        return iter(rows)
+        return iter(rows[:: end.get("stride", 1)][: end.get("adm")])
 
 
 class ProfileDataSource(DataSource):
@@ -274,9 +211,6 @@ class ProfileDataSource(DataSource):
 
     def schema(self) -> StructType:
         return SCHEMA
-
-    def reader(self, schema: StructType) -> ProfileBatchReader:
-        return ProfileBatchReader(self.options)
 
     def simpleStreamReader(self, schema: StructType) -> ProfileStreamReader:
         return ProfileStreamReader(self.options)

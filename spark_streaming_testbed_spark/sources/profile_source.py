@@ -45,9 +45,7 @@ def profile_dataframe(
 
     ensure_session_confs(spark)  # UTC session tz: naive pandas timestamps
     # below must land as true UTC instants on any caller-owned session
-    n_seconds = plan.duration if max_seconds is None else max_seconds
-    if n_seconds is None:
-        raise ValueError("unbounded plan: pass max_seconds")
+    n_seconds = plan.n_seconds(max_seconds)
     if partitions is None:
         partitions = max(1, min(spark.sparkContext.defaultParallelism, n_seconds))
 
@@ -80,9 +78,11 @@ _FIXED_RAMP_PLAN_JSON = """
 ]}
 """
 
-#: the same bucket arithmetic in DuckDB SQL — correctness oracle for T7
-PROFILE_FIXED_RAMP_ORACLE = """
-WITH ramp AS (
+#: that plan's generator bucket arithmetic in DuckDB SQL: CTEs ``ramp``,
+#: ``fx`` and their union ``allb``, one row per 10 ms bucket with ``n``
+#: items stamped ``time_ms`` — shared by the oracles of every query that
+#: renders the plan
+FIXED_RAMP_BUCKETS_CTE = """ramp AS (
   SELECT s*1000 + i*10 AS time_ms, 7 AS value,
          CAST(floor((i+1) * rb) AS INT) - CAST(floor(i * rb) AS INT) AS n
   FROM (SELECT s, i, (50 + (150-50)/4.0*s)/100.0 AS rb
@@ -91,7 +91,11 @@ WITH ramp AS (
   SELECT (s+5)*1000 + i*10 AS time_ms, 8 AS value,
          CAST(floor((i+1) * (120/100.0)) AS INT) - CAST(floor(i * (120/100.0)) AS INT) AS n
   FROM (SELECT unnest(range(3)) AS s), (SELECT unnest(range(100)) AS i)
-), allb AS (SELECT * FROM ramp UNION ALL SELECT * FROM fx)
+), allb AS (SELECT * FROM ramp UNION ALL SELECT * FROM fx)"""
+
+#: correctness oracle for T7
+PROFILE_FIXED_RAMP_ORACLE = f"""
+WITH {FIXED_RAMP_BUCKETS_CTE}
 SELECT CAST(time_ms AS BIGINT) AS time_ms, value
 FROM allb, (SELECT unnest(range(8)) AS j) rep WHERE rep.j < allb.n
 ORDER BY time_ms, value
@@ -136,9 +140,7 @@ def write_profile(
 
     from ..streaming.replay import write_chunks
 
-    n_seconds = plan.duration if max_seconds is None else max_seconds
-    if n_seconds is None:
-        raise ValueError("unbounded plan: pass max_seconds")
+    n_seconds = plan.n_seconds(max_seconds)
     batch = profile_dataframe(
         spark, plan, max_seconds=n_seconds, epoch_ms=epoch_ms, stream_id=stream_id
     )

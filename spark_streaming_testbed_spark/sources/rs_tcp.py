@@ -34,9 +34,10 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..plans.phases import TestPlan
+from .socket_source import TcpServer
 
 
-class RsDemandServer:
+class RsDemandServer(TcpServer):
     """Demand-signaled publisher for a rate plan (see module docstring).
 
     Accounting (per connection, ``paced`` mode): one record per
@@ -54,36 +55,18 @@ class RsDemandServer:
         if mode not in ("demand", "paced"):
             raise ValueError(f"unknown RsDemandServer mode: {mode}")
         self.mode = mode
-        self.values = [v for _, v in plan.rows(max_seconds=max_seconds)]
-        self.per_second: list[list[int]] = []
-        n_seconds = plan.duration if max_seconds is None else max_seconds
-        for s in range(n_seconds):
-            vals: list[int] = []
-            for dat in plan.values_for(s):
-                vals.extend(dat.values)
-            self.per_second.append(vals)
+        self.per_second = [
+            [v for dat in plan.values_for(s) for v in dat.values]
+            for s in range(plan.n_seconds(max_seconds))
+        ]
+        self.values = [v for vals in self.per_second for v in vals]
         self.accounting: list[dict] = []
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(4)
-        self.host, self.port = self._srv.getsockname()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._accept, daemon=True)
-        self._thread.start()
+        super().__init__()
 
-    def _accept(self) -> None:
-        self._srv.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except TimeoutError:
-                continue
-            except OSError:
-                break
-            threading.Thread(
-                target=self._serve_conn, args=(conn,), daemon=True
-            ).start()
+    def handle(self, conn: socket.socket) -> None:
+        threading.Thread(
+            target=self._serve_conn, args=(conn,), daemon=True
+        ).start()
 
     def _serve_conn(self, conn: socket.socket) -> None:
         demand_lock = threading.Condition()
@@ -167,11 +150,6 @@ class RsDemandServer:
                     "dropped": offered - delivered,
                 }
             )
-
-    def close(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 RS_SCHEMA = StructType([

@@ -20,14 +20,41 @@ exercised:
   observables), used to validate controller behavior (spike recovery,
   steady-state convergence) without wall-clock flakiness.
 
-- congestion strategies (test-runs-001 README): ``ignore`` (admit all),
-  ``drop`` (admit ≤ limit, surplus dropped), ``sampling`` (admit a
-  ratio), ``pushback`` (surplus stays queued) — the four ``-s`` modes.
+- :func:`admit` — the congestion strategies (test-runs-001 README):
+  ``ignore`` (admit all), ``drop`` (admit ≤ budget, surplus dropped),
+  ``sampling`` (over budget → admit every k-th row), ``pushback``
+  (surplus stays queued) — the four ``-s`` modes. The one admission
+  rule: the simulator and the live ``rate_profile`` source both call it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+
+
+def admit(
+    strategy: str, available: int, budget: int | None
+) -> tuple[int, int, int, int]:
+    """Admit from ``available`` offered rows under a per-trigger
+    ``budget`` (None = unlimited); returns ``(admitted, dropped, queued,
+    stride)``. The admitted rows are ``rows[::stride][:admitted]``:
+    within budget, or under ``ignore``, everything; ``drop`` admits the
+    first ``budget`` and drops the rest; ``sampling`` admits every
+    ``stride = ceil(available / budget)``-th row and drops the rest;
+    ``pushback`` admits the first ``budget`` and leaves the rest queued
+    at the source. A budget is at least 1."""
+    if strategy not in ("ignore", "drop", "sampling", "pushback"):
+        raise ValueError(f"unknown congestion strategy: {strategy}")
+    if budget is None or strategy == "ignore" or available <= budget:
+        return available, 0, 0, 1
+    if strategy == "sampling":
+        stride = -(-available // budget)
+        admitted = -(-available // stride)
+        return admitted, available - admitted, 0, stride
+    surplus = available - budget
+    if strategy == "drop":
+        return budget, surplus, 0, 1
+    return budget, 0, surplus, 1
 
 
 @dataclass
@@ -160,15 +187,11 @@ class AdmissionSimulator:
         per_record_ms: float,
         batch_interval_ms: float = 5000.0,
         strategy: str = "pushback",
-        sampling_ratio: float = 0.5,
         controller: PIDRateController | None = None,
     ) -> None:
-        if strategy not in ("ignore", "drop", "sampling", "pushback"):
-            raise ValueError(f"unknown congestion strategy: {strategy}")
         self.per_record_ms = per_record_ms
         self.batch_interval_ms = batch_interval_ms
         self.strategy = strategy
-        self.sampling_ratio = sampling_ratio
         self.controller = controller
         self.records: list[TriggerRecord] = []
 
@@ -178,28 +201,15 @@ class AdmissionSimulator:
         scheduling_delay = 0.0
         now = 0.0
         for i, offered in enumerate(offered_per_trigger):
+            # the same per-trigger budget rounding as the live source
             limit = (
-                int(rate_limit * self.batch_interval_ms / 1000.0)
+                max(1, int(rate_limit * self.batch_interval_ms / 1000.0))
                 if rate_limit != float("inf")
                 else None
             )
-            available = offered + (backlog if self.strategy == "pushback" else 0)
-            if self.strategy == "ignore":
-                admitted, dropped = available, 0
-            elif self.strategy == "drop":
-                cap = limit if limit is not None else available
-                admitted = min(available, cap)
-                dropped = available - admitted
-            elif self.strategy == "sampling":
-                cap = limit if limit is not None else available
-                admitted = available if available <= cap else int(available * self.sampling_ratio)
-                dropped = available - admitted
-            else:  # pushback
-                cap = limit if limit is not None else available
-                admitted = min(available, cap)
-                dropped = 0
-            backlog = (
-                available - admitted if self.strategy == "pushback" else 0
+            available = offered + backlog
+            admitted, dropped, backlog, _ = admit(
+                self.strategy, available, limit
             )
             processing_ms = admitted * self.per_record_ms
             now += max(processing_ms, self.batch_interval_ms)

@@ -37,6 +37,7 @@ from ..plans.phases import parse_plan
 from ..session import load_table
 from ..sources.profile_source import (
     DEFAULT_EPOCH_MS,
+    FIXED_RAMP_BUCKETS_CTE,
     _FIXED_RAMP_PLAN_JSON,
     profile_stream,
 )
@@ -113,16 +114,7 @@ def streaming_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_PROFILE_STATS_ORACLE = f"""
-WITH ramp AS (
-  SELECT s*1000 + i*10 AS time_ms, 7 AS value,
-         CAST(floor((i+1) * rb) AS INT) - CAST(floor(i * rb) AS INT) AS n
-  FROM (SELECT s, i, (50 + (150-50)/4.0*s)/100.0 AS rb
-        FROM (SELECT unnest(range(5)) AS s), (SELECT unnest(range(100)) AS i))
-), fx AS (
-  SELECT (s+5)*1000 + i*10 AS time_ms, 8 AS value,
-         CAST(floor((i+1) * (120/100.0)) AS INT) - CAST(floor(i * (120/100.0)) AS INT) AS n
-  FROM (SELECT unnest(range(3)) AS s), (SELECT unnest(range(100)) AS i)
-), allb AS (SELECT * FROM ramp UNION ALL SELECT * FROM fx),
+WITH {FIXED_RAMP_BUCKETS_CTE},
 rows_ AS (
   SELECT time_ms, value
   FROM allb, (SELECT unnest(range(8)) AS j) rep WHERE rep.j < allb.n)
@@ -257,17 +249,8 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.table(table).orderBy("time_ms", "value")
 
 
-STREAMING_DEDUP_ORACLE = """
-WITH ramp AS (
-  SELECT s*1000 + i*10 AS time_ms, 7 AS value,
-         CAST(floor((i+1) * rb) AS INT) - CAST(floor(i * rb) AS INT) AS n
-  FROM (SELECT s, i, (50 + (150-50)/4.0*s)/100.0 AS rb
-        FROM (SELECT unnest(range(5)) AS s), (SELECT unnest(range(100)) AS i))
-), fx AS (
-  SELECT (s+5)*1000 + i*10 AS time_ms, 8 AS value,
-         CAST(floor((i+1) * (120/100.0)) AS INT) - CAST(floor(i * (120/100.0)) AS INT) AS n
-  FROM (SELECT unnest(range(3)) AS s), (SELECT unnest(range(100)) AS i)
-), allb AS (SELECT * FROM ramp UNION ALL SELECT * FROM fx)
+STREAMING_DEDUP_ORACLE = f"""
+WITH {FIXED_RAMP_BUCKETS_CTE}
 SELECT DISTINCT CAST(time_ms AS BIGINT) AS time_ms, value
 FROM allb WHERE n > 0
 ORDER BY time_ms, value

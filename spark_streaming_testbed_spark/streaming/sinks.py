@@ -22,6 +22,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from ..sources.socket_source import TcpServer
 from .pipeline import tsv_lines
 
 
@@ -49,7 +50,7 @@ def console_sink(stats: DataFrame, **options):
     )
 
 
-class SocketBroadcastServer:
+class SocketBroadcastServer(TcpServer):
     """Per-connection TCP fan-out endpoint (S5): every client connected
     at broadcast time receives the full payload, mirroring the
     reference's one-writer-per-connection actor
@@ -57,28 +58,13 @@ class SocketBroadcastServer:
     write failure."""
 
     def __init__(self, host: str = "127.0.0.1") -> None:
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, 0))
-        self._srv.listen(16)
-        self.host, self.port = self._srv.getsockname()
         self._conns: list[socket.socket] = []
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._accept, daemon=True)
-        self._thread.start()
+        super().__init__(host)
 
-    def _accept(self) -> None:
-        self._srv.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except TimeoutError:
-                continue
-            except OSError:
-                break
-            with self._lock:
-                self._conns.append(conn)
+    def handle(self, conn: socket.socket) -> None:
+        with self._lock:
+            self._conns.append(conn)
 
     def broadcast(self, data: bytes) -> int:
         """Send ``data`` to every live client; returns clients reached."""
@@ -99,8 +85,7 @@ class SocketBroadcastServer:
         return sent
 
     def close(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
+        super().close()
         with self._lock:
             for conn in self._conns:
                 try:
@@ -108,7 +93,6 @@ class SocketBroadcastServer:
                 except OSError:
                     pass
             self._conns = []
-        self._srv.close()
 
 
 def socket_sink(stats: DataFrame, server: SocketBroadcastServer,

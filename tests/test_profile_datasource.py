@@ -1,15 +1,10 @@
-"""Python DataSource (format 'rate_profile') — batch and streaming."""
+"""Python DataSource (format 'rate_profile') — streaming reader."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from spark_streaming_testbed_spark.plans import parse_plan
 from spark_streaming_testbed_spark.sources.profile_datasource import register
-from spark_streaming_testbed_spark.sources.profile_source import (
-    DEFAULT_EPOCH_MS,
-    profile_dataframe,
-)
+from spark_streaming_testbed_spark.sources.profile_source import profile_dataframe
 
 PLAN = (
     '{"sequence": [{"type": "ramp", "value": 7, "startRate": 30, '
@@ -18,48 +13,37 @@ PLAN = (
 )
 
 
-def test_batch_datasource_matches_mapinpandas_generator(spark):
-    register(spark)
-    via_ds = (
-        spark.read.format("rate_profile").option("plan", PLAN).load()
-    )
-    via_mp = profile_dataframe(spark, parse_plan(PLAN))
-    a = sorted(tuple(r) for r in via_ds.collect())
-    b = sorted(tuple(r) for r in via_mp.collect())
-    assert a == b
-    assert len(a) == len(parse_plan(PLAN).rows())
-
-
 def test_streaming_datasource_admits_by_quantum(spark):
+    """Unthrottled, the stream delivers exactly the batch render's
+    ``(ts, value, stream_id)`` rows, one ``seconds_per_batch`` quantum
+    per non-empty trigger."""
+    import uuid
+
     register(spark)
     stream = (
         spark.readStream.format("rate_profile")
         .option("plan", PLAN)
         .option("seconds_per_batch", 2)
+        .option("stream_id", 4)
         .load()
     )
-    agg = stream.groupBy("value").agg(F.count(F.lit(1)).alias("cnt"))
-    import uuid
-
     name = f"ds_sink_{uuid.uuid4().hex[:8]}"
     # availableNow bounds itself to the one prefetched quantum on a
     # SimpleDataSourceStreamReader; drive to exhaustion instead
     q = (
-        agg.writeStream.outputMode("complete")
+        stream.writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    got = {r.value: r.cnt for r in spark.table(name).collect()}
-    rows = parse_plan(PLAN).rows()
-    expect = {}
-    for _, v in rows:
-        expect[v] = expect.get(v, 0) + 1
-    assert got == expect
-    # 6 plan-seconds at 2 s/batch → ≥3 microbatches admitted the data
-    assert q.lastProgress is not None
+    got = sorted(tuple(r) for r in spark.table(name).collect())
+    batch = profile_dataframe(spark, parse_plan(PLAN), stream_id=4)
+    assert got == sorted(tuple(r) for r in batch.collect())
+    assert len(got) == len(parse_plan(PLAN).rows())
+    # 6 plan-seconds at 2 s/batch → 3 microbatches admitted the data
+    assert sum(1 for p in q.recentProgress if p.numInputRows > 0) == 3
 
 
 # ---------------------------------------------------------------------------

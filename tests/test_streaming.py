@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
+
 from spark_streaming_testbed_spark.plans import parse_plan
 from spark_streaming_testbed_spark.streaming.controller import (
     AdmissionSimulator,
     PIDRateController,
+    admit,
 )
 from spark_streaming_testbed_spark.streaming.pipeline import (
     streaming_profile_stats,
@@ -101,6 +104,30 @@ def test_congestion_strategies_accounting():
     pb = AdmissionSimulator(1.0, strategy="pushback", controller=ctl2).run(offered)
     assert all(r.dropped == 0 for r in pb)
     assert any(r.backlog > 0 for r in pb)
+
+
+def test_admit_rule_matches_congestion_oracles():
+    """The one admission rule, on the numbers of the live congestion
+    queries: 250 rows offered per trigger against a budget of 150.
+    Returns ``(admitted, dropped, queued, stride)``."""
+    assert admit("ignore", 250, 150) == (250, 0, 0, 1)
+    assert admit("drop", 250, 150) == (150, 100, 0, 1)
+    assert admit("sampling", 250, 150) == (125, 125, 0, 2)
+    assert admit("pushback", 250, 150) == (150, 0, 100, 1)
+    for strategy in ("ignore", "drop", "sampling", "pushback"):
+        assert admit(strategy, 250, None) == (250, 0, 0, 1)
+        assert admit(strategy, 150, 150) == (150, 0, 0, 1)
+    with pytest.raises(ValueError, match="unknown congestion strategy"):
+        admit("shed", 250, 150)
+
+
+def test_admit_sampling_keeps_every_kth_row():
+    """Sampling admits every ceil(offered/budget)-th row, not a fixed
+    share: 250 against 100 is stride 3 and 84 rows, where half the
+    offered rows would be 125."""
+    admitted, dropped, queued, stride = admit("sampling", 250, 100)
+    assert (admitted, dropped, queued, stride) == (84, 166, 0, 3)
+    assert len(list(range(250))[::stride][:admitted]) == admitted
 
 
 def test_spike_recovery():

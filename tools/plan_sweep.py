@@ -41,7 +41,9 @@ otherwise go unnoticed.
 
 tests/test_plans.py pins these shapes per-query for the headline set;
 this sweep is the registry-wide completeness check behind the claim
-"no scale-killers anywhere". Output: PLAN_SWEEP_r{N}.json.
+"no scale-killers anywhere". Output: PLAN_SWEEP_r{N}.json; the committed
+PLAN_SWEEP_r15.json (sf0.01) and PLAN_SWEEP_r15_sf01.json (sf0.1) are
+the signature baselines tools/run_round_gates.sh diffs against.
 
 Usage: python tools/plan_sweep.py SF_DIR OUT.json [PREV_ARTIFACT.json]
 """
@@ -51,6 +53,7 @@ from __future__ import annotations
 import contextlib
 import io
 import json
+import os
 import re
 import sys
 import time
@@ -312,6 +315,10 @@ def main() -> None:
         sys.exit(__doc__.rsplit("\n\n", 1)[1].strip())
     sf = validate_sf_dir(sys.argv[1])
     out_path = sys.argv[2]
+    prev_path = sys.argv[3] if len(sys.argv) > 3 else None
+    if prev_path and not os.path.exists(prev_path):
+        # fail before explaining ~300 plans, not after
+        sys.exit(f"previous artifact not found: {prev_path}")
 
     import __spark_entry__ as entry
     from spark_streaming_testbed_spark.session import get_session
@@ -384,7 +391,6 @@ def main() -> None:
         "python_boundary = plans that leave the JVM (all Arrow-batched "
         "unless BatchEvalPython is listed).",
     }
-    prev_path = sys.argv[3] if len(sys.argv) > 3 else None
     if prev_path:
         with open(prev_path) as f:
             prev_sigs = json.load(f).get("signatures", {})

@@ -27,12 +27,14 @@ sweep() {
 sweep oracle_sf0001 oracle sf0.001
 sweep oracle_sf001 oracle sf0.01
 sweep oracle_sf01 oracle sf0.1
+# plan signatures drift-checked against the committed baselines (renamed
+# only when a change moves plans on purpose and regenerates them)
 step plan_sf001
 python tools/plan_sweep.py "$TD/sf0.01" PLAN_SWEEP_r$N.json \
-  PLAN_SWEEP_r$((N-1)).json > "$G/plan_sf001.log" 2>&1; fin plan_sf001 $?
+  PLAN_SWEEP_r15.json > "$G/plan_sf001.log" 2>&1; fin plan_sf001 $?
 step plan_sf01
 python tools/plan_sweep.py "$TD/sf0.1" PLAN_SWEEP_r${N}_sf01.json \
-  PLAN_SWEEP_r$((N-1))_sf01.json > "$G/plan_sf01.log" 2>&1; fin plan_sf01 $?
+  PLAN_SWEEP_r15_sf01.json > "$G/plan_sf01.log" 2>&1; fin plan_sf01 $?
 sweep det_sf0001 determinism sf0.001
 sweep det_sf001 determinism sf0.01
 sweep det_sf01 determinism sf0.1
