@@ -1,9 +1,13 @@
-"""Python DataSource (format 'rate_profile') — streaming reader."""
+"""Python DataSource (format 'rate_profile') — streaming reader and its
+whole-plan replay."""
 
 from __future__ import annotations
 
 from spark_streaming_testbed_spark.plans import parse_plan
-from spark_streaming_testbed_spark.sources.profile_datasource import register
+from spark_streaming_testbed_spark.sources.profile_datasource import (
+    ProfileStreamReader,
+    register,
+)
 from spark_streaming_testbed_spark.sources.profile_source import profile_dataframe
 
 PLAN = (
@@ -11,6 +15,21 @@ PLAN = (
     '"endRate": 90, "duration": 4}, '
     '{"type": "fixed", "value": 9, "rate": 25, "duration": 2}]}'
 )
+
+
+def test_batch_datasource_matches_mapinpandas_generator(spark):
+    """Replaying the source's offsets over the whole plan in one read
+    yields exactly the mapInPandas batch render's rows."""
+    plan = parse_plan(PLAN)
+    reader = ProfileStreamReader({"plan": PLAN})
+    via_ds = sorted(
+        reader.readBetweenOffsets(
+            reader.initialOffset(), {"second": plan.n_seconds(), "row": 0}
+        )
+    )
+    via_mp = sorted(tuple(r) for r in profile_dataframe(spark, plan).collect())
+    assert via_ds == via_mp
+    assert len(via_ds) == len(plan.rows())
 
 
 def test_streaming_datasource_admits_by_quantum(spark):
